@@ -1,15 +1,30 @@
-"""Vector distance expressions — native Catalyst columns, no Python workers.
+"""Vector distance expressions — native Catalyst columns where they pay.
 
 The reference's ``array_distance(a, b)`` is Euclidean √Σ(aᵢ−bᵢ)² matched by
 name in its physical rewrite (reference: src/df_vector/physical.rs:201) and
 computed by a 4-way-unrolled scalar kernel (src/ivf/index.rs:459-480).
-Spark has no builtin, so we build it from higher-order functions
-(``zip_with`` + ``aggregate``) — these stay inside whole-stage codegen on the
-JVM, i.e. the hot path never crosses into Python.
+Spark has no builtin, so we build it from Catalyst expressions. Which kernel
+scores a literal query depends on its width and on how many rows it scores:
+
+- dim ≤ ``UNROLL_LIMIT``: a flat unrolled chain inside whole-stage codegen
+  (JVM only).
+- dim > ``UNROLL_LIMIT`` with a ``rows_hint`` whose rows × dim is at most
+  ``FOLD_ELEMENT_BUDGET``: the ``zip_with``/``aggregate`` fold, interpreted
+  on the JVM. Its generated code does not depend on the query, so repeated
+  queries reuse Spark's codegen cache (no compile per query).
+- dim > ``UNROLL_LIMIT`` otherwise: an Arrow-batched numpy pandas UDF. Every
+  task that runs it pays a Python worker about 0.14 CPU s however few rows
+  it scores (0.29 s for a two-task query over 400 rows at dim 256, against
+  0.01-0.02 s for the fold; 4 vCPUs, ``local[2]``); beyond the budget its
+  vectorized arithmetic wins that back.
+
+Column-vs-column distances use the fold, or the two-column Arrow kernel when
+``dim_hint`` says the vectors are wider than ``UNROLL_LIMIT``.
 
 Precision contract: every element is cast to DOUBLE *before* arithmetic and
-summed left-to-right. That makes results bit-identical to a DuckDB oracle of
-shape ``list_reduce(list_transform(list_zip(a,b), …), (x,y)->x+y)`` so the
+summed left-to-right. That makes results bit-identical across all kernels
+and to a DuckDB oracle of shape
+``list_reduce(list_transform(list_zip(a,b), …), (x,y)->x+y)`` so the
 driver's value-hash gate can compare us exactly (SURVEY.md §2.C).
 
 Reference parity notes:
@@ -22,6 +37,7 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import math
 from typing import Sequence, Union
 
 import numpy as np
@@ -276,16 +292,16 @@ def _sql_ref(v) -> "str | None":
 
 def _dlit(x: float) -> str:
     """Exact SQL double literal: repr() round-trips IEEE doubles; the D
-    suffix keeps Spark's parser on DOUBLE (bare decimals parse DECIMAL)."""
-    return repr(float(x)) + "D"
+    suffix keeps Spark's parser on DOUBLE (bare decimals parse DECIMAL).
+    NaN and ±inf have no literal syntax and render as a string cast."""
+    x = float(x)
+    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
 def _unrolled_expr(kind: str, raw, q) -> "Column | None":
     """One-shot parsed form of the unrolled literal-query chain; None when
     the inputs can't be rendered as SQL (caller falls back to Column ops).
     Term shapes mirror the Column builders below token-for-token."""
-    import math as _math
-
     base = _sql_ref(raw)
     if base is None:
         return None
@@ -293,7 +309,7 @@ def _unrolled_expr(kind: str, raw, q) -> "Column | None":
         vals = [float(x) for x in q]
     except (TypeError, ValueError):
         return None
-    if not all(_math.isfinite(x) for x in vals):
+    if not all(math.isfinite(x) for x in vals):
         return None
     elem = [f"CAST({base}[{i}] AS DOUBLE)" for i in range(len(vals))]
     if kind == "sq_l2":
@@ -316,13 +332,83 @@ def _unrolled_expr(kind: str, raw, q) -> "Column | None":
         return None
 
 
-def squared_l2(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
+# Wide literal queries scoring at most this many vector elements (rows_hint ×
+# dim) use the native fold instead of the Arrow kernel. The fold has no
+# fixed cost but is slower per row; the Arrow kernel pays for Python-worker
+# start-up on every task. Measured with tools/fold_breakeven.py (dim 256,
+# local[2] on 4 vCPUs, 2-file tables of 4k-32k rows, median of 9 queries per
+# point), the linear fits are: fold 0.28 s + 4.9 µs/row wall, 0.42 s +
+# 23.7 µs/row CPU; Arrow kernel 0.33 s + 1.3 µs/row wall, 0.66 s + 12.1 µs/row
+# CPU (CPU of the driver, the JVM and the Python workers). They cross at
+# 3.45M elements (13.5k rows) in wall time and 5.39M (21k rows) in CPU time;
+# a coarser 2k-64k-row sweep put both crossings higher (10.4M, 12.9M). The
+# budget sits under the lower, wall-time crossing, so the fold wins on both
+# clocks wherever it is chosen.
+FOLD_ELEMENT_BUDGET = 3_000_000
+
+
+def _fold_expr(kind: str, raw, q, rows_hint: int | None) -> "Column | None":
+    """The ``zip_with``/``aggregate`` fold against a literal query, parsed
+    from ONE SQL string (one py4j round trip, like ``_unrolled_expr``); None
+    (use the Arrow kernel) when ``rows_hint`` is unknown or over the
+    element budget, or when the vector column can't be rendered as SQL.
+
+    Higher-order functions run interpreted (Spark's codegen calls back into
+    the expression object), so the query literals never reach generated
+    code: every query compiles to the same classes and hits the codegen
+    cache. Per-element arithmetic and order match ``_arrow_fold_kernel``
+    term for term, so the doubles are bit-identical (a NaN may differ in
+    its sign bit, which Spark ignores); a NULL vector or one of another
+    length gives NULL there as here."""
+    base = _sql_ref(raw)
+    if rows_hint is None or rows_hint * len(q) > FOLD_ELEMENT_BUDGET or base is None:
+        return None
+    vals = [float(x) for x in q]
+    qarr = "array(" + ", ".join(_dlit(x) for x in vals) + ")"
+    pairs = f"zip_with(CAST({base} AS ARRAY<DOUBLE>), {qarr}, "
+    if kind == "sq_l2":
+        return F.expr(
+            f"aggregate({pairs}(x, y) -> (x - y) * (x - y)), 0D, (acc, t) -> acc + t)"
+        )
+    if kind == "dot":
+        return F.expr(f"aggregate({pairs}(x, y) -> x * y), 0D, (acc, t) -> acc + t)")
+    # cosine: Σaᵢqᵢ and Σaᵢ² in one pass, divided by ‖a‖·‖q‖ in the finish
+    # lambda (so ‖q‖ stays out of generated code too). A zero norm gives
+    # NaN, as in the kernel (and never an ANSI DIVIDE_BY_ZERO). The size
+    # guard keeps every dim-mismatched row NULL: an all-zero vector longer
+    # than q would otherwise reach the NaN branch.
+    nq = 0.0
+    for x in vals:  # the kernel's sequential fold of the literal
+        nq += x * x
+    den = f"(sqrt(acc.n) * {_dlit(np.sqrt(nq))})"
+    return F.expr(
+        f"CASE WHEN size({base}) = {len(vals)} THEN aggregate("
+        f"{pairs}(x, y) -> named_struct('d', x * y, 'n', x * x)), "
+        "named_struct('d', 0D, 'n', 0D), "
+        "(acc, t) -> named_struct('d', acc.d + t.d, 'n', acc.n + t.n), "
+        f"acc -> CASE WHEN {den} = 0 THEN CAST('NaN' AS DOUBLE) ELSE acc.d / {den} END) END"
+    )
+
+
+def squared_l2(
+    a: VectorLike,
+    b: VectorLike,
+    *,
+    dim_hint: int | None = None,
+    rows_hint: int | None = None,
+) -> Column:
     """Σ(aᵢ−bᵢ)² as a native column expression.
 
     ``dim_hint``: for COLUMN-vs-COLUMN inputs the width isn't knowable at
     plan time; callers that do know it (e.g. the IVF join reads it from the
     index meta) pass it so wide vectors route to the Arrow kernel instead
     of the interpreted fold. Results are bit-identical either way.
+
+    ``rows_hint``: how many rows a wide LITERAL query scores
+    (e.g. an IVF probe's candidate count). Within ``FOLD_ELEMENT_BUDGET``
+    the native fold runs instead of the Arrow kernel, if ``a`` renders as
+    SQL (a column name always does); None (unknown) keeps the Arrow
+    kernel. Results are bit-identical either way.
 
     ≙ reference ``squared_l2_distance`` (src/ivf/index.rs:459-480). The
     fold is sequential left-to-right with a 0.0 initial accumulator, which
@@ -351,6 +437,9 @@ def squared_l2(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> 
         ]
         return F.when(F.size(raw) == len(q), _unrolled_sum(terms)).otherwise(F.lit(None))
     if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
+        fold = _fold_expr("sq_l2", a, b, rows_hint)
+        if fold is not None:
+            return fold
         raw = F.col(a) if isinstance(a, str) else a
         return _arrow_fold_kernel(b, "sq_l2")(raw)
     if (
@@ -367,19 +456,31 @@ def squared_l2(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> 
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def array_distance(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
+def array_distance(
+    a: VectorLike,
+    b: VectorLike,
+    *,
+    dim_hint: int | None = None,
+    rows_hint: int | None = None,
+) -> Column:
     """Euclidean distance √Σ(aᵢ−bᵢ)².
 
     Same name + semantics as the DataFusion builtin the reference matches on
     (src/df_vector/physical.rs:198-229); the reference reports √d² on its
     direct path too (src/ivf/search.rs:133).
     """
-    return F.sqrt(squared_l2(a, b, dim_hint=dim_hint))
+    return F.sqrt(squared_l2(a, b, dim_hint=dim_hint, rows_hint=rows_hint))
 
 
-def dot_product(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
+def dot_product(
+    a: VectorLike,
+    b: VectorLike,
+    *,
+    dim_hint: int | None = None,
+    rows_hint: int | None = None,
+) -> Column:
     """Σ aᵢ·bᵢ as a native expression (basis for cosine). Same literal-query
-    unrolled fast path (and bit-parity guarantee) as ``squared_l2``."""
+    kernel choice (and bit-parity guarantee) as ``squared_l2``."""
     if _is_literal_vec(b) and not _is_literal_vec(a) and 0 < len(b) <= UNROLL_LIMIT:
         fast = _unrolled_expr("dot", a, b)
         if fast is not None:
@@ -389,6 +490,9 @@ def dot_product(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) ->
         terms = [raw.getItem(i).cast("double") * F.lit(qi) for i, qi in enumerate(q)]
         return F.when(F.size(raw) == len(q), _unrolled_sum(terms)).otherwise(F.lit(None))
     if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
+        fold = _fold_expr("dot", a, b, rows_hint)
+        if fold is not None:
+            return fold
         raw = F.col(a) if isinstance(a, str) else a
         return _arrow_fold_kernel(b, "dot")(raw)
     if (
@@ -414,13 +518,11 @@ def l2_norm(a: VectorLike, dim: int | None = None) -> Column:
             # F.lit calls for Catalyst to constant-fold to the same double —
             # identical left-to-right IEEE-double fold + correctly-rounded
             # sqrt (math.sqrt ≡ Math.sqrt), so the Literal is bit-equal.
-            import math as _math
-
             acc = 0.0
             for x in a:
                 xf = float(x)
                 acc = acc + xf * xf
-            return F.lit(float("nan") if _math.isnan(acc) else _math.sqrt(acc))
+            return F.lit(float("nan") if math.isnan(acc) else math.sqrt(acc))
         except (TypeError, ValueError):
             pass
         ca = _as_vector_col(a)
@@ -442,14 +544,24 @@ def l2_norm(a: VectorLike, dim: int | None = None) -> Column:
     return F.sqrt(sq)
 
 
-def cosine_similarity(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
+def cosine_similarity(
+    a: VectorLike,
+    b: VectorLike,
+    *,
+    dim_hint: int | None = None,
+    rows_hint: int | None = None,
+) -> Column:
     """cos(a,b) = a·b / (‖a‖‖b‖). Beyond the reference surface (it is
     L2-only, SURVEY.md §2 'explicitly absent'), needed by the near-dup and
     ANN extension operators. A literal query fixes the dimension, letting
     the column-side norm unroll into codegen too. Wide literal queries
-    (dim > UNROLL_LIMIT) run the fused Arrow kernel — one Python eval, not
-    three."""
+    (dim > UNROLL_LIMIT) run one fused pass — the native fold within the
+    ``rows_hint`` budget (see ``squared_l2``), the Arrow kernel otherwise —
+    not three."""
     if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
+        fold = _fold_expr("cosine", a, b, rows_hint)
+        if fold is not None:
+            return fold
         raw = F.col(a) if isinstance(a, str) else a
         return _arrow_fold_kernel(b, "cosine")(raw)
     if (

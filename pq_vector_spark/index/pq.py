@@ -340,7 +340,7 @@ def pq_topk(
     c = max(k * rerank, k)
     cand = cand.orderBy(*order).limit(c)
     exact = cand.withColumn(
-        DISTANCE_COL, array_distance(column, list(query), dim_hint=codebook.dim)
+        DISTANCE_COL, array_distance(column, list(query), rows_hint=c)
     )
     order2 = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break:
@@ -389,7 +389,7 @@ def pq_topk_with_fetch(
     fetched = raw_df.join(F.broadcast(cand), id_col)
     out = (
         fetched.withColumn(
-            DISTANCE_COL, array_distance(column, list(query), dim_hint=codebook.dim)
+            DISTANCE_COL, array_distance(column, list(query), rows_hint=c)
         )
         .orderBy(F.col(DISTANCE_COL).asc_nulls_last(), F.col(id_col).asc())
         .limit(k)
@@ -530,9 +530,7 @@ def ivfpq_topk(
     raw = spark.read.parquet(indexed_path).filter(pred)
     out = (
         raw.join(F.broadcast(cand), id_col)
-        .withColumn(
-            DISTANCE_COL, array_distance(column, list(query), dim_hint=codebook.dim)
-        )
+        .withColumn(DISTANCE_COL, array_distance(column, list(query), rows_hint=c))
         .orderBy(F.col(DISTANCE_COL).asc_nulls_last(), F.col(id_col).asc())
         .limit(k)
         .drop(CLUSTER_COL)

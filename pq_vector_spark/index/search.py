@@ -320,10 +320,7 @@ def indexed_topk(
     # re-planning of DataFrames derived from this one (a save/restore of
     # the threshold only protected the plan forced inside the window).
     probed_ids = sorted(int(c) for c in probed)
-    try:
-        in_thr = int(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
-    except Exception:
-        in_thr = 10
+    in_thr = int(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
     if len(probed_ids) <= in_thr:
         cluster_pred = F.col(CLUSTER_COL).isin(probed_ids)
     else:
@@ -331,8 +328,8 @@ def indexed_topk(
             or_, [F.col(CLUSTER_COL) == v for v in probed_ids]
         )
     cands = df.filter(cluster_pred)
+    counts = _candidate_counts_from_meta(idx.meta, probed)
     if opts.max_candidates is not None:
-        counts = _candidate_counts_from_meta(idx.meta, probed)
         if counts is None:
             # pre-counts sidecar: ONE small aggregation job (cluster column
             # only, map-side combine) recovers exact per-file counts — the
@@ -344,6 +341,13 @@ def indexed_topk(
             cands = _cap_candidates(
                 cands, _round_robin_quotas(counts, opts.max_candidates)
             )
+    # the exact number of rows the re-rank scores picks its distance kernel
+    # (functions/distance.py); a sidecar without per-file counts gives None
+    n_cands = None
+    if counts is not None:
+        n_cands = sum(counts.values())
+        if opts.max_candidates is not None:
+            n_cands = min(n_cands, opts.max_candidates)
     if observation is not None:
         # ≙ the reference's plan counters candidate_rows / files_scanned
         # (src/df_vector/index_exec.rs:283-300, exec.rs:405-427), surfaced
@@ -371,12 +375,16 @@ def indexed_topk(
 
         out = cands.withColumn(
             # string name, not F.col(...): lets the one-shot SQL render fire (r16)
-            DISTANCE_COL, cosine_similarity(idx.meta["column"], [float(x) for x in q])
+            DISTANCE_COL,
+            cosine_similarity(
+                idx.meta["column"], [float(x) for x in q], rows_hint=n_cands
+            ),
         )
         order = [F.col(DISTANCE_COL).desc()]
     else:
         out = cands.withColumn(
-            DISTANCE_COL, array_distance(idx.meta["column"], list(q))
+            DISTANCE_COL,
+            array_distance(idx.meta["column"], list(q), rows_hint=n_cands),
         )
         order = [F.col(DISTANCE_COL).asc()]
     if tie_break is not None:

@@ -70,6 +70,15 @@ def get_spark(
         # min/max range pushdown — useless for arbitrary probed cluster ids;
         # keep true IN pushdown for realistic nprobe values
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "512")
+        # Every IN-list becomes an InSet whose generated code reads its
+        # values from a hash set held by reference, instead of a switch
+        # (or chain of compares) over the inlined literals. An IVF probe's
+        # `_pq_cluster_id IN (...)` then compiles to the same classes
+        # whatever clusters it probes, so after the first query the codegen
+        # cache and the warm JIT serve every probe (before: two fresh class
+        # compilations per query). Parquet still receives the full IN.
+        .config("spark.sql.optimizer.inSetConversionThreshold", "0")
+        .config("spark.sql.optimizer.inSetSwitchThreshold", "0")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         # r16 (guide §4's boundary lesson applied to the DRIVER): PySpark 4

@@ -255,3 +255,98 @@ def test_nan_scores_survive_multi_kernel(spark):
         }
         assert all(s is not None and math.isnan(s) for s in got[0]), f"dim={dim}: {got[0]!r}"
         assert all(s is not None and not math.isnan(s) for s in got[1])
+
+
+# ---------------- native fold for small wide-vector row sets ----------------
+
+
+def _executed_plan(df):
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _same_double(x, y):
+    """Bit-for-bit equality, with NULL == NULL and NaN == NaN (numpy's 0/0
+    and the JVM's NaN differ in the sign bit; Spark treats all NaNs alike)."""
+    import struct
+
+    if x is None or y is None:
+        return x is None and y is None
+    if math.isnan(x) or math.isnan(y):
+        return math.isnan(x) and math.isnan(y)
+    return struct.pack("<d", x) == struct.pack("<d", y)
+
+
+def _wide_rows(dim, n=40, seed=11):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = [(i, [float(x) for x in rng.normal(size=dim).astype(np.float32)]) for i in range(n)]
+    rows += [
+        (n, None),             # NULL vector -> NULL
+        (n + 1, [1.0, 2.0]),   # dim mismatch -> NULL
+        (n + 2, [0.0] * dim),  # zero norm -> NaN cosine
+    ]
+    q = [float(x) for x in rng.normal(size=dim).astype(np.float32)]
+    return rows, q
+
+
+def test_rows_hint_fold_bit_exact_without_python(spark):
+    """A wide literal query with a rows_hint inside the element budget runs
+    the native fold: no Python evaluation node in the plan, and every
+    distance bit-identical to the Arrow kernel, NULL / dim-mismatch /
+    zero-norm rows included."""
+    from pq_vector_spark.functions.distance import UNROLL_LIMIT
+
+    dim = 2 * UNROLL_LIMIT
+    rows, q = _wide_rows(dim)
+    df = spark.createDataFrame(rows, "id INT, v ARRAY<FLOAT>")
+    for fn in (array_distance, squared_l2, dot_product, cosine_similarity):
+        fold = df.select("id", fn("v", q, rows_hint=len(rows)).alias("d"))
+        plan = _executed_plan(fold)
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, fn
+        arrow = dict(df.select("id", fn("v", q).alias("d")).collect())
+        got = dict(fold.collect())
+        bad = [i for i in got if not _same_double(got[i], arrow[i])]
+        assert not bad, f"{fn.__name__}: ids {bad} differ from the Arrow kernel"
+        assert got[len(rows) - 3] is None and got[len(rows) - 2] is None
+    zero = df.filter("id = 42").select(cosine_similarity("v", q, rows_hint=1)).first()[0]
+    assert math.isnan(zero)
+
+
+def test_rows_hint_over_budget_keeps_arrow_kernel(spark):
+    """Beyond FOLD_ELEMENT_BUDGET (or without a hint) the Arrow kernel runs."""
+    from pq_vector_spark.functions.distance import FOLD_ELEMENT_BUDGET, UNROLL_LIMIT
+
+    dim = 2 * UNROLL_LIMIT
+    rows, q = _wide_rows(dim, n=4)
+    df = spark.createDataFrame(rows, "id INT, v ARRAY<FLOAT>")
+    over = FOLD_ELEMENT_BUDGET // dim + 1
+    for hint in (over, None):
+        for fn in (array_distance, cosine_similarity):
+            plan = _executed_plan(df.select(fn("v", q, rows_hint=hint).alias("d")))
+            assert "ArrowEvalPython" in plan, (fn, hint)
+    at_budget = FOLD_ELEMENT_BUDGET // dim
+    plan = _executed_plan(df.select(array_distance("v", q, rows_hint=at_budget).alias("d")))
+    assert "ArrowEvalPython" not in plan
+
+
+def test_fold_query_literals_stay_out_of_generated_code(spark):
+    """Two different wide queries through the fold compile no new classes
+    after the first: the query lives in the interpreted fold, not in
+    generated code."""
+    import numpy as np
+
+    from pq_vector_spark.functions.distance import UNROLL_LIMIT
+
+    dim = 2 * UNROLL_LIMIT
+    rows, _ = _wide_rows(dim, n=8)
+    df = spark.createDataFrame(rows, "id INT, v ARRAY<FLOAT>")
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    rng = np.random.default_rng(5)
+    counts = []
+    for _ in range(3):
+        q = [float(x) for x in rng.normal(size=dim)]
+        df.select("id", array_distance("v", q, rows_hint=8).alias("d")).orderBy("d").collect()
+        counts.append(metrics.METRIC_COMPILATION_TIME().getCount())
+    assert counts[0] == counts[-1]

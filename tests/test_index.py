@@ -865,3 +865,94 @@ def test_load_index_sidecar_cache_hits_and_invalidates(spark, tmp_path):
     assert i3.meta["row_count"] == 130
     # use_cache=False always reads storage
     assert S.load_index(spark, out, use_cache=False).meta["row_count"] == 130
+
+
+# ---------------- re-rank kernel choice on a wide (dim-256) index ----------
+
+
+@pytest.fixture(scope="module")
+def wide_index(spark, tmp_path_factory):
+    base = tmp_path_factory.mktemp("wide_idx")
+    src, out = str(base / "src.parquet"), str(base / "indexed")
+    rng = np.random.default_rng(99)
+    vecs = rng.normal(size=(600, 256)).astype(np.float32)
+    vecs[7] = 0.0  # zero norm: its cosine is NaN
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>").repartition(2).write.parquet(src)
+    build_index(spark, src, out, column="vec", options=IndexBuildOptions(n_clusters=24))
+    return {"out": out, "vecs": vecs}
+
+
+def _executed_plan(df):
+    rows = df.collect()
+    return rows, df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_wide_rerank_native_fold_bit_exact(spark, wide_index):
+    """Under the element budget the indexed re-rank has no Python
+    evaluation node, and its distances equal the Arrow kernel's bit for
+    bit (all 600 rows probed, the zero-norm row included)."""
+    import struct
+
+    from pq_vector_spark.functions.distance import array_distance, cosine_similarity
+
+    def same(x, y):  # bit for bit; any NaN equals any NaN, as in Spark
+        return struct.pack("<d", x) == struct.pack("<d", y) or (np.isnan(x) and np.isnan(y))
+
+    q = [float(x) for x in np.random.default_rng(5).normal(size=256).astype(np.float32)]
+    table = spark.read.parquet(wide_index["out"])
+    for metric, fn in (("l2", array_distance), ("cosine", cosine_similarity)):
+        df = indexed_topk(
+            spark, wide_index["out"], q, 600, options=VectorTopKOptions(nprobe=24),
+            keep_distance=True, metric=metric,
+        )
+        rows, plan = _executed_plan(df)
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, metric
+        assert len(rows) == 600
+        arrow = dict(table.select("id", fn("vec", q).alias("d")).collect())
+        got = {r["id"]: r["_pq_distance"] for r in rows}
+        bad = [i for i, d in got.items() if not same(d, arrow[i])]
+        assert not bad, f"{metric}: ids {bad[:5]} differ from the Arrow kernel"
+        assert (metric == "cosine") == np.isnan(got[7])
+
+
+def test_wide_rerank_over_budget_uses_arrow_kernel(spark, wide_index, monkeypatch):
+    """Above the budget, and for a sidecar without per-file counts, the
+    re-rank stays on the Arrow kernel."""
+    import pq_vector_spark.functions.distance as distance
+    import pq_vector_spark.index.search as search
+
+    q = [0.1] * 256
+    opts = VectorTopKOptions(nprobe=5)
+    with monkeypatch.context() as m:
+        m.setattr(distance, "FOLD_ELEMENT_BUDGET", 0)
+        _, plan = _executed_plan(indexed_topk(spark, wide_index["out"], q, 10, options=opts))
+        assert "ArrowEvalPython" in plan
+    with monkeypatch.context() as m:
+        m.setattr(search, "_candidate_counts_from_meta", lambda meta, probed: None)
+        _, plan = _executed_plan(indexed_topk(spark, wide_index["out"], q, 10, options=opts))
+        assert "ArrowEvalPython" in plan
+
+
+@pytest.mark.parametrize("nprobe", [5, 16])
+def test_indexed_queries_reuse_generated_code(spark, wide_index, nprobe):
+    """After one indexed query, a query probing a different cluster set
+    compiles no new classes: the cluster IN-list becomes a hash-set
+    reference (get_spark's InSet confs) and the query vector stays in the
+    interpreted fold, so the codegen cache serves it."""
+    from pq_vector_spark.index.kmeans import nearest_centroids
+
+    cents = load_index(spark, wide_index["out"]).centroids
+
+    def probe(v):
+        return set(nearest_centroids(v, cents, nprobe).tolist())
+
+    vecs = wide_index["vecs"]
+    qa = vecs[1].tolist()
+    qb = next(v for v in vecs[2:] if probe(v) != probe(vecs[1])).tolist()
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    opts = VectorTopKOptions(nprobe=nprobe)
+    indexed_topk(spark, wide_index["out"], qa, 10, options=opts).collect()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    indexed_topk(spark, wide_index["out"], qb, 10, options=opts).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == before

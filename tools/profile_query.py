@@ -5,7 +5,11 @@ does the same), then once timed under a job group, and attribute every
 Spark job to the query via the UI REST API: per-job wall time, stage
 count, task count, shuffle read/write bytes. Also splits construction
 time (driver-side planning jobs run inside the query fn) from the final
-collect.
+collect, and reports two per-query costs that otherwise need a profiler:
+``codegen_compiles`` (classes Spark compiled during the timed rep — a
+warm query that still compiles has query-specific generated code) and
+``python_eval_nodes`` (ArrowEvalPython/BatchEvalPython nodes in the
+executed plan — each starts Python-worker tasks).
 
 Usage: python tools/profile_query.py <query> [query ...]
 """
@@ -18,7 +22,7 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 import bench
@@ -30,6 +34,14 @@ SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
 def api(base, path):
     with urllib.request.urlopen(base + path) as r:
         return json.load(r)
+
+
+def python_eval_nodes(df) -> int:
+    """ArrowEvalPython/BatchEvalPython nodes in the executed plan (the
+    final adaptive plan only, not the initial one AQE prints below it)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return final.count("ArrowEvalPython") + final.count("BatchEvalPython")
 
 
 def main():
@@ -47,11 +59,13 @@ def main():
         qs[name](spark, SF_DIR).collect()
 
     reps = int(os.environ.get("PROF_REPS", "2"))
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     results = {}
     for name in names:
         best = None
         for _ in range(reps):
             sc.setJobGroup(f"prof_{name}", name)
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             t1 = time.perf_counter()
@@ -62,6 +76,8 @@ def main():
                 "construct_sec": round(t1 - t0, 3),
                 "collect_sec": round(t2 - t1, 3),
                 "total_sec": round(t2 - t0, 3),
+                "codegen_compiles": codegen.METRIC_COMPILATION_TIME().getCount() - c0,
+                "python_eval_nodes": python_eval_nodes(df),
             }
             if best is None or cur["total_sec"] < best["total_sec"]:
                 best = cur
