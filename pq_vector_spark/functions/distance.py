@@ -25,14 +25,20 @@ Precision contract: every element is cast to DOUBLE *before* arithmetic and
 summed left-to-right. That makes results bit-identical across all kernels
 and to a DuckDB oracle of shape
 ``list_reduce(list_transform(list_zip(a,b), …), (x,y)->x+y)`` so the
-driver's value-hash gate can compare us exactly (SURVEY.md §2.C).
+driver's value-hash gate can compare us exactly (SURVEY.md §2.C). One
+exception: a vector holding a NULL element scores NULL on the unrolled
+chain (and in the oracle) but NaN on the wide kernels, because the Arrow
+kernel receives that element from pandas as NaN and the fold matches the
+kernel.
 
 Reference parity notes:
 - f64 query literals are narrowed to the f32 grid by the reference
   (src/df_vector/expr.rs:48-50); we keep stored vectors float32 and cast up
   to double at compute time, which is lossless for float32 inputs.
-- null / dim-mismatched rows at query time yield NULL distance → dropped by
-  orderBy-limit, matching the silent skip in src/df_vector/exec.rs:495-528.
+- null / dim-mismatched rows at query time yield NULL distance, which the
+  top-k operators sort after every scored row (``asc_nulls_last``), so a
+  top-k returns them only when fewer than k rows score; the reference
+  skips them silently (src/df_vector/exec.rs:495-528).
 """
 
 from __future__ import annotations
@@ -335,59 +341,73 @@ def _unrolled_expr(kind: str, raw, q) -> "Column | None":
 # Wide literal queries scoring at most this many vector elements (rows_hint ×
 # dim) use the native fold instead of the Arrow kernel. The fold has no
 # fixed cost but is slower per row; the Arrow kernel pays for Python-worker
-# start-up on every task. Measured with tools/fold_breakeven.py (dim 256,
-# local[2] on 4 vCPUs, 2-file tables of 4k-32k rows, median of 9 queries per
-# point), the linear fits are: fold 0.28 s + 4.9 µs/row wall, 0.42 s +
-# 23.7 µs/row CPU; Arrow kernel 0.33 s + 1.3 µs/row wall, 0.66 s + 12.1 µs/row
-# CPU (CPU of the driver, the JVM and the Python workers). They cross at
-# 3.45M elements (13.5k rows) in wall time and 5.39M (21k rows) in CPU time;
-# a coarser 2k-64k-row sweep put both crossings higher (10.4M, 12.9M). The
-# budget sits under the lower, wall-time crossing, so the fold wins on both
-# clocks wherever it is chosen.
+# start-up on every task. Measured with tools/fold_breakeven.py at local[2]
+# on 4 vCPUs (the parallelism perfbench's ann_query uses there), 2-file
+# tables, median of 9 queries per point; wall / CPU seconds of the driver,
+# JVM and Python workers, with the crossing of the two linear fits:
+#   dim 256, 4k-32k rows:  fold 0.32 s + 8.1 µs/row wall, 0.58 s + 28.2 µs/row
+#     CPU; Arrow 0.45 s + 2.9 µs/row, 0.84 s + 20.1 µs/row; cross at 6.0M
+#     elements wall, 8.0M CPU.
+#   dim 256, 2k-64k rows:  cross at 14.1M wall, 26.3M CPU.
+#   dim 1024, 1k-16k rows: fold 0.37 s + 27.3 µs/row, 0.69 s + 85.6 µs/row;
+#     Arrow 0.39 s + 26.4 µs/row, 0.78 s + 77.9 µs/row; cross at 21.5M
+#     wall, 12.5M CPU.
+# The fits are loose (points a few hundredths of a second off the line), and
+# point by point the two kernels are within noise of each other from about
+# 4M elements at both dims; at 2M and below the fold led in every sweep but
+# one wall-time point (dim 1024, 2M: 0.467 vs 0.455 s). The budget sits
+# under all of that, where the fold led or was level in these sweeps.
+# Other dims and parallelism are unmeasured. perfbench exercises only the
+# fold side: ann_query's indexed ops score about 2.7k rows × 256 (0.7M
+# elements), and its brute-force ops pass no hint.
 FOLD_ELEMENT_BUDGET = 3_000_000
 
 
 def _fold_expr(kind: str, raw, q, rows_hint: int | None) -> "Column | None":
-    """The ``zip_with``/``aggregate`` fold against a literal query, parsed
-    from ONE SQL string (one py4j round trip, like ``_unrolled_expr``); None
-    (use the Arrow kernel) when ``rows_hint`` is unknown or over the
-    element budget, or when the vector column can't be rendered as SQL.
+    """The ``zip_with``/``aggregate`` fold of ``kind`` ("sq_l2" or "cosine")
+    against a literal query, parsed from ONE SQL string (one py4j round
+    trip, like ``_unrolled_expr``); None (use the Arrow kernel) when
+    ``rows_hint`` is unknown or over the element budget, or when the vector
+    column can't be rendered as SQL.
 
     Higher-order functions run interpreted (Spark's codegen calls back into
     the expression object), so the query literals never reach generated
     code: every query compiles to the same classes and hits the codegen
-    cache. Per-element arithmetic and order match ``_arrow_fold_kernel``
-    term for term, so the doubles are bit-identical (a NaN may differ in
-    its sign bit, which Spark ignores); a NULL vector or one of another
-    length gives NULL there as here."""
+    cache. Inputs, per-element arithmetic and order match
+    ``_arrow_fold_kernel`` term for term, so the doubles are bit-identical
+    (a NaN may differ in its sign bit, which Spark ignores): a NULL vector
+    or one of another length gives NULL, and a NULL element reads as NaN,
+    there as here."""
     base = _sql_ref(raw)
     if rows_hint is None or rows_hint * len(q) > FOLD_ELEMENT_BUDGET or base is None:
         return None
     vals = [float(x) for x in q]
     qarr = "array(" + ", ".join(_dlit(x) for x in vals) + ")"
-    pairs = f"zip_with(CAST({base} AS ARRAY<DOUBLE>), {qarr}, "
+    pairs = f"zip_with(CAST({base} AS ARRAY<DOUBLE>), {qarr}, (x, y) -> "
+    # The kernel gets a NULL element from pandas as NaN; the coalesce feeds
+    # the fold the same value. zip_with pads a shorter vector with NULLs,
+    # which the coalesce would turn into NaN too, so the size guard keeps
+    # every dim-mismatched row NULL as in the kernel.
+    x = "coalesce(x, CAST('NaN' AS DOUBLE))"
     if kind == "sq_l2":
-        return F.expr(
-            f"aggregate({pairs}(x, y) -> (x - y) * (x - y)), 0D, (acc, t) -> acc + t)"
+        # t = aᵢ − qᵢ, acc + t·t: the kernel's d = mat[:, j] − q[j]; acc += d·d
+        fold = f"aggregate({pairs}{x} - y), 0D, (acc, t) -> acc + t * t)"
+    else:
+        # cosine: Σaᵢqᵢ and Σaᵢ² in one pass, divided by ‖a‖·‖q‖ in the
+        # finish lambda (so ‖q‖ stays out of generated code too). A zero
+        # norm gives NaN, as in the kernel (and never an ANSI
+        # DIVIDE_BY_ZERO).
+        nq = 0.0
+        for v in vals:  # the kernel's sequential fold of the literal
+            nq += v * v
+        den = f"(sqrt(acc.n) * {_dlit(np.sqrt(nq))})"
+        fold = (
+            f"aggregate({pairs}named_struct('d', {x} * y, 'n', {x} * {x})), "
+            "named_struct('d', 0D, 'n', 0D), "
+            "(acc, t) -> named_struct('d', acc.d + t.d, 'n', acc.n + t.n), "
+            f"acc -> CASE WHEN {den} = 0 THEN CAST('NaN' AS DOUBLE) ELSE acc.d / {den} END)"
         )
-    if kind == "dot":
-        return F.expr(f"aggregate({pairs}(x, y) -> x * y), 0D, (acc, t) -> acc + t)")
-    # cosine: Σaᵢqᵢ and Σaᵢ² in one pass, divided by ‖a‖·‖q‖ in the finish
-    # lambda (so ‖q‖ stays out of generated code too). A zero norm gives
-    # NaN, as in the kernel (and never an ANSI DIVIDE_BY_ZERO). The size
-    # guard keeps every dim-mismatched row NULL: an all-zero vector longer
-    # than q would otherwise reach the NaN branch.
-    nq = 0.0
-    for x in vals:  # the kernel's sequential fold of the literal
-        nq += x * x
-    den = f"(sqrt(acc.n) * {_dlit(np.sqrt(nq))})"
-    return F.expr(
-        f"CASE WHEN size({base}) = {len(vals)} THEN aggregate("
-        f"{pairs}(x, y) -> named_struct('d', x * y, 'n', x * x)), "
-        "named_struct('d', 0D, 'n', 0D), "
-        "(acc, t) -> named_struct('d', acc.d + t.d, 'n', acc.n + t.n), "
-        f"acc -> CASE WHEN {den} = 0 THEN CAST('NaN' AS DOUBLE) ELSE acc.d / {den} END) END"
-    )
+    return F.expr(f"CASE WHEN size({base}) = {len(vals)} THEN {fold} END")
 
 
 def squared_l2(
@@ -472,15 +492,9 @@ def array_distance(
     return F.sqrt(squared_l2(a, b, dim_hint=dim_hint, rows_hint=rows_hint))
 
 
-def dot_product(
-    a: VectorLike,
-    b: VectorLike,
-    *,
-    dim_hint: int | None = None,
-    rows_hint: int | None = None,
-) -> Column:
+def dot_product(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
     """Σ aᵢ·bᵢ as a native expression (basis for cosine). Same literal-query
-    kernel choice (and bit-parity guarantee) as ``squared_l2``."""
+    unrolled fast path (and bit-parity guarantee) as ``squared_l2``."""
     if _is_literal_vec(b) and not _is_literal_vec(a) and 0 < len(b) <= UNROLL_LIMIT:
         fast = _unrolled_expr("dot", a, b)
         if fast is not None:
@@ -490,9 +504,6 @@ def dot_product(
         terms = [raw.getItem(i).cast("double") * F.lit(qi) for i, qi in enumerate(q)]
         return F.when(F.size(raw) == len(q), _unrolled_sum(terms)).otherwise(F.lit(None))
     if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
-        fold = _fold_expr("dot", a, b, rows_hint)
-        if fold is not None:
-            return fold
         raw = F.col(a) if isinstance(a, str) else a
         return _arrow_fold_kernel(b, "dot")(raw)
     if (

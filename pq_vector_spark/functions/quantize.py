@@ -268,7 +268,7 @@ def binary_topk(
         # string name, not F.col(...): lets the one-shot SQL render fire (r16)
         DISTANCE_COL, array_distance(col, [float(x) for x in query])
     )
-    order2 = [F.col(DISTANCE_COL).asc()]
+    order2 = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break is not None:
         order2.append(F.col(tie_break).asc())
     out = out.orderBy(*order2).limit(k).drop("_bq_ham")
@@ -320,7 +320,7 @@ def binary_topk_with_fetch(
         .select(id_col)
     )
     fetched = raw_df.join(F.broadcast(cand), id_col)
-    order2 = [F.col(DISTANCE_COL).asc()]
+    order2 = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break is not None:
         order2.append(F.col(tie_break).asc())
     out = (

@@ -386,7 +386,7 @@ def indexed_topk(
             DISTANCE_COL,
             array_distance(idx.meta["column"], list(q), rows_hint=n_cands),
         )
-        order = [F.col(DISTANCE_COL).asc()]
+        order = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break is not None:
         order.append(F.col(tie_break).asc())
     out = out.orderBy(*order).limit(k).drop(CLUSTER_COL)
@@ -429,7 +429,7 @@ def ivf_topk_adhoc(
     assigned = assign_clusters(df, column, centroids)
     cands = assigned.filter(F.col(CLUSTER_COL).isin(list(probed)))
     out = cands.withColumn(DISTANCE_COL, array_distance(column, list(q)))
-    order = [F.col(DISTANCE_COL).asc()]
+    order = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break is not None:
         order.append(F.col(tie_break).asc())
     out = out.orderBy(*order).limit(k).drop(CLUSTER_COL)

@@ -52,7 +52,7 @@ def brute_force_topk(
     if pre_filter is not None:
         out = out.filter(pre_filter)
     out = out.withColumn(DISTANCE_COL, d)
-    order = [F.col(DISTANCE_COL).asc()]
+    order = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break is not None:
         order.append(F.col(tie_break).asc())
     out = out.orderBy(*order).limit(k)

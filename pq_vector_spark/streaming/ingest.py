@@ -460,7 +460,7 @@ def indexed_topk_with_pending(
         order = [F.col(DISTANCE_COL).desc()]
     else:
         d = array_distance(col, list(query))
-        order = [F.col(DISTANCE_COL).asc()]
+        order = [F.col(DISTANCE_COL).asc_nulls_last()]
     if tie_break is not None:
         order.append(F.col(tie_break).asc())
     both = main.unionByName(pend.withColumn(DISTANCE_COL, d).select(main.columns))

@@ -283,34 +283,46 @@ def _wide_rows(dim, n=40, seed=11):
     rng = np.random.default_rng(seed)
     rows = [(i, [float(x) for x in rng.normal(size=dim).astype(np.float32)]) for i in range(n)]
     rows += [
-        (n, None),             # NULL vector -> NULL
-        (n + 1, [1.0, 2.0]),   # dim mismatch -> NULL
-        (n + 2, [0.0] * dim),  # zero norm -> NaN cosine
+        (n, None),                                  # NULL vector -> NULL
+        (n + 1, [1.0, 2.0]),                        # dim mismatch -> NULL
+        (n + 2, [0.0] * dim),                       # zero norm -> NaN cosine
+        (n + 3, [1.0, None] + [0.5] * (dim - 2)),   # NULL element -> NaN
     ]
     q = [float(x) for x in rng.normal(size=dim).astype(np.float32)]
     return rows, q
 
 
-def test_rows_hint_fold_bit_exact_without_python(spark):
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_rows_hint_fold_bit_exact_without_python(spark, ansi):
     """A wide literal query with a rows_hint inside the element budget runs
     the native fold: no Python evaluation node in the plan, and every
     distance bit-identical to the Arrow kernel, NULL / dim-mismatch /
-    zero-norm rows included."""
+    zero-norm / NULL-element rows included, and for queries holding NaN or
+    ±inf (rendered as string casts), with and without ANSI mode."""
     from pq_vector_spark.functions.distance import UNROLL_LIMIT
 
     dim = 2 * UNROLL_LIMIT
     rows, q = _wide_rows(dim)
+    n = len(rows) - 4
     df = spark.createDataFrame(rows, "id INT, v ARRAY<FLOAT>")
-    for fn in (array_distance, squared_l2, dot_product, cosine_similarity):
-        fold = df.select("id", fn("v", q, rows_hint=len(rows)).alias("d"))
-        plan = _executed_plan(fold)
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, fn
-        arrow = dict(df.select("id", fn("v", q).alias("d")).collect())
-        got = dict(fold.collect())
-        bad = [i for i in got if not _same_double(got[i], arrow[i])]
-        assert not bad, f"{fn.__name__}: ids {bad} differ from the Arrow kernel"
-        assert got[len(rows) - 3] is None and got[len(rows) - 2] is None
-    zero = df.filter("id = 42").select(cosine_similarity("v", q, rows_hint=1)).first()[0]
+    queries = [q] + [[x] + q[1:] for x in (float("nan"), float("inf"), float("-inf"))]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        for qq in queries:
+            for fn in (array_distance, squared_l2, cosine_similarity):
+                fold = df.select("id", fn("v", qq, rows_hint=len(rows)).alias("d"))
+                plan = _executed_plan(fold)
+                assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, fn
+                arrow = dict(df.select("id", fn("v", qq).alias("d")).collect())
+                got = dict(fold.collect())
+                bad = [i for i in got if not _same_double(got[i], arrow[i])]
+                assert not bad, f"{fn.__name__} q[0]={qq[0]}: ids {bad} differ from the Arrow kernel"
+                assert got[n] is None and got[n + 1] is None
+                assert math.isnan(got[n + 3])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    zero = df.filter(f"id = {n + 2}").select(cosine_similarity("v", q, rows_hint=1)).first()[0]
     assert math.isnan(zero)
 
 

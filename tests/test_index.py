@@ -880,6 +880,31 @@ def wide_index(spark, tmp_path_factory):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>").repartition(2).write.parquet(src)
     build_index(spark, src, out, column="vec", options=IndexBuildOptions(n_clusters=24))
+    # build_index rejects NULL elements and NULL vectors, but another writer
+    # can leave them in the layout: null vec[8][1] and vec[9] in place (same
+    # files, rows and clusters)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in sorted(os.listdir(out)):
+        if not f.endswith(".parquet"):
+            continue
+        t = pq.read_table(os.path.join(out, f))
+        ids = t.column("id").to_pylist()
+        if 8 in ids or 9 in ids:
+            vec = t.column("vec").to_pylist()
+            if 8 in ids:
+                vec[ids.index(8)][1] = None
+            if 9 in ids:
+                vec[ids.index(9)] = None
+            t = t.set_column(
+                t.schema.get_field_index("vec"), t.schema.field("vec"),
+                pa.array(vec, t.schema.field("vec").type),
+            )
+            pq.write_table(t, os.path.join(out, f))
+            crc = os.path.join(out, f".{f}.crc")  # Hadoop's checksum of the old bytes
+            if os.path.exists(crc):
+                os.remove(crc)
     return {"out": out, "vecs": vecs}
 
 
@@ -891,12 +916,15 @@ def _executed_plan(df):
 def test_wide_rerank_native_fold_bit_exact(spark, wide_index):
     """Under the element budget the indexed re-rank has no Python
     evaluation node, and its distances equal the Arrow kernel's bit for
-    bit (all 600 rows probed, the zero-norm row included)."""
+    bit (all 600 rows probed; the zero-norm, NULL-element and NULL rows
+    included)."""
     import struct
 
     from pq_vector_spark.functions.distance import array_distance, cosine_similarity
 
     def same(x, y):  # bit for bit; any NaN equals any NaN, as in Spark
+        if x is None or y is None:
+            return x is None and y is None
         return struct.pack("<d", x) == struct.pack("<d", y) or (np.isnan(x) and np.isnan(y))
 
     q = [float(x) for x in np.random.default_rng(5).normal(size=256).astype(np.float32)]
@@ -914,6 +942,25 @@ def test_wide_rerank_native_fold_bit_exact(spark, wide_index):
         bad = [i for i, d in got.items() if not same(d, arrow[i])]
         assert not bad, f"{metric}: ids {bad[:5]} differ from the Arrow kernel"
         assert (metric == "cosine") == np.isnan(got[7])
+        assert np.isnan(got[8]) and got[9] is None
+
+
+@pytest.mark.parametrize("budget", [None, 0])
+def test_wide_rerank_ranks_unscored_rows_last(spark, wide_index, monkeypatch, budget):
+    """On the l2 re-rank the NaN distance of the NULL-element row sorts
+    after every finite one, and the NULL distance of the NULL vector sorts
+    last (Spark's asc() is NULLS FIRST), on both kernels (budget 0 forces
+    the Arrow kernel)."""
+    import pq_vector_spark.functions.distance as distance
+
+    if budget is not None:
+        monkeypatch.setattr(distance, "FOLD_ELEMENT_BUDGET", budget)
+    q = wide_index["vecs"][8].tolist()
+    opts = VectorTopKOptions(nprobe=24)
+    top = indexed_topk(spark, wide_index["out"], q, 10, options=opts, tie_break="id")
+    assert not {8, 9} & {r["id"] for r in top.collect()}
+    every = indexed_topk(spark, wide_index["out"], q, 600, options=opts, tie_break="id")
+    assert [r["id"] for r in every.collect()][-2:] == [8, 9]
 
 
 def test_wide_rerank_over_budget_uses_arrow_kernel(spark, wide_index, monkeypatch):

@@ -1,6 +1,8 @@
 """Golden end-to-end top-k tests — same data and expected ids as the
 reference's SQL tests (src/df_vector/tests.rs:16-104, 152-241)."""
 
+import math
+
 from pyspark.sql import functions as F
 
 from pq_vector_spark.operators.topk import brute_force_topk
@@ -39,3 +41,13 @@ def test_plan_is_take_ordered(golden_vectors):
     out = brute_force_topk(golden_vectors, "vec", [0.0, 0.0], 2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+
+
+def test_topk_sorts_null_distances_last(spark):
+    """Rows without a distance (NULL vector, dim mismatch) rank after every
+    scored row instead of first (Spark's asc() is NULLS FIRST)."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, None), (3, [5.0])], "id INT, v ARRAY<FLOAT>"
+    )
+    got = brute_force_topk(df, "v", [0.0, 0.0], 2, tie_break="id", keep_distance=True)
+    assert [(r["id"], r["_pq_distance"]) for r in got.collect()] == [(0, 0.0), (1, math.sqrt(2))]
