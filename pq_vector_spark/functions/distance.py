@@ -274,7 +274,7 @@ def _unrolled_sum(terms) -> Column:
 
 
 def _sql_ref(v) -> "str | None":
-    """SQL text for the vector column, or None when it can't be rendered.
+    """SQL text for a vector column given by NAME, or None for a Column.
 
     r16 (guide §4's boundary lesson at the DRIVER): building the unrolled
     chain out of ~dim × 7 Column operations costs one py4j round trip PER
@@ -282,17 +282,13 @@ def _sql_ref(v) -> "str | None":
     time the query is planned. Rendering the whole chain as ONE SQL string
     and parsing it JVM-side (``F.expr``) builds the IDENTICAL expression
     tree (same GetArrayItem/Cast/Literal nodes, same left-deep + chain, so
-    bit-identical results) in a single round trip. A name is quoted
-    directly; a Column renders via its expression's canonical SQL (one
-    py4j call — F.col(...) inputs round-trip exactly); anything that
-    fails to render falls back to the per-term Column path."""
+    bit-identical results) in a single round trip. Only a name renders: a
+    PySpark 4 Column exposes no SQL text (``_jc.expr()`` does not exist,
+    and ``_jc.node().sql()`` drops the quotes of names such as
+    ``my col``), so a Column query vector takes the per-term Column-op
+    chain at dim ≤ ``UNROLL_LIMIT`` and the Arrow kernel above it."""
     if isinstance(v, str):
         return "`" + v.replace("`", "``") + "`"
-    if isinstance(v, Column):
-        try:
-            return v._jc.expr().sql()
-        except Exception:
-            return None
     return None
 
 
@@ -426,9 +422,15 @@ def squared_l2(
 
     ``rows_hint``: how many rows a wide LITERAL query scores
     (e.g. an IVF probe's candidate count). Within ``FOLD_ELEMENT_BUDGET``
-    the native fold runs instead of the Arrow kernel, if ``a`` renders as
-    SQL (a column name always does); None (unknown) keeps the Arrow
-    kernel. Results are bit-identical either way.
+    the native fold runs instead of the Arrow kernel when ``a`` is a column
+    NAME; None (unknown) keeps the Arrow kernel. Results are bit-identical
+    either way.
+
+    ``a`` as a name parses its literal-query chain or fold from one SQL
+    string. ``a`` as a Column has no SQL text (see ``_sql_ref``): it takes
+    the Column-op chain at dim ≤ ``UNROLL_LIMIT`` (one py4j call per
+    operation) and the Arrow kernel above it, whatever ``rows_hint``
+    says.
 
     ≙ reference ``squared_l2_distance`` (src/ivf/index.rs:459-480). The
     fold is sequential left-to-right with a 0.0 initial accumulator, which
@@ -594,48 +596,55 @@ def cosine_similarity(
     return F.when(denom == 0, F.lit(float("nan"))).otherwise(dot_product(a, b) / denom)
 
 
+# The SQL text of the four distance functions, with ``{a}``/``{b}`` for the
+# two vector arguments: ``register_sql_functions`` defines temp functions
+# from it, and ``plans/sql.py`` expands function calls in query text with
+# it (Spark 4 forbids SQL scalar UDFs inside Sort). The interceptor's
+# matchers (plans/intercept.py) recognise exactly these expression trees.
+# Zero-norm cosine is 0/0 ⇒ NaN explicitly (ANSI mode would raise
+# DIVIDE_BY_ZERO); NULL inputs keep NULL via the ELSE branch's
+# null-propagating division. Its O(d) denominator is bound ONCE via a
+# single-element transform lambda (Catalyst's subexpression elimination
+# does not dedupe across CASE branches, so the naive CASE form paid the two
+# norms twice per row).
+_SQ_L2_SQL = (
+    "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
+    " (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
+)
+_DOT_SQL = (
+    "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
+    " (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
+)
+_NORM_SQL = (
+    "sqrt(aggregate(transform(cast({v} as array<double>), x -> x * x),"
+    " cast(0.0 as double), (acc, x) -> acc + x))"
+)
+SQL_TEMPLATES = {
+    "squared_l2": _SQ_L2_SQL,
+    "array_distance": f"sqrt({_SQ_L2_SQL})",
+    "dot_product": _DOT_SQL,
+    "cosine_similarity": (
+        f"transform(array(({_NORM_SQL.replace('{v}', '{a}')}"
+        f" * {_NORM_SQL.replace('{v}', '{b}')})), _pq_d -> "
+        "CASE WHEN _pq_d = 0 THEN cast('NaN' as double) "
+        f"ELSE {_DOT_SQL} / _pq_d END)[0]"
+    ),
+}
+
+
 def register_sql_functions(spark: SparkSession) -> None:
     """Expose the distance functions to SQL text queries.
 
     ≙ the reference registering its rewrite + array functions on the session
     (src/df_vector/session.rs:16-35). Implemented as named lambda-free SQL
-    wrappers over the same native expressions so ``spark.sql("... ORDER BY
+    wrappers over ``SQL_TEMPLATES`` so ``spark.sql("... ORDER BY
     array_distance(vec, array(...)) ...")`` works verbatim.
     """
-    sq_expr = (
-        "aggregate(zip_with(cast(a as array<double>), cast(b as array<double>),"
-        " (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    dot_expr = (
-        "aggregate(zip_with(cast(a as array<double>), cast(b as array<double>),"
-        " (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    norm = (
-        "sqrt(aggregate(transform(cast({v} as array<double>), x -> x * x),"
-        " cast(0.0 as double), (acc, x) -> acc + x))"
-    )
-    cos_denom = f"({norm.format(v='a')} * {norm.format(v='b')})"
-    defs = {
-        "squared_l2": sq_expr,
-        "array_distance": f"sqrt({sq_expr})",
-        "dot_product": dot_expr,
-        # zero-norm ⇒ 0/0 ⇒ NaN (never an ANSI DIVIDE_BY_ZERO; NULL stays
-        # NULL: a NULL denom makes the CASE take the ELSE branch whose
-        # division propagates it). The O(d) denominator is bound ONCE via a
-        # single-element transform lambda — Catalyst's subexpression
-        # elimination does not dedupe across CASE branches, so the naive
-        # CASE form evaluated both norms twice per row.
-        "cosine_similarity": (
-            f"transform(array({cos_denom}), _pq_d -> "
-            f"CASE WHEN _pq_d = 0 THEN cast('NaN' as double) "
-            f"ELSE {dot_expr} / _pq_d END)[0]"
-        ),
-    }
-    for name, expr in defs.items():
+    for name, template in SQL_TEMPLATES.items():
         try:
             spark.sql(
                 f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) "
-                f"RETURNS DOUBLE RETURN {expr}"
+                f"RETURNS DOUBLE RETURN {template.format(a='a', b='b')}"
             )
         except Exception:
             # Spark build without SQL scalar UDFs: the DataFrame-API

@@ -419,12 +419,7 @@ def _collect_cluster_counts(
     if files is not None:
         if not files:
             return {}
-        root = _local_root(out_path)
-        paths = [
-            os.path.join(root, f) if root is not None else f"{out_path}/{f}"
-            for f in files
-        ]
-        src = spark.read.parquet(*paths)
+        src = spark.read.parquet(*[f"{out_path.rstrip('/')}/{f}" for f in files])
     else:
         src = spark.read.parquet(out_path)
     rows = (
@@ -440,18 +435,6 @@ def _collect_cluster_counts(
     for r in rows:
         per.setdefault(r["file"], []).append([int(r["cid"]), int(r["count"])])
     return {f: sorted(v) for f, v in per.items()}
-
-
-# test hook: force the Hadoop-FS code paths even for local/file:// URLs
-_FORCE_HADOOP = False
-
-
-def _local_root(path: str):
-    """Local filesystem root for a path, or None for any remote URL."""
-    if _FORCE_HADOOP:
-        return None
-    root = path[len("file://"):] if path.startswith("file://") else path
-    return None if "://" in root else root
 
 
 def _file_stats_from_metadata(md, basename: str):
@@ -471,37 +454,23 @@ def _file_stats_from_metadata(md, basename: str):
 
 def _collect_file_stats(spark: SparkSession, out_path: str):
     """Per-part-file row-group [min, max] ranges of CLUSTER_COL, read from
-    the parquet footers on the driver. Local paths read with pyarrow
-    directly; ANY other Hadoop-compatible URL reads footers through the JVM
-    FileSystem API via a ranged reader (footer-sized I/O only, zero Spark
-    jobs) — remote layouts keep full cap metadata, ≙ the reference's
-    any-object-store footer reads (src/ivf/parquet.rs:176-208). Tiny:
-    n_files × n_row_groups × 2 ints."""
+    the parquet footers on the driver through the Hadoop FileSystem API
+    with a ranged reader (footer-sized I/O only, zero Spark jobs), for a
+    local path and any other Hadoop-compatible URL alike, ≙ the
+    reference's any-object-store footer reads (src/ivf/parquet.rs:176-208).
+    Tiny: n_files × n_row_groups × 2 ints. None when a footer lacks the
+    statistics or cannot be read."""
     import pyarrow.parquet as pq
 
     try:
-        root = _local_root(out_path)
         stats = []
-        if root is not None:
-            import glob
-
-            if not os.path.isdir(root):
+        for fp in sorted(_hadoop_glob(spark, f"{out_path}/part-*.parquet")):
+            with _HadoopReadableFile(spark, fp) as f:
+                md = pq.ParquetFile(f).metadata
+            s = _file_stats_from_metadata(md, fp.rsplit("/", 1)[-1])
+            if s is None:
                 return None
-            for fp in sorted(glob.glob(os.path.join(root, "part-*.parquet"))):
-                s = _file_stats_from_metadata(
-                    pq.ParquetFile(fp).metadata, os.path.basename(fp)
-                )
-                if s is None:
-                    return None
-                stats.append(s)
-        else:
-            for fp in sorted(_hadoop_glob(spark, f"{out_path}/part-*.parquet")):
-                with _HadoopReadableFile(spark, fp) as f:
-                    md = pq.ParquetFile(f).metadata
-                s = _file_stats_from_metadata(md, fp.rsplit("/", 1)[-1])
-                if s is None:
-                    return None
-                stats.append(s)
+            stats.append(s)
         return stats or None
     except Exception:
         return None
@@ -522,75 +491,97 @@ def _centroids_table(centroids: np.ndarray):
 
 def _write_sidecar(spark: SparkSession, out_path: str, centroids: np.ndarray, meta: dict) -> None:
     """Persist the sidecar (centroids parquet + meta json). The sidecar is
-    tiny (≤100k × dim floats), so it is ALWAYS written from the driver —
-    local filesystems directly, any other Hadoop-compatible URL through the
-    JVM FileSystem byte stream — zero Spark jobs either way (two jobs just
-    for the sidecar would dominate small builds, and remote builds must not
-    lose metadata parity with local ones). The layout matches what
-    search._load_sidecar_local / _load_sidecar_hadoop expect:
+    tiny (≤100k × dim floats), so it is ALWAYS written from the driver
+    through the Hadoop FileSystem byte stream, zero Spark jobs (two jobs
+    just for the sidecar would dominate small builds). The layout matches
+    what ``search._load_sidecar`` reads:
     ``_pq_index/centroids/*.parquet`` + ``_pq_index/meta/part-*``.
     """
-    import pyarrow.parquet as pq
-
-    root = _local_root(out_path)
-    if root is not None and os.path.isdir(root):
-        cdir = os.path.join(root, INDEX_DIR, "centroids")
-        mdir = os.path.join(root, INDEX_DIR, "meta")
-        os.makedirs(cdir, exist_ok=True)
-        os.makedirs(mdir, exist_ok=True)
-        pq.write_table(_centroids_table(centroids), os.path.join(cdir, "part-00000.parquet"))
-        with open(os.path.join(mdir, "part-00000"), "w") as f:
-            f.write(json.dumps(meta) + "\n")
-        return
-
     import io
+
+    import pyarrow.parquet as pq
 
     buf = io.BytesIO()
     pq.write_table(_centroids_table(centroids), buf)
     _hadoop_write_bytes(
         spark, f"{out_path}/{INDEX_DIR}/centroids/part-00000.parquet", buf.getvalue()
     )
-    _hadoop_write_bytes(
-        spark,
-        f"{out_path}/{INDEX_DIR}/meta/part-00000",
-        (json.dumps(meta) + "\n").encode("utf-8"),
-    )
+    _write_text(spark, f"{out_path}/{INDEX_DIR}/meta/part-00000", json.dumps(meta) + "\n")
+
+
+# Every read, write, glob, stat, rename and delete of index metadata (the
+# IVF sidecar, codes registrations, rebuild sentinels, streaming markers and
+# buffers) goes through the helpers below. Hadoop's FileSystem serves local
+# paths and file:// as well as hdfs://, s3a://, ..., so there is one code
+# path for every store, as the reference reaches its index through one
+# object-store abstraction (src/df_vector/access.rs:30-33). Failures raise:
+# an unreachable filesystem never reads as "no index".
+
+
+def _jfs(spark: SparkSession, path: str):
+    """The Hadoop ``Path`` of ``path`` and the FileSystem that serves it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def _hadoop_glob(spark: SparkSession, pattern: str) -> list:
-    """Glob through the JVM Hadoop FileSystem API — works on ANY
-    ``spark.read``-able URL (hdfs://, s3a://, file://, ...), matching the
-    reference probing its footer through an object-store abstraction for any
-    URL (src/ivf/parquet.rs:176-189). Raises on an unreachable filesystem —
-    never silently reports 'no index'."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Qualified paths matching a glob pattern; [] when nothing matches."""
+    jpath, fs = _jfs(spark, pattern)
     statuses = fs.globStatus(jpath)
     if statuses is None:
         return []
     return [s.getPath().toString() for s in statuses]
 
 
+def _hadoop_exists(spark: SparkSession, path: str) -> bool:
+    jpath, fs = _jfs(spark, path)
+    return bool(fs.exists(jpath))
+
+
+def _hadoop_stat(spark: SparkSession, path: str):
+    """``(modification time in ms, length)`` of one file, or None when it
+    does not exist."""
+    from py4j.protocol import Py4JJavaError
+
+    jpath, fs = _jfs(spark, path)
+    try:
+        st = fs.getFileStatus(jpath)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return None
+        raise
+    return int(st.getModificationTime()), int(st.getLen())
+
+
+def _hadoop_delete(spark: SparkSession, path: str, *, recursive: bool) -> bool:
+    """Delete a file or directory; False when there was nothing to delete."""
+    jpath, fs = _jfs(spark, path)
+    return bool(fs.delete(jpath, recursive))
+
+
+def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> bool:
+    """``FileSystem.rename``, which reports failure (destination exists,
+    parent missing, transient store error) by returning False, not by
+    raising, so callers must check the result."""
+    jsrc, fs = _jfs(spark, src)
+    return bool(fs.rename(jsrc, spark._jvm.org.apache.hadoop.fs.Path(dst)))
+
+
 def _hadoop_read_bytes(spark: SparkSession, path: str) -> bytes:
-    """Read one (small) file fully through the Hadoop FS API."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Read one (small) file fully."""
+    jpath, fs = _jfs(spark, path)
     stream = fs.open(jpath)
     try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
 
 
 def _hadoop_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
-    """Write one (small) file through the Hadoop FS API — driver-side, zero
-    Spark jobs; ``create`` makes parent directories like the object-store
-    writers the reference builds on (src/ivf/parquet.rs:542-611)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Write (or overwrite) one (small) file from the driver, zero Spark
+    jobs; ``create`` makes parent directories like the object-store writers
+    the reference builds on (src/ivf/parquet.rs:542-611)."""
+    jpath, fs = _jfs(spark, path)
     stream = fs.create(jpath, True)
     try:
         stream.write(bytearray(data))
@@ -599,26 +590,13 @@ def _hadoop_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
 
 
 def _read_text(spark: SparkSession, path: str) -> str:
-    """Read one small text file, local-direct or through the Hadoop FS API
-    — the ONE definition of the local-vs-remote branching that sidecar
-    metas and streaming markers all share (it was copied in five places
-    before r11). Raises on unreadable/missing files."""
-    root = _local_root(path)
-    if root is not None:
-        with open(root) as f:
-            return f.read()
+    """Read one small UTF-8 file (sidecar metas, markers). Raises on an
+    unreadable or missing file."""
     return _hadoop_read_bytes(spark, path).decode("utf-8")
 
 
 def _write_text(spark: SparkSession, path: str, body: str) -> None:
-    """Write one small text file (parents created), local-direct or via the
-    Hadoop FS API — the write twin of ``_read_text``."""
-    root = _local_root(path)
-    if root is not None:
-        os.makedirs(os.path.dirname(root), exist_ok=True)
-        with open(root, "w") as f:
-            f.write(body)
-        return
+    """Write one small UTF-8 file, parents created."""
     _hadoop_write_bytes(spark, path, body.encode("utf-8"))
 
 
@@ -629,12 +607,10 @@ class _HadoopReadableFile:
     read footers (a handful of KB-sized ranged reads), never data pages."""
 
     def __init__(self, spark: SparkSession, path: str):
-        jvm = spark._jvm
-        self._jvm = jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path(path)
-        self._fs = self._jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        self._size = int(self._fs.getFileStatus(self._jpath).getLen())
-        self._stream = self._fs.open(self._jpath)
+        self._jvm = spark._jvm
+        jpath, fs = _jfs(spark, path)
+        self._size = int(fs.getFileStatus(jpath).getLen())
+        self._stream = fs.open(jpath)
         self._pos = 0
         self.closed = False
 
@@ -688,22 +664,14 @@ def has_index(path: str, spark: Optional[SparkSession] = None) -> bool:
     """≙ reference ``has_pq_vector_index`` footer probe
     (src/ivf/parquet.rs:176-189) — here: does the sidecar exist?
 
-    Local paths probe with os.path/glob (no JVM round-trips); any other URL
-    probes through the Hadoop FileSystem API of the active session. An
-    unreachable filesystem RAISES — a probe failure must never silently
-    degrade an indexed query to brute force.
+    Probes through the Hadoop FileSystem API of ``spark``, or of the active
+    session when none is passed, for local paths too, so a session is
+    required. An unreachable filesystem RAISES — a probe failure must
+    never silently degrade an indexed query to brute force.
     """
-    import glob
-
-    root = path[len("file://"):] if path.startswith("file://") else path
-    if "://" not in root:
-        return bool(
-            glob.glob(os.path.join(root, INDEX_DIR, "meta", "part-*"))
-            and glob.glob(os.path.join(root, INDEX_DIR, "centroids", "*.parquet"))
-        )
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
-        raise ValueError(f"probing a non-local path ({path}) requires an active SparkSession")
+        raise ValueError(f"probing {path} for an index needs a SparkSession (pass spark=)")
     return bool(
         _hadoop_glob(spark, f"{path}/{INDEX_DIR}/meta/part-*")
         and _hadoop_glob(spark, f"{path}/{INDEX_DIR}/centroids/*.parquet")
@@ -739,53 +707,33 @@ def index_health(spark: SparkSession, indexed_path: str, *, stale_threshold: flo
 
 
 def _swap_dirs(spark: SparkSession, live: str, fresh: str) -> None:
-    """Atomically-ish replace directory ``live`` with ``fresh`` (local:
-    os.rename; other filesystems: Hadoop FileSystem.rename). The old layout
-    is moved aside first and deleted only after the new one is in place, so
-    a crash leaves either the old or the new complete layout on disk."""
-    import shutil
-
+    """Atomically-ish replace directory ``live`` with ``fresh`` by two
+    FileSystem renames. The old layout is moved aside first and deleted
+    only after the new one is in place, so a crash leaves either the old or
+    the new complete layout on disk."""
     live = live.rstrip("/")
     retired = live + ".retired"
-    if "://" not in live:
-        if os.path.exists(retired):
-            shutil.rmtree(retired)
-        os.rename(live, retired)
-        os.rename(fresh, live)
-        shutil.rmtree(retired)
-        return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(live)
-    fs = p.getFileSystem(conf)
-    rp = jvm.org.apache.hadoop.fs.Path(retired)
-    if fs.exists(rp):
-        fs.delete(rp, True)
-    # FileSystem.rename reports failure by RETURNING FALSE (dest exists,
-    # parent missing, transient store error) — not by raising. Unchecked,
-    # a false first rename makes the swap a silent no-op, and a false
-    # second rename followed by the delete would destroy the only
+    _hadoop_delete(spark, retired, recursive=True)
+    # Unchecked, a failed first rename makes the swap a silent no-op, and a
+    # failed second rename followed by the delete would destroy the only
     # remaining copy of the layout. Check both; roll back on the second.
-    if not fs.rename(p, rp):
+    if not _hadoop_rename(spark, live, retired):
         raise IOError(f"swap failed: could not retire {live} -> {retired}")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(fresh), p):
-        fs.rename(rp, p)  # restore the retired layout before raising
+    if not _hadoop_rename(spark, fresh, live):
+        _hadoop_rename(spark, retired, live)  # restore the retired layout before raising
         raise IOError(f"swap failed: could not move {fresh} -> {live}")
-    fs.delete(rp, True)
+    _hadoop_delete(spark, retired, recursive=True)
 
 
 REBUILD_SENTINEL = "REBUILDING"
 
 
+def _sentinel_path(indexed_path: str) -> str:
+    return f"{indexed_path.rstrip('/')}/{INDEX_DIR}/{REBUILD_SENTINEL}"
+
+
 def _rebuild_sentinel_exists(spark: SparkSession, indexed_path: str) -> bool:
-    root = _local_root(indexed_path)
-    if root is not None:
-        return os.path.isfile(os.path.join(root, INDEX_DIR, REBUILD_SENTINEL))
-    return bool(
-        _hadoop_glob(
-            spark, f"{indexed_path.rstrip('/')}/{INDEX_DIR}/{REBUILD_SENTINEL}"
-        )
-    )
+    return _hadoop_exists(spark, _sentinel_path(indexed_path))
 
 
 def _acquire_rebuild_sentinel(spark: SparkSession, indexed_path: str) -> None:
@@ -805,35 +753,13 @@ def _acquire_rebuild_sentinel(spark: SparkSession, indexed_path: str) -> None:
     import time as _time
 
     body = json.dumps({"started_unix": _time.time(), "pid": os.getpid()})
-    root = _local_root(indexed_path)
-    if root is not None:
-        os.makedirs(os.path.join(root, INDEX_DIR), exist_ok=True)
-        with open(os.path.join(root, INDEX_DIR, REBUILD_SENTINEL), "w") as f:
-            f.write(body + "\n")
-        return
-    _hadoop_write_bytes(
-        spark,
-        f"{indexed_path.rstrip('/')}/{INDEX_DIR}/{REBUILD_SENTINEL}",
-        (body + "\n").encode("utf-8"),
-    )
+    _write_text(spark, _sentinel_path(indexed_path), body + "\n")
 
 
 def _release_rebuild_sentinel(spark: SparkSession, indexed_path: str) -> None:
-    """Best-effort delete; tolerates a missing sentinel (after a successful
+    """Delete the sentinel; tolerates a missing one (after a successful
     swap it vanished with the retired directory)."""
-    root = _local_root(indexed_path)
-    if root is not None:
-        p = os.path.join(root, INDEX_DIR, REBUILD_SENTINEL)
-        if os.path.isfile(p):
-            os.remove(p)
-        return
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(
-        f"{indexed_path.rstrip('/')}/{INDEX_DIR}/{REBUILD_SENTINEL}"
-    )
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, False)
+    _hadoop_delete(spark, _sentinel_path(indexed_path), recursive=False)
 
 
 def auto_rebuild_if_stale(
@@ -929,21 +855,12 @@ def auto_rebuild_if_stale(
             )
         _swap_dirs(spark, indexed_path, fresh)
     except BaseException:
-        # drop the partial fresh layout; never leave .rebuild debris
-        root = _local_root(fresh)
-        if root is not None and os.path.isdir(root):
-            import shutil
-
-            shutil.rmtree(root, ignore_errors=True)
-        else:
-            try:
-                jvm = spark._jvm
-                jp = jvm.org.apache.hadoop.fs.Path(fresh)
-                fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-                if fs.exists(jp):
-                    fs.delete(jp, True)
-            except Exception:
-                pass
+        # drop the partial fresh layout; never leave .rebuild debris, and
+        # never let a failed cleanup mask the error being raised
+        try:
+            _hadoop_delete(spark, fresh, recursive=True)
+        except Exception:
+            pass
         raise
     finally:
         # after a successful swap the sentinel vanished with the retired

@@ -30,7 +30,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pq_vector_spark.functions.distance import array_distance
-from pq_vector_spark.index.build import CLUSTER_COL, INDEX_DIR, assign_clusters
+from pq_vector_spark.index.build import (
+    CLUSTER_COL,
+    INDEX_DIR,
+    _hadoop_glob,
+    _hadoop_read_bytes,
+    _hadoop_stat,
+    assign_clusters,
+)
 from pq_vector_spark.index.kmeans import nearest_centroids, train_kmeans
 from pq_vector_spark.operators.topk import DISTANCE_COL
 from pq_vector_spark.session import VectorTopKOptions
@@ -46,41 +53,20 @@ class LoadedIndex:
     centroids: np.ndarray  # (n_clusters, dim) f32, row id = cluster id
 
 
-def _load_sidecar_local(path: str):
-    """Driver-side sidecar read for local paths — the sidecar is tiny
-    (centroids ≤ 100k×dim floats), so two Spark jobs just to read it would
-    dominate small-query latency. Returns None when the path isn't local."""
-    import glob
-    import os
-
-    root = path[len("file://"):] if path.startswith("file://") else path
-    if "://" in root or not os.path.isdir(os.path.join(root, INDEX_DIR)):
-        return None
-    meta_parts = sorted(glob.glob(os.path.join(root, INDEX_DIR, "meta", "part-*")))
-    cent_parts = sorted(glob.glob(os.path.join(root, INDEX_DIR, "centroids", "*.parquet")))
-    if not meta_parts or not cent_parts:
-        return None
-    import pyarrow.parquet as pq
-
-    with open(meta_parts[0]) as f:
-        meta = json.loads(f.read().strip())
-    tbl = pq.read_table(cent_parts[0]).to_pydict()
-    order = np.argsort(tbl["cluster_id"])
-    centroids = np.asarray(tbl["centroid"], dtype=np.float32)[order]
-    return meta, centroids
-
-
-def _load_sidecar_hadoop(spark: SparkSession, path: str):
-    """Sidecar read for ANY Hadoop-compatible URL (hdfs://, s3a://, ...):
-    glob + byte-read through the JVM FileSystem API, parsed with pyarrow on
-    the driver — zero Spark jobs, matching the reference's any-object-store
-    footer probe (src/ivf/parquet.rs:176-208). Raises IndexError_ when the
-    sidecar is missing/unreadable — never a silent brute-force fallback."""
+def _load_sidecar(spark: SparkSession, path: str):
+    """Read the sidecar on the driver through the Hadoop FileSystem API
+    (any local path or Hadoop-compatible URL): glob + byte-read, parsed
+    with pyarrow, zero Spark jobs (two jobs just to read it would dominate
+    small-query latency), matching the reference's any-object-store footer
+    probe (src/ivf/parquet.rs:176-208). Returns ``(meta, centroids,
+    meta_file, signature)``, the signature being the meta file's
+    ``(mtime, size)`` taken BEFORE its bytes are read, so a rewrite racing
+    the read leaves a signature that the next probe sees move. Raises
+    IndexError_ when the sidecar is missing — never a silent brute-force
+    fallback."""
     import io
 
     import pyarrow.parquet as pq
-
-    from pq_vector_spark.index.build import _hadoop_glob, _hadoop_read_bytes
 
     meta_parts = sorted(_hadoop_glob(spark, f"{path}/{INDEX_DIR}/meta/part-*"))
     cent_parts = sorted(_hadoop_glob(spark, f"{path}/{INDEX_DIR}/centroids/*.parquet"))
@@ -89,6 +75,7 @@ def _load_sidecar_hadoop(spark: SparkSession, path: str):
             f"no readable index sidecar under {path}/{INDEX_DIR} "
             "(build_index writes meta/ + centroids/)"
         )
+    sig = _hadoop_stat(spark, meta_parts[0])
     meta = json.loads(_hadoop_read_bytes(spark, meta_parts[0]).decode("utf-8").strip())
     tbls = [
         pq.read_table(io.BytesIO(_hadoop_read_bytes(spark, p))).to_pydict()
@@ -98,11 +85,11 @@ def _load_sidecar_hadoop(spark: SparkSession, path: str):
     cents = np.concatenate(
         [np.asarray(t["centroid"], dtype=np.float32) for t in tbls]
     )
-    return meta, cents[np.argsort(cluster_ids)]
+    return meta, cents[np.argsort(cluster_ids)], meta_parts[0], sig
 
 
-# per-layout sidecar cache: {normalized path: (signature, meta, centroids)}.
-# The signature is the sidecar META file's (path, mtime, size) — every
+# per-layout sidecar cache: {normalized path: (meta file, signature, meta,
+# centroids)}. The signature is the meta file's (mtime, size) — every
 # sidecar write (append refresh, rebuild swap) rewrites meta, so a stale hit
 # requires a same-path same-size rewrite inside one mtime tick. Bounded to a
 # handful of layouts (a session queries few); evicts insertion-oldest.
@@ -110,53 +97,20 @@ _SIDECAR_CACHE: dict = {}
 _SIDECAR_CACHE_MAX = 8
 
 
-def _sidecar_signature(spark: SparkSession, path: str):
-    """Cheap freshness probe for the layout's sidecar: one stat of the meta
-    part-file (local: os.stat; remote: one FileStatus RPC — still far less
-    I/O than re-reading meta + centroid parquet bytes every query). None
-    when the probe can't see a sidecar (caller falls through to the real
-    load, which raises its own precise error)."""
-    import glob
-    import os
-
-    root = path[len("file://"):] if path.startswith("file://") else path
-    if "://" not in root:
-        parts = sorted(glob.glob(os.path.join(root, INDEX_DIR, "meta", "part-*")))
-        if not parts:
-            return None
-        try:
-            st = os.stat(parts[0])
-        except OSError:
-            return None
-        return ("local", parts[0], st.st_mtime_ns, st.st_size)
-    try:
-        from pq_vector_spark.index.build import _hadoop_glob
-
-        parts = sorted(_hadoop_glob(spark, f"{path}/{INDEX_DIR}/meta/part-*"))
-        if not parts:
-            return None
-        jvm = spark._jvm
-        jp = jvm.org.apache.hadoop.fs.Path(parts[0])
-        st = jp.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jp)
-        return ("hadoop", parts[0], int(st.getModificationTime()), int(st.getLen()))
-    except Exception:
-        return None
-
-
 def load_index(
     spark: SparkSession, path: str, *, use_cache: bool = True
 ) -> LoadedIndex:
-    """Read the sidecar (≙ footer-KV + payload read, src/ivf/parquet.rs:120-208).
+    """Read the sidecar (≙ footer-KV + payload read, src/ivf/parquet.rs:120-208)
+    on the driver through the Hadoop FileSystem API, for local paths and
+    any other Hadoop-compatible URL alike; zero Spark jobs. Unreadable
+    sidecars raise.
 
-    Local filesystems are read directly on the driver; any other
-    Hadoop-compatible URL reads through the JVM FileSystem API (still
-    driver-side, still zero Spark jobs). Unreadable sidecars raise.
-
-    Repeated loads of the same layout hit a per-session cache keyed on the
-    sidecar meta file's (mtime, size) — a warm query pays one stat instead
-    of re-parsing the centroid parquet (r10 measured ~0.4 s/query of fixed
-    cold-path cost at sf0.1). Appends and rebuilds rewrite the meta file,
-    so they invalidate naturally; ``use_cache=False`` bypasses for callers
+    Repeated loads of the same layout hit a per-session cache: a warm load
+    pays one ``getFileStatus`` of the meta file the cold load found (no
+    glob, no byte read) instead of re-parsing the centroid parquet (r10
+    measured ~0.4 s/query of fixed cold-path cost at sf0.1). Appends and
+    rebuilds rewrite the meta file, which moves its (mtime, size), so they
+    invalidate naturally; ``use_cache=False`` bypasses for callers
     that must see the storage truth — the MUTATING paths use it
     (``append_to_index`` seeds its sidecar rewrite from this read, and the
     rebuild's pre-swap verify must not trust a cached row count).
@@ -165,22 +119,17 @@ def load_index(
     historically mutate copies); ``centroids`` is SHARED — treat it as
     read-only, which every caller does (assign/probe only read it)."""
     key = path.rstrip("/")
-    sig = _sidecar_signature(spark, key) if use_cache else None
-    if sig is not None:
-        hit = _SIDECAR_CACHE.get(key)
-        if hit is not None and hit[0] == sig:
-            return LoadedIndex(meta=dict(hit[1]), centroids=hit[2])
-    local = _load_sidecar_local(path)
-    if local is not None:
-        meta, centroids = local
-    else:
-        meta, centroids = _load_sidecar_hadoop(spark, path)
+    hit = _SIDECAR_CACHE.get(key) if use_cache else None
+    if hit is not None and _hadoop_stat(spark, hit[0]) == hit[1]:
+        return LoadedIndex(meta=dict(hit[2]), centroids=hit[3])
+    meta, centroids, meta_file, sig = _load_sidecar(spark, key)
     if centroids.shape != (meta["n_clusters"], meta["dim"]):
         raise IndexError_(
             f"sidecar corrupt: centroids {centroids.shape} != meta "
             f"({meta['n_clusters']}, {meta['dim']})"
         )
-    if sig is not None:
+    if use_cache and sig is not None:
+        _SIDECAR_CACHE.pop(key, None)
         while len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
             _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
         # enforce the read-only contract: the cached array is SHARED across
@@ -188,7 +137,7 @@ def load_index(
         # assignment destination is read-only) instead of silently poisoning
         # every later cached load
         centroids.setflags(write=False)
-        _SIDECAR_CACHE[key] = (sig, meta, centroids)
+        _SIDECAR_CACHE[key] = (meta_file, sig, meta, centroids)
     return LoadedIndex(meta=dict(meta), centroids=centroids)
 
 

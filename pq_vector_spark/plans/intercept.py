@@ -91,8 +91,8 @@ _CODES_SIDECARS: Dict[str, tuple] = {}
 
 # layouts known to have NO persisted registration (path -> monotonic
 # probe time): without this, every interception attempt against an
-# unregistered layout re-pays the disk probe — os.path.isfile locally
-# (free), but one FileSystem.globStatus RPC PER QUERY against S3/HDFS.
+# unregistered layout re-pays the disk probe — one FileSystem.exists call
+# per query, an RPC against S3/HDFS.
 # Invalidated by register/unregister; entries also EXPIRE after
 # _MISS_REPROBE_SEC so a registration persisted by ANOTHER process
 # (discovery-from-storage is a cross-process contract) becomes visible to
@@ -164,11 +164,12 @@ def _persist_codes_registration(
     spark, indexed_path: str, codes_path: str, codebook, id_col: str, codes_rows: int
 ) -> None:
     """Write the codes registration into ``<indexed>/_pq_index/``: the
-    codebook as npz bytes plus a ``codes.json`` naming the codes table,
-    id column, and the coverage row count the staleness guard compares.
-    Driver-side, zero Spark jobs — local paths write directly, any other
-    Hadoop-compatible URL goes through the JVM FileSystem (same split as
-    the IVF sidecar writer, index/build.py:_write_sidecar)."""
+    codebook as npz bytes plus a ``codes.json`` naming the codes table
+    (as a fully qualified path, so a later process resolves it the same
+    way), id column, and the coverage row count the staleness guard
+    compares. Driver-side, zero Spark jobs, through the same Hadoop
+    FileSystem helpers as the IVF sidecar writer
+    (index/build.py:_write_sidecar)."""
     import io
     import json
 
@@ -177,7 +178,8 @@ def _persist_codes_registration(
     from pq_vector_spark.index.build import (
         INDEX_DIR,
         _hadoop_write_bytes,
-        _local_root,
+        _jfs,
+        _write_text,
     )
 
     buf = io.BytesIO()
@@ -190,33 +192,17 @@ def _persist_codes_registration(
     if codebook.rotation is not None:
         extras["rotation"] = codebook.rotation
     np.savez(buf, codebooks=codebook.codebooks, dim=np.int64(codebook.dim), **extras)
+    jpath, fs = _jfs(spark, codes_path)
     reg = {
         "format": "pq_vector_spark/pq-codes-v1",
-        "codes_path": (
-            os.path.abspath(codes_path) if "://" not in codes_path else codes_path
-        ),
+        "codes_path": fs.makeQualified(jpath).toString(),
         "id_col": id_col,
         "codes_rows": int(codes_rows),
         "codebook_file": CODES_CODEBOOK_FILE,
     }
-    root = _local_root(indexed_path)
-    if root is not None and os.path.isdir(root):
-        d = os.path.join(root, INDEX_DIR)
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, CODES_CODEBOOK_FILE), "wb") as f:
-            f.write(buf.getvalue())
-        with open(os.path.join(d, CODES_REG_FILE), "w") as f:
-            f.write(json.dumps(reg) + "\n")
-        return
-    base = indexed_path.rstrip("/")
-    _hadoop_write_bytes(
-        spark, f"{base}/{INDEX_DIR}/{CODES_CODEBOOK_FILE}", buf.getvalue()
-    )
-    _hadoop_write_bytes(
-        spark,
-        f"{base}/{INDEX_DIR}/{CODES_REG_FILE}",
-        (json.dumps(reg) + "\n").encode("utf-8"),
-    )
+    base = f"{indexed_path.rstrip('/')}/{INDEX_DIR}"
+    _hadoop_write_bytes(spark, f"{base}/{CODES_CODEBOOK_FILE}", buf.getvalue())
+    _write_text(spark, f"{base}/{CODES_REG_FILE}", json.dumps(reg) + "\n")
 
 
 def _load_codes_registration(spark, indexed_path: str):
@@ -235,35 +221,20 @@ def _load_codes_registration(spark, indexed_path: str):
 
     from pq_vector_spark.index.build import (
         INDEX_DIR,
-        _hadoop_glob,
+        _hadoop_exists,
         _hadoop_read_bytes,
-        _local_root,
+        _read_text,
     )
     from pq_vector_spark.index.pq import PQCodebook
 
     try:
-        root = _local_root(indexed_path)
-        base = indexed_path.rstrip("/")
-        if root is not None:
-            reg_p = os.path.join(root, INDEX_DIR, CODES_REG_FILE)
-            if not os.path.isfile(reg_p):
-                return False, None
-            with open(reg_p) as f:
-                reg = json.loads(f.read().strip())
-            with open(
-                os.path.join(root, INDEX_DIR, reg.get("codebook_file", CODES_CODEBOOK_FILE)),
-                "rb",
-            ) as f:
-                raw = f.read()
-        else:
-            reg_url = f"{base}/{INDEX_DIR}/{CODES_REG_FILE}"
-            if not _hadoop_glob(spark, reg_url):
-                return False, None
-            reg = json.loads(_hadoop_read_bytes(spark, reg_url).decode("utf-8").strip())
-            raw = _hadoop_read_bytes(
-                spark,
-                f"{base}/{INDEX_DIR}/{reg.get('codebook_file', CODES_CODEBOOK_FILE)}",
-            )
+        base = f"{indexed_path.rstrip('/')}/{INDEX_DIR}"
+        if not _hadoop_exists(spark, f"{base}/{CODES_REG_FILE}"):
+            return False, None
+        reg = json.loads(_read_text(spark, f"{base}/{CODES_REG_FILE}").strip())
+        raw = _hadoop_read_bytes(
+            spark, f"{base}/{reg.get('codebook_file', CODES_CODEBOOK_FILE)}"
+        )
         z = np.load(io.BytesIO(raw))
         codebook = PQCodebook(
             codebooks=z["codebooks"],
@@ -349,30 +320,20 @@ def unregister_codes_sidecar(indexed_path: str, spark=None) -> None:
     back to the raw IVF probe. Removes BOTH the session cache entry and
     the persisted ``_pq_index/codes.json`` registration — otherwise the
     disk copy would silently resurrect the route on the next interception.
-    Deleting a non-local registration needs a session (pass ``spark=`` or
-    have one active); without one, only the in-memory entry is dropped and
-    a warning is logged — and the negative-lookup cache is NOT seeded
-    (the registration is still on disk, so query-path lookups must stay
-    free to rediscover it; seeding a miss here would hide it for the
-    whole TTL, contradicting this docstring)."""
+    Deleting the registration needs a session, on local paths too (pass
+    ``spark=`` or have one active); without one, only the in-memory entry
+    is dropped and a warning is logged — and the negative-lookup cache is
+    NOT seeded (the registration is still on disk, so query-path lookups
+    must stay free to rediscover it; seeding a miss here would hide it for
+    the whole TTL, contradicting this docstring)."""
     import time as _time
+
+    from pyspark.sql import SparkSession
+
+    from pq_vector_spark.index.build import INDEX_DIR, _hadoop_delete
 
     key = _normalize_path(indexed_path)
     _CODES_SIDECARS.pop(key, None)
-    from pq_vector_spark.index.build import INDEX_DIR, _local_root
-
-    root = _local_root(indexed_path)
-    if root is not None:
-        for fname in (CODES_REG_FILE, CODES_CODEBOOK_FILE):
-            p = os.path.join(root, INDEX_DIR, fname)
-            if os.path.isfile(p):
-                os.remove(p)
-        # deletion confirmed: a miss entry is now TRUE, seed it so the
-        # query path doesn't pay a probe per query for the gone route
-        _CODES_SIDECAR_MISSES[key] = _time.monotonic()
-        return
-    from pyspark.sql import SparkSession
-
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
         # persisted copy NOT deleted — drop any stale miss entry so the
@@ -385,14 +346,11 @@ def unregister_codes_sidecar(indexed_path: str, spark=None) -> None:
             indexed_path,
         )
         return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = indexed_path.rstrip("/")
+    base = f"{indexed_path.rstrip('/')}/{INDEX_DIR}"
     for fname in (CODES_REG_FILE, CODES_CODEBOOK_FILE):
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/{INDEX_DIR}/{fname}")
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, False)
+        _hadoop_delete(spark, f"{base}/{fname}", recursive=False)
+    # deletion confirmed: a miss entry is now TRUE, seed it so the query
+    # path doesn't pay a probe per query for the gone route
     _CODES_SIDECAR_MISSES[key] = _time.monotonic()
 
 
@@ -527,8 +485,7 @@ def _match_norm(e):
 
 def _match_l2_sort_expr(expr):
     """Match the canonical L2 expression our SQL expansion / registration
-    produces (plans/sql.py:_FN_EXPANSIONS, functions/distance.py:
-    register_sql_functions):
+    produces (functions/distance.py:SQL_TEMPLATES):
 
       [Sqrt] ArrayAggregate(ZipWith(col, lit, (x,y)->(x-y)*(x-y)),
                             0.0, (acc,x)->acc+x, id->id)
@@ -570,8 +527,8 @@ def _match_l2_sort_expr(expr):
 
 
 def _match_cosine_sort_expr(expr):
-    """Match the single-eval cosine expansion (plans/sql.py / distance.py
-    register_sql_functions):
+    """Match the single-eval cosine expansion
+    (functions/distance.py:SQL_TEMPLATES):
 
       transform(array(norm(col) * norm(lit)),
                 d -> CASE WHEN d = 0 THEN NaN ELSE dot(col, lit) / d END)[0]

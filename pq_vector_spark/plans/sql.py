@@ -29,6 +29,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pq_vector_spark.functions.distance import SQL_TEMPLATES
 from pq_vector_spark.session import VectorTopKOptions
 
 _TOPK_RE = re.compile(
@@ -83,33 +84,7 @@ def register_indexed_table(spark: SparkSession, name: str, path: str) -> None:
 # our distance functions textually into their native higher-order-function
 # form (a macro, ≙ the reference's expression matcher working on
 # array_distance by *name*, physical.rs:198-229).
-_FN_EXPANSIONS = {
-    "squared_l2": (
-        "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
-        " (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
-    ),
-}
-_FN_EXPANSIONS["array_distance"] = f"sqrt({_FN_EXPANSIONS['squared_l2']})"
-_FN_EXPANSIONS["dot_product"] = (
-    "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
-    " (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-)
-_COS_DENOM = (
-    "(sqrt(aggregate(transform(cast({a} as array<double>), x -> x * x),"
-    " cast(0.0 as double), (acc, x) -> acc + x))"
-    " * sqrt(aggregate(transform(cast({b} as array<double>), x -> x * x),"
-    " cast(0.0 as double), (acc, x) -> acc + x)))"
-)
-# zero-norm ⇒ 0/0 ⇒ NaN explicitly (ANSI mode would raise DIVIDE_BY_ZERO);
-# NULL inputs keep NULL via the ELSE branch's null-propagating division.
-# The O(d) denominator is bound ONCE via a single-element transform lambda
-# (Catalyst's subexpression elimination does not dedupe across CASE
-# branches, so the naive CASE form paid the two norms twice per row).
-_FN_EXPANSIONS["cosine_similarity"] = (
-    "transform(array(" + _COS_DENOM + "), _pq_d -> "
-    "CASE WHEN _pq_d = 0 THEN cast('NaN' as double) ELSE "
-    + _FN_EXPANSIONS["dot_product"] + " / _pq_d END)[0]"
-)
+_FN_EXPANSIONS = SQL_TEMPLATES
 
 
 def _split_top_level(s: str) -> list:

@@ -28,13 +28,19 @@ from __future__ import annotations
 
 import json
 import logging
-import os
 import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pq_vector_spark.index.build import (
+    _hadoop_delete,
+    _hadoop_exists,
+    _hadoop_glob,
+    _read_text,
+    _write_text,
+)
 from pq_vector_spark.operators.dedup import incremental_dedup
 
 _LOG = logging.getLogger("pq_vector_spark.streaming.ingest")
@@ -133,25 +139,13 @@ def dedup_append_batch(
 
 
 def _delete_path(spark, path: str) -> None:
-    """Best-effort recursive delete of a staging dir (local or Hadoop).
-    A failed delete never fails the batch (its appends already committed)
-    but it is LOGGED — a silently-leaked ``.staging-*`` directory per batch
-    adds up on a long-running stream; ``_sweep_staging`` reclaims leftovers
-    at the next stream start."""
-    from pq_vector_spark.index.build import _local_root
-
+    """Best-effort recursive delete of a staging dir. A failed delete never
+    fails the batch (its appends already committed) but it is LOGGED — a
+    silently-leaked ``.staging-*`` directory per batch adds up on a
+    long-running stream; ``_sweep_staging`` reclaims leftovers at the next
+    stream start."""
     try:
-        root = _local_root(path)
-        if root is not None:
-            import shutil
-
-            shutil.rmtree(root, ignore_errors=True)
-            return
-        jvm = spark._jvm
-        jp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jp):
-            fs.delete(jp, True)
+        _hadoop_delete(spark, path, recursive=True)
     except Exception:
         _LOG.warning(
             "dedup_append_batch: failed to delete staging dir %s — it will "
@@ -167,26 +161,11 @@ def _sweep_staging(spark, corpus_path: str) -> int:
     Streaming runs batches serially, so no staging dir of THIS query is
     live before the first batch, and a staging dir is only ever read by
     the batch that created it. Returns the number removed."""
-    from pq_vector_spark.index.build import _hadoop_glob, _local_root
-
-    pattern = f"{corpus_path.rstrip('/')}.staging-*"
     removed = 0
     try:
-        root = _local_root(pattern)
-        if root is not None:
-            import glob as _glob
-            import shutil
-
-            for p in _glob.glob(root):
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
-        else:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            for p in _hadoop_glob(spark, pattern):
-                jp = jvm.org.apache.hadoop.fs.Path(p)
-                jp.getFileSystem(conf).delete(jp, True)
-                removed += 1
+        for p in _hadoop_glob(spark, f"{corpus_path.rstrip('/')}.staging-*"):
+            _hadoop_delete(spark, p, recursive=True)
+            removed += 1
     except Exception:
         _LOG.warning(
             "streaming_ingest: staging sweep under %s failed", corpus_path,
@@ -364,19 +343,7 @@ def _pending_dir(indexed_path: str) -> str:
 
 
 def _list_pending(spark, indexed_path: str) -> list:
-    from pq_vector_spark.index.build import _hadoop_glob, _local_root
-
-    base = _pending_dir(indexed_path)
-    root = _local_root(base)
-    if root is not None:
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(root)
-            if d.startswith("batch-")
-        )
-    return sorted(_hadoop_glob(spark, f"{base}/batch-*"))
+    return sorted(_hadoop_glob(spark, f"{_pending_dir(indexed_path)}/batch-*"))
 
 
 def drain_pending_appends(
@@ -648,24 +615,9 @@ def streaming_index_ingest(
         _rb["thread"] = th
         th.start()
 
-    def _marker_exists(spark, marker: str) -> bool:
-        from pq_vector_spark.index.build import _hadoop_glob, _local_root
-
-        root = _local_root(marker)
-        if root is not None:
-            return os.path.isfile(root)
-        return bool(_hadoop_glob(spark, marker))
-
-    def _write_marker(spark, marker: str, body: str) -> None:
-        from pq_vector_spark.index.build import _write_text
-
-        _write_text(spark, marker, body)
-
     def _read_marker_appended(spark, marker: str) -> int:
         """Recorded appended count of the crashed attempt (0 when the
         marker body is unreadable — accounting degrades, never the data)."""
-        from pq_vector_spark.index.build import _read_text
-
         try:
             return int(json.loads(_read_text(spark, marker)).get("appended", 0))
         except Exception:
@@ -676,7 +628,6 @@ def streaming_index_ingest(
         weight (only the in-flight batch can replay); keep the current and
         previous batch, delete the rest — bounds both the file count and
         the per-batch existence probe's directory size."""
-        from pq_vector_spark.index.build import _hadoop_glob, _local_root
 
         def batch_of(name: str):
             try:
@@ -684,26 +635,11 @@ def streaming_index_ingest(
             except (IndexError, ValueError):
                 return None
 
-        root = _local_root(marker_base)
-        if root is not None:
-            if not os.path.isdir(root):
-                return
-            for name in os.listdir(root):
-                b = batch_of(name)
-                if b is not None and b < batch_id - 1:
-                    try:
-                        os.remove(os.path.join(root, name))
-                    except OSError:
-                        pass
-            return
         try:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
             for p in _hadoop_glob(spark, f"{marker_base}/batch-*"):
                 b = batch_of(p)
                 if b is not None and b < batch_id - 1:
-                    jp = jvm.org.apache.hadoop.fs.Path(p)
-                    jp.getFileSystem(conf).delete(jp, False)
+                    _hadoop_delete(spark, p, recursive=False)
         except Exception:
             pass  # pruning is best-effort housekeeping
 
@@ -712,7 +648,7 @@ def streaming_index_ingest(
         marker = (
             f"{marker_base}/batch-{int(batch_id)}" if marker_base else None
         )
-        replayed = bool(marker) and _marker_exists(spark, marker)
+        replayed = bool(marker) and _hadoop_exists(spark, marker)
         first_batch = _seen["first"]
         suspected = _seen["first"] or (
             _seen["max"] is not None and batch_id <= _seen["max"]
@@ -852,7 +788,7 @@ def streaming_index_ingest(
                 if cached is not None:
                     cached.unpersist()
             if marker:
-                _write_marker(
+                _write_text(
                     spark, marker, f'{{"appended": {result["appended"]}}}\n'
                 )
         if marker:

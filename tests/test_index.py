@@ -187,16 +187,15 @@ def test_adhoc_ivf_exact_envelope(spark, golden_vectors):
 
 
 def test_has_index_file_url_and_hadoop_fs(spark, indexed_table):
-    """The probe works on URL-form paths, and the Hadoop FileSystem branch
-    reads the very same sidecar (exercised against LocalFS via file://)."""
+    """The probe works on URL-form paths, and the sidecar reader gives the
+    same sidecar for a file:// URL as for the plain path."""
     from pq_vector_spark.index.build import _hadoop_glob
-    from pq_vector_spark.index.search import _load_sidecar_hadoop
+    from pq_vector_spark.index.search import _load_sidecar
 
     url = "file://" + indexed_table["out"]
     assert has_index(url, spark=spark)
-    # force the Hadoop-API branch directly: glob + byte-read through the JVM
     assert _hadoop_glob(spark, f"{url}/_pq_index/meta/part-*")
-    meta, cents = _load_sidecar_hadoop(spark, url)
+    meta, cents, _, _ = _load_sidecar(spark, url)
     idx = load_index(spark, indexed_table["out"])
     assert meta == idx.meta
     assert np.array_equal(cents, idx.centroids)
@@ -368,31 +367,27 @@ def test_capped_query_fills_cap_exactly(spark, indexed_table):
 # ---------------- Hadoop-complete build path (round-3) ----------------
 
 
-def test_hadoop_build_path_keeps_file_stats(spark, tmp_path, monkeypatch):
-    """Force the Hadoop-FS branch on a file:// URL: the sidecar and the
-    full file_stats (+ per-cluster counts) must round-trip identically to
-    the local branch, with zero Spark jobs for the sidecar/footer I/O."""
-    import pq_vector_spark.index.build as B
-
+def test_hadoop_build_path_keeps_file_stats(spark, tmp_path):
+    """A build given file:// URLs keeps the full file_stats (+ per-cluster
+    counts), and its sidecar reads back identically through the plain path
+    and the URL."""
     rng = np.random.default_rng(77)
     src = str(tmp_path / "hsrc.parquet")
     out = str(tmp_path / "hout")
     rows = [(int(i), [float(x) for x in rng.random(8, dtype=np.float32)]) for i in range(500)]
     spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>").repartition(2).write.parquet(src)
 
-    monkeypatch.setattr(B, "_FORCE_HADOOP", True)
     meta = build_index(
         spark, "file://" + src, "file://" + out,
         column="vec", options=IndexBuildOptions(n_clusters=8),
     )
     assert "file_stats" in meta and all("counts" in f for f in meta["file_stats"])
-    # sidecar readable through BOTH readers
-    monkeypatch.setattr(B, "_FORCE_HADOOP", False)
+    # sidecar readable through both path forms
     idx = load_index(spark, out)
     assert idx.meta["file_stats"] == meta["file_stats"]
-    from pq_vector_spark.index.search import _load_sidecar_hadoop
+    from pq_vector_spark.index.search import _load_sidecar
 
-    hmeta, hcents = _load_sidecar_hadoop(spark, "file://" + out)
+    hmeta, hcents, _, _ = _load_sidecar(spark, "file://" + out)
     assert hmeta == idx.meta and hcents.shape == (8, 8)
 
     # capped round-trip on the hadoop-built layout
@@ -408,7 +403,7 @@ def test_hadoop_build_path_keeps_file_stats(spark, tmp_path, monkeypatch):
     assert obs.get["candidate_rows"] == 32
 
 
-def test_hadoop_sidecar_and_footer_io_run_zero_jobs(spark, tmp_path, monkeypatch):
+def test_hadoop_sidecar_and_footer_io_run_zero_jobs(spark, tmp_path):
     """The driver-side Hadoop FS sidecar write + footer stats read must not
     launch Spark jobs (the reference's object-store footer I/O is likewise
     job-free, src/ivf/parquet.rs:176-208)."""
@@ -420,7 +415,6 @@ def test_hadoop_sidecar_and_footer_io_run_zero_jobs(spark, tmp_path, monkeypatch
     spark.createDataFrame(
         [(i, i % 4) for i in range(100)], f"id INT, {CLUSTER_COL} INT"
     ).coalesce(1).write.parquet(d)
-    monkeypatch.setattr(B, "_FORCE_HADOOP", True)
 
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
@@ -839,17 +833,23 @@ def test_load_index_sidecar_cache_hits_and_invalidates(spark, tmp_path):
         spark, src, out, column="embedding", options=IndexBuildOptions(n_clusters=4)
     )
     i1 = S.load_index(spark, out)
-    # warm hit: the raw sidecar readers must NOT run again
-    real = S._load_sidecar_local
+    # warm hit: no glob and no byte read, just one stat of the meta file
+    stats = []
+    real_stat = S._hadoop_stat
 
-    def boom(p):
-        raise AssertionError("sidecar bytes re-read on a warm load")
+    def boom(*a, **k):
+        raise AssertionError("sidecar globbed or re-read on a warm load")
 
-    S._load_sidecar_local = boom
-    try:
+    def stat(spark_, p):
+        stats.append(p)
+        return real_stat(spark_, p)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(S, "_hadoop_glob", boom)
+        m.setattr(S, "_hadoop_read_bytes", boom)
+        m.setattr(S, "_hadoop_stat", stat)
         i2 = S.load_index(spark, out)
-    finally:
-        S._load_sidecar_local = real
+    assert len(stats) == 1 and stats[0].endswith("/_pq_index/meta/part-00000")
     assert i2.meta == i1.meta
     assert i2.centroids is i1.centroids  # shared matrix, no re-parse
     # per-call meta copies: caller mutation is invisible to later loads
@@ -865,6 +865,129 @@ def test_load_index_sidecar_cache_hits_and_invalidates(spark, tmp_path):
     assert i3.meta["row_count"] == 130
     # use_cache=False always reads storage
     assert S.load_index(spark, out, use_cache=False).meta["row_count"] == 130
+
+
+# ---------------- one metadata I/O path for every path form ----------------
+
+
+def _metadata_lifecycle(spark, layout, codes, src, extra):
+    """build → append → cold and warm load → register codes → stale
+    rebuild (swap) → unregister → pending-appends listing and drain on one
+    layout; returns what each step left in the sidecar."""
+    import pq_vector_spark.index.build as B
+    import pq_vector_spark.index.search as S
+    from pq_vector_spark.index.pq import encode_indexed, train_pq
+    from pq_vector_spark.plans.intercept import (
+        _load_codes_registration,
+        register_codes_sidecar,
+        unregister_codes_sidecar,
+    )
+    from pq_vector_spark.streaming.ingest import _list_pending, drain_pending_appends
+
+    B.build_index(spark, src, layout, column="vec", options=IndexBuildOptions(n_clusters=4))
+    assert has_index(layout, spark=spark)
+    B.append_to_index(spark, extra, layout)
+    S._SIDECAR_CACHE.clear()
+    cold = load_index(spark, layout)
+    warm = load_index(spark, layout)
+    assert warm.centroids is cold.centroids and warm.meta == cold.meta
+
+    cb = train_pq(spark.read.parquet(src), "vec", m=2, nbits=4, seed=7)
+    encode_indexed(spark, layout, codes, "vec", "id", cb)
+    register_codes_sidecar(layout, codes, cb, id_col="id", spark=spark)
+    assert _load_codes_registration(spark, layout)[1][3] == 260
+
+    res = B.auto_rebuild_if_stale(spark, layout)
+    assert res["rebuilt"] and res["health"]["appended_rows"] == 60
+    for debris in (".rebuild", ".retired"):
+        assert not B._hadoop_exists(spark, layout + debris)
+    assert not B._rebuild_sentinel_exists(spark, layout)
+    rebuilt = load_index(spark, layout)
+    found, sidecar = _load_codes_registration(spark, layout)
+    assert found and sidecar[3] == 260  # re-encoded, re-registered
+    unregister_codes_sidecar(layout, spark=spark)
+    assert _load_codes_registration(spark, layout) == (False, None)
+
+    extra.limit(5).write.parquet(f"{layout}.pending-appends/batch-3")
+    pending = _list_pending(spark, layout)
+    assert [p.rsplit("/", 1)[-1] for p in pending] == ["batch-3"]
+    assert drain_pending_appends(spark, layout) == 5
+    assert _list_pending(spark, layout) == []
+    drained = load_index(spark, layout)
+    return {
+        "appended": cold,
+        "rebuilt": rebuilt,
+        "drained_rows": drained.meta["row_count"],
+        "data_rows": spark.read.parquet(layout).count(),
+    }
+
+
+def _files_unnamed(meta):
+    """A meta with part-file names dropped: every write names its files
+    afresh, the rest must match."""
+    out = dict(meta)
+    out["file_stats"] = sorted(
+        (f["groups"], f["counts"]) for f in meta.get("file_stats", [])
+    )
+    return out
+
+
+def test_metadata_lifecycle_same_for_plain_path_and_file_url(spark, tmp_path):
+    """The whole metadata lifecycle runs through one Hadoop FileSystem
+    path, so a plain path and a file:// URL leave identical sidecars."""
+    rng = np.random.default_rng(21)
+    vecs = rng.random((260, 4), dtype=np.float32)
+    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
+    src = str(tmp_path / "life_src")
+    spark.createDataFrame(rows[:200], "id INT, vec ARRAY<FLOAT>").coalesce(1).write.parquet(src)
+    extra = spark.createDataFrame(rows[200:], "id INT, vec ARRAY<FLOAT>")
+    got = {}
+    for form, prefix in (("plain", ""), ("url", "file://")):
+        got[form] = _metadata_lifecycle(
+            spark,
+            prefix + str(tmp_path / f"life_{form}"),
+            prefix + str(tmp_path / f"codes_{form}"),
+            src,
+            extra,
+        )
+    plain, url = got["plain"], got["url"]
+    for step in ("appended", "rebuilt"):
+        assert _files_unnamed(plain[step].meta) == _files_unnamed(url[step].meta), step
+        assert np.array_equal(plain[step].centroids, url[step].centroids), step
+    assert plain["appended"].meta["row_count"] == 260
+    assert plain["rebuilt"].meta["n_clusters"] == 17  # ceil(sqrt(260))
+    assert plain["drained_rows"] == url["drained_rows"] == 265
+    assert plain["data_rows"] == url["data_rows"] == 265
+
+
+def test_layout_written_without_checksums_still_loads(spark, tmp_path):
+    """Sidecars, registrations and sentinels used to be written to local
+    disk directly, with no Hadoop ``.crc`` checksum files beside them.
+    Such a layout still loads, and the next sidecar write goes on from it."""
+    import pq_vector_spark.index.search as S
+    from pq_vector_spark.index.build import INDEX_DIR, append_to_index
+
+    out = _small_stale_index(spark, tmp_path)
+    built = load_index(spark, out, use_cache=False)
+    crcs = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(os.path.join(out, INDEX_DIR))
+        for f in files
+        if f.endswith(".crc")
+    ]
+    assert crcs
+    for f in crcs:
+        os.remove(f)
+    S._SIDECAR_CACHE.clear()
+    assert has_index(out, spark=spark)
+    old = load_index(spark, out)
+    assert old.meta == built.meta
+    assert np.array_equal(old.centroids, built.centroids)
+    extra = spark.createDataFrame(
+        [(800, [3.0, 3.0])], "vec_id: bigint, embedding: array<float>"
+    )
+    append_to_index(spark, extra, out)
+    assert load_index(spark, out).meta["row_count"] == 131
 
 
 # ---------------- re-rank kernel choice on a wide (dim-256) index ----------

@@ -837,6 +837,11 @@ def test_corrupt_persisted_registration_degrades_to_ivf(spark, icpt_table, tmp_p
     reg_file = _os.path.join(icpt_table["out"], INDEX_DIR, CODES_REG_FILE)
     with open(reg_file, "w") as f:
         f.write("{not json")
+    # drop the Hadoop checksum of the old bytes, so the JSON itself is
+    # what fails to read
+    crc = _os.path.join(icpt_table["out"], INDEX_DIR, f".{CODES_REG_FILE}.crc")
+    if _os.path.exists(crc):
+        _os.remove(crc)
     try:
         _CODES_SIDECARS.clear()
         q = (

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pq_vector_spark.index.build import build_index
+from pq_vector_spark.plans.explain import vector_route
 from pq_vector_spark.plans.sql import (
     _TOPK_RE,
     expand_vector_functions,
@@ -31,8 +32,9 @@ def sql_table(spark, tmp_path_factory):
 def test_topk_shape_matches(spark, sql_table):
     q = "SELECT id FROM sql_vectors ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 5"
     assert _TOPK_RE.match(q)
-    out = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8)).collect()
-    assert len(out) == 5
+    df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8))
+    assert vector_route(df) == "ivf"
+    assert len(df.collect()) == 5
 
 
 def test_indexed_route_equals_brute_force(spark, sql_table):
@@ -48,7 +50,9 @@ def test_where_clause_applied(spark, sql_table):
         "SELECT id FROM sql_vectors WHERE id >= 100 "
         "ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 5"
     )
-    out = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8)).collect()
+    df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8))
+    assert vector_route(df) == "ivf"
+    out = df.collect()
     assert len(out) == 5
     assert all(r["id"] >= 100 for r in out)
 
@@ -59,8 +63,9 @@ def test_desc_falls_through(spark, sql_table):
         "SELECT id FROM sql_vectors "
         "ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) DESC LIMIT 3"
     )
-    out = pq_sql(spark, q).collect()
-    assert len(out) == 3  # still answered (brute force), not an error
+    df = pq_sql(spark, q)
+    assert vector_route(df) == "brute-force"
+    assert len(df.collect()) == 3  # still answered (brute force), not an error
 
 
 def test_offset_falls_through(spark, sql_table):
@@ -69,8 +74,9 @@ def test_offset_falls_through(spark, sql_table):
         "SELECT id FROM sql_vectors "
         "ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 3 OFFSET 1"
     )
-    out = pq_sql(spark, q).collect()
-    assert len(out) == 3
+    df = pq_sql(spark, q)
+    assert vector_route(df) == "brute-force"
+    assert len(df.collect()) == 3
 
 
 def test_non_topk_sql_passthrough(spark, sql_table):
@@ -89,6 +95,47 @@ def test_cosine_expansion_runs(spark):
         "SELECT cosine_similarity(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c",
     ).collect()[0]["c"]
     assert got == pytest.approx(1.0)
+
+
+def test_registered_functions_match_expansions_bit_for_bit(spark):
+    """The registered temp functions and the pq_sql expansions come from
+    one template table: each pair returns the same doubles bit for bit,
+    over a NULL row, a dim-mismatch row and a zero-norm row too."""
+    import struct
+
+    from pq_vector_spark.functions.distance import SQL_TEMPLATES, register_sql_functions
+
+    register_sql_functions(spark)
+    rows = [
+        (0, [1.0, 2.0, 3.0]),
+        (1, None),
+        (2, [1.0, 2.0]),
+        (3, [0.0, 0.0, 0.0]),
+        (4, [0.1, -1.5, 2.3]),
+    ]
+    spark.createDataFrame(rows, "id INT, v ARRAY<DOUBLE>").createOrReplaceTempView(
+        "template_rows"
+    )
+    q = "array(0.7D, -1.0D, 4.1D)"
+
+    def bits(x):
+        return None if x is None else ("nan" if x != x else struct.pack("<d", x))
+
+    for name, template in sorted(SQL_TEMPLATES.items()):
+        got = spark.sql(
+            f"SELECT id, {name}(v, {q}) AS f, {template.format(a='v', b=q)} AS e "
+            "FROM template_rows ORDER BY id"
+        ).collect()
+        assert [(r["id"], bits(r["f"])) for r in got] == [
+            (r["id"], bits(r["e"])) for r in got
+        ], name
+        by_id = {r["id"]: r["f"] for r in got}
+        assert by_id[1] is None and by_id[2] is None, name  # NULL, dim mismatch
+        assert by_id[0] is not None and by_id[4] is not None, name
+        if name == "cosine_similarity":
+            assert by_id[3] != by_id[3]  # zero norm: NaN
+        else:
+            assert by_id[3] is not None
 
 
 # -------------------- adversarial parser hardening (round-2) --------------------
@@ -119,7 +166,9 @@ def test_projection_with_function_commas(spark, sql_table):
         "SELECT id, round(array_distance(vec, [0.5, 0.5, 0.5, 0.5]), 2) AS d "
         "FROM sql_vectors ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 4"
     )
-    out = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8)).collect()
+    df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8))
+    assert vector_route(df) == "ivf"
+    out = df.collect()
     assert len(out) == 4
     assert set(out[0].asDict()) == {"id", "d"}
 
@@ -132,7 +181,9 @@ def test_quoted_literal_with_comma_and_keywords(spark, sql_table_str):
         "WHERE name != 'x, ORDER BY array_distance(vec, [9]) LIMIT 1' "
         "ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 5"
     )
-    got = [r["id"] for r in pq_sql(spark, q, options=VectorTopKOptions(nprobe=4)).collect()]
+    df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=4))
+    assert vector_route(df) == "ivf"
+    got = [r["id"] for r in df.collect()]
     brute = [r["id"] for r in spark.sql(expand_vector_functions(
         "SELECT id FROM sql_vectors_str "
         "ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]), id LIMIT 5"
@@ -165,7 +216,9 @@ def test_qualified_sort_column(spark, sql_table):
         "SELECT id FROM sql_vectors "
         "ORDER BY array_distance(sql_vectors.vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 5"
     )
-    got = [r["id"] for r in pq_sql(spark, q, options=VectorTopKOptions(nprobe=8)).collect()]
+    df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8))
+    assert vector_route(df) == "ivf"
+    got = [r["id"] for r in df.collect()]
     plain = [r["id"] for r in pq_sql(
         spark,
         "SELECT id FROM sql_vectors ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 5",
