@@ -327,11 +327,7 @@ def _unrolled_expr(kind: str, raw, q) -> "Column | None":
     else:  # pragma: no cover - internal misuse
         return None
     chain = " + ".join(terms)  # + is left-associative: same fold order
-    sql = f"CASE WHEN size({base}) = {len(vals)} THEN {chain} END"
-    try:
-        return F.expr(sql)
-    except Exception:
-        return None
+    return F.expr(f"CASE WHEN size({base}) = {len(vals)} THEN {chain} END")
 
 
 # Wide literal queries scoring at most this many vector elements (rows_hint ×

@@ -377,6 +377,41 @@ def token_hash(col_or_expr) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
+# SQL text shared by every operator that renders its expression as one
+# parsed SQL string (the n-gram featurizers here and in operators/dedup.py,
+# bm25_topk, the RRF fusion in operators/hybrid.py). Building those HOF
+# trees one Column op at a time cost a py4j round trip per op, paid at
+# every plan construction (r16); the SQL text is parsed JVM-side in one
+# call instead. These operators take column NAMES only: a Column has no
+# faithful SQL text. `__pqlv_` lambda names cannot collide with real
+# columns (lambda scope wins regardless).
+
+
+def _sql_ident(name: str) -> str:
+    """Backquoted SQL identifier for a column name."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"a column name (str) is required, got {type(name).__name__}"
+        )
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_double(v: float) -> str:
+    """Exact double literal: Java's parseDouble round-trips Python's repr,
+    and constant folding collapses the cast to a plain Literal."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _tokens_sql(ref: str) -> str:
+    # the SQL form of tokens(): split(lower(trim(c)), '\s+')
+    return f"split(lower(trim({ref})), '\\\\s+')"
+
+
+def _token_hash_sql(x: str) -> str:
+    # the SQL form of token_hash()
+    return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def gram_hash_fn(family: str, param: str = "gram_hash"):
     """Shared gram/bucket hash-family dispatch: ``"portable"`` → the
     md5-derived :func:`token_hash` an external engine replays
@@ -429,7 +464,6 @@ def ngram_doc_frequency(df, text_col: str, n: int = 3, top: int = 20):
     """
     from pq_vector_spark.operators.dedup import shingles  # runtime: avoids cycle
 
-    # string name, not F.col(...): lets the one-shot SQL render fire (r16)
     ex = df.select(F.explode(shingles(text_col, n)).alias("ngram"))
     return (
         ex.groupBy("ngram")
@@ -518,32 +552,52 @@ def tfidf_top_terms(df, text_col: str, id_col: str, top: int = 3):
     )
 
 
-def _bm25_sql(df, text_col, id_col, terms, k, k1, b):
-    """One-shot parsed SQL form of the full bm25_topk pipeline (r17).
-    Returns None unless both column args are plain string names. Every
-    CTE mirrors the Column-builder step of the same name below —
-    identical functions, identical literal placement, identical hint
-    sites — so the analyzed plan and all values match the Column path
-    bit-for-bit (equivalence pinned by tests). Float literals render via
-    CAST('<repr>' AS DOUBLE): Java's parseDouble round-trips Python's
-    repr exactly, and constant folding collapses the cast to the same
-    Literal the Column path builds."""
+def bm25_topk(
+    df,
+    text_col: str,
+    id_col: str,
+    query_terms: Sequence[str],
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+):
+    """BM25 document ranking for a literal bag of query terms — the search
+    primitive for relevance-filtering a corpus against a topic list.
+
+    Per matched (doc, term): ``idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))``
+    with the Robertson-Sparck-Jones idf in its always-positive "+1" form
+    ``ln(1 + (N − df_t + 0.5)/(df_t + 0.5))``; summed per doc, top-k by
+    (score desc, id asc). No query terms → an empty frame of the same
+    schema.
+
+    Scale shape: the query-term filter lands immediately on the exploded
+    stream, so everything after it carries only matching (doc, term) pairs
+    — a tiny fraction of the corpus; document length and the two corpus
+    scalars (N, avgdl) ride along as one broadcast each; the final top-k is
+    TakeOrderedAndProject (bounded heap, no global sort). df_t is tf's row
+    count per term (r17): tf keys on (_id, dl, term) and dl follows from
+    _id, so that is the distinct-doc count, and the tf exchange executes
+    once (ReusedExchange) instead of a second tokenize+explode scan. The
+    always-true ``tf > 0`` keeps tf referenced in that branch; without it
+    column pruning de-canonicalizes the two exchanges.
+
+    The whole pipeline is ONE ``spark.sql`` call (r17): as ~10 eager
+    DataFrame ops it re-analyzed the growing plan per op (~12-16 ms each).
+    Query terms are bound as named parameters, so a quote or backslash in
+    a term reaches the filter verbatim under either string-escape setting
+    of the parser. Column names only (``TypeError`` for a Column).
+    """
     tref, iref = _sql_ident(text_col), _sql_ident(id_col)
-    if tref is None or iref is None:
-        return None
-
-    def dlit(v: float) -> str:
-        return f"CAST('{float(v)!r}' AS DOUBLE)"
-
-    in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
+    terms = {f"t{i}": str(t).lower() for i, t in enumerate(query_terms)}
+    match = f"term IN ({', '.join(':' + p for p in terms)})" if terms else "false"
+    d = _sql_double
     idf = (
-        f"LN({dlit(1.0)} + (CAST(_n AS DOUBLE) - df_t + {dlit(0.5)}) "
-        f"/ (CAST(df_t AS DOUBLE) + {dlit(0.5)}))"
+        f"LN({d(1.0)} + (CAST(_n AS DOUBLE) - df_t + {d(0.5)}) "
+        f"/ (CAST(df_t AS DOUBLE) + {d(0.5)}))"
     )
     tf_part = (
-        f"(CAST(tf AS DOUBLE) * {dlit(k1 + 1.0)}) / (CAST(tf AS DOUBLE) "
-        f"+ {dlit(k1)} * ({dlit(1.0 - b)} + {dlit(b)} * CAST(dl AS DOUBLE) "
-        f"/ avgdl))"
+        f"(CAST(tf AS DOUBLE) * {d(k1 + 1.0)}) / (CAST(tf AS DOUBLE) "
+        f"+ {d(k1)} * ({d(1.0 - b)} + {d(b)} * CAST(dl AS DOUBLE) / avgdl))"
     )
     q = f"""
 WITH base AS (
@@ -553,7 +607,7 @@ WITH base AS (
 toks AS (
   SELECT _id, dl, term FROM base
   LATERAL VIEW explode(_toks) AS term
-  WHERE term IN ({in_list})
+  WHERE {match}
 ),
 tf AS (
   SELECT _id, dl, term, CAST(count(1) AS BIGINT) AS tf
@@ -581,113 +635,7 @@ SELECT _id AS {iref}, score FROM (
   ORDER BY score DESC, _id ASC LIMIT {int(k)}
 )
 """
-    try:
-        return df.sparkSession.sql(q, df=df)
-    except Exception:
-        return None
-
-
-def bm25_topk(
-    df,
-    text_col: str,
-    id_col: str,
-    query_terms: Sequence[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-):
-    """BM25 document ranking for a literal bag of query terms — the search
-    primitive for relevance-filtering a corpus against a topic list.
-
-    Per matched (doc, term): ``idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))``
-    with the Robertson-Sparck-Jones idf in its always-positive "+1" form
-    ``ln(1 + (N − df_t + 0.5)/(df_t + 0.5))``; summed per doc, top-k by
-    (score desc, id asc).
-
-    Scale shape: the query-term filter lands immediately on the exploded
-    stream, so everything after it carries only matching (doc, term) pairs
-    — a tiny fraction of the corpus; document length and the two corpus
-    scalars (N, avgdl) ride along as one broadcast each; the final top-k is
-    TakeOrderedAndProject (bounded heap, no global sort).
-    """
-    terms = [str(t).lower() for t in query_terms]
-    # r17 (guide §4 driver boundary, the r16 one-shot-SQL pattern at
-    # operator scope): the Column-built pipeline below is ~10 eager
-    # DataFrame ops, each re-analyzing the growing plan (~12-16 ms/op,
-    # measured via cProfile — hybrid_rrf's construction was ~45 ops ≈
-    # 0.5 s of pure driver time). For plain string column names the
-    # WHOLE leg parses as ONE spark.sql call; the SQL mirrors the
-    # builders token-for-token (same functions, same literal placement,
-    # same hint sites), so the analyzed tree and every value are
-    # identical — pinned by test_bm25_sql_path_matches_column_path and
-    # the oracle rows of text_bm25/hybrid_rrf. Column inputs and any
-    # parse failure fall back to the Column path.
-    rendered = _bm25_sql(df, text_col, id_col, terms, k, k1, b)
-    if rendered is not None:
-        return rendered
-    # (r16: a conditional pre-tokenize spread was MEASURED here and
-    # reverted — same result as tfidf_top_terms: the exchange cost more
-    # than the parallelized tokenization saved.)
-    # r17 (guide §4 driver boundary): classic DataFrame ops re-analyze the
-    # whole plan eagerly per call (~10-20 ms each on these trees), so the
-    # construction below fuses every former withColumn into its adjacent
-    # projection — select("*", e.alias(n)) builds the identical Project
-    # node (no name conflicts anywhere here) in one analysis pass.
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        tokens(text_col).alias("_toks"),
-    ).select("*", F.size("_toks").cast("bigint").alias("dl"))
-    toks = base.select(
-        "_id", "dl", F.explode("_toks").alias("term")
-    ).filter(F.col("term").isin(terms))
-    tf = toks.groupBy("_id", "dl", "term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    # r17 (guide §2.4, same move as tfidf_top_terms): df_t = tf's row
-    # count per term — tf keys on (_id, dl, term) and dl is functionally
-    # determined by _id, so the per-term row count equals the old
-    # distinct-(_id, term) count exactly. The always-true ``tf > 0``
-    # guard keeps tf referenced so column pruning cannot de-canonicalize
-    # the branch (see tfidf_top_terms above); the tf exchange is then
-    # reused at runtime (ReusedExchange) instead of a second
-    # tokenize+explode scan feeding its own distinct exchange. The
-    # per-doc float score sum is untouched: its probe side (tf) and
-    # aggregation shape are identical, only the broadcast build side's
-    # lineage changed — same values in the same order (attested by the
-    # oracle rows of text_bm25/hybrid_rrf).
-    dfreq = (
-        tf.filter(F.col("tf") > 0)
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df_t"))
-    )
-    stats = base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n"),
-        F.sum("dl").cast("double").alias("_total_dl"),
-    ).select(
-        "*", (F.col("_total_dl") / F.col("_n").cast("double")).alias("avgdl")
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("_n").cast("double") - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t").cast("double") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
-        F.col("tf").cast("double")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl"))
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("*", (idf * tf_part).alias("_s"))
-    )
-    return (
-        scored.groupBy("_id")
-        .agg(F.round(F.sum("_s"), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("_id").asc())
-        .limit(k)
-        .select(F.col("_id").alias(id_col), "score")
-    )
+    return df.sparkSession.sql(q, args=terms, df=df)
 
 
 # PII patterns deliberately restricted to syntax with identical semantics
@@ -720,42 +668,7 @@ def pii_count(col, kind: str) -> Column:
     return F.regexp_count(c, F.lit(PII_PATTERNS[kind])).cast("bigint")
 
 
-# One-shot parsed SQL forms of the n-gram featurizers (r16): building
-# these HOF trees one Column op at a time costs a py4j round trip per op,
-# paid at EVERY plan construction (DSIR fits this twice per call, winnow
-# and decontaminate once each). The SQL mirrors the Column builders
-# token-for-token — same functions, same literal placement, same CASE
-# shape — so the analyzed tree and every value are identical (pinned by
-# tests/test_text.py equivalence tests and the oracle rows of every
-# consumer). Fires only for plain string column names; Column inputs and
-# any parse failure fall back to the Column builders. `__pqlv_` lambda
-# names cannot collide with real columns (lambda scope wins regardless).
-
-
-def _sql_ident(col) -> "str | None":
-    """Backquoted SQL identifier for a plain column NAME, else None."""
-    if isinstance(col, str):
-        return "`" + col.replace("`", "``") + "`"
-    return None
-
-
-def _tokens_sql(ref: str) -> str:
-    # mirrors tokens() above: split(lower(trim(c)), '\s+')
-    return f"split(lower(trim({ref})), '\\\\s+')"
-
-
-def _token_ngrams_sql(ref: str, n: int) -> str:
-    # mirrors _token_ngrams() below, token for token
-    return (
-        f"transform(array({_tokens_sql(ref)}), __pqlv_t -> "
-        f"CASE WHEN (size(__pqlv_t) >= {int(n)}) THEN "
-        f"transform(sequence(1, greatest(size(__pqlv_t) - {int(n) - 1}, 1)), "
-        f"__pqlv_i -> concat_ws(' ', slice(__pqlv_t, __pqlv_i, {int(n)}))) "
-        f"ELSE CAST(array() AS array<string>) END)[0]"
-    )
-
-
-def _token_ngrams(col, n: int) -> Column:
+def _token_ngrams(col: str, n: int) -> Column:
     """NON-distinct token n-grams (the dedup module's ``shingles`` is
     distinct — repetition metrics need the multiplicity). Same
     bind-the-token-array trick: a free subtree inside an HOF lambda
@@ -765,25 +678,16 @@ def _token_ngrams(col, n: int) -> Column:
     truncated pseudo-gram, no empty-string gram for empty docs) — a
     repetition filter keyed on these ratios must see NULL, not 1.0, for
     docs that have no n-grams at all."""
-    ref = _sql_ident(col)
-    if ref is not None:
-        try:
-            return F.expr(_token_ngrams_sql(ref, n))
-        except Exception:
-            pass
-    return F.transform(
-        F.array(tokens(col)),
-        lambda toks: F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )[0]
+    return F.expr(
+        f"transform(array({_tokens_sql(_sql_ident(col))}), __pqlv_t -> "
+        f"CASE WHEN (size(__pqlv_t) >= {int(n)}) THEN "
+        f"transform(sequence(1, greatest(size(__pqlv_t) - {int(n) - 1}, 1)), "
+        f"__pqlv_i -> concat_ws(' ', slice(__pqlv_t, __pqlv_i, {int(n)}))) "
+        f"ELSE CAST(array() AS array<string>) END)[0]"
+    )
 
 
-def _token_ngrams_upto(col, n_max: int) -> Column:
+def _token_ngrams_upto(col: str, n_max: int) -> Column:
     """All NON-distinct token n-grams for n = 1..``n_max`` with ONE
     tokenization — the multiset equals concatenating
     ``_token_ngrams(col, n)`` per n (same per-n edge cases: a doc with
@@ -793,40 +697,16 @@ def _token_ngrams_upto(col, n_max: int) -> Column:
     rewrite): at 1M docs the per-n re-tokenization was the residual cost
     of the gram explode — the regex split over the full text dominates
     per-doc work, and n_max separate ``tokens()`` subtrees paid it
-    n_max times. String column names take the one-shot parsed SQL path
-    (identical tree — see the r16 note above ``_token_ngrams``)."""
-    ref = _sql_ident(col)
-    if ref is not None:
-        try:
-            return F.expr(
-                f"transform(array({_tokens_sql(ref)}), __pqlv_t -> "
-                f"flatten(transform(sequence(1, {int(n_max)}), __pqlv_n -> "
-                f"CASE WHEN (size(__pqlv_t) >= __pqlv_n) THEN "
-                f"transform(sequence(1, greatest(size(__pqlv_t) - "
-                f"(__pqlv_n - 1), 1)), __pqlv_i -> "
-                f"concat_ws(' ', slice(__pqlv_t, __pqlv_i, __pqlv_n))) "
-                f"ELSE CAST(array() AS array<string>) END)))[0]"
-            )
-        except Exception:
-            pass
-    return F.transform(
-        F.array(tokens(col)),
-        lambda toks: F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(int(n_max))),
-                lambda n: F.when(
-                    F.size(toks) >= n,
-                    F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.greatest(F.size(toks) - (n - 1), F.lit(1)),
-                        ),
-                        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-                    ),
-                ).otherwise(F.array().cast("array<string>")),
-            )
-        ),
-    )[0]
+    n_max times."""
+    return F.expr(
+        f"transform(array({_tokens_sql(_sql_ident(col))}), __pqlv_t -> "
+        f"flatten(transform(sequence(1, {int(n_max)}), __pqlv_n -> "
+        f"CASE WHEN (size(__pqlv_t) >= __pqlv_n) THEN "
+        f"transform(sequence(1, greatest(size(__pqlv_t) - "
+        f"(__pqlv_n - 1), 1)), __pqlv_i -> "
+        f"concat_ws(' ', slice(__pqlv_t, __pqlv_i, __pqlv_n))) "
+        f"ELSE CAST(array() AS array<string>) END)))[0]"
+    )
 
 
 def unigram_logprob(df, text_col: str, id_col: str, smoothing: float = 1.0):

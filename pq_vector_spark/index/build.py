@@ -66,17 +66,14 @@ def sample_embeddings_to_driver(
     → 2.4 s for the 50k×256 semantic-fit sample, and the float values
     (hence the float32 matrix, hence every downstream centroid) are
     bit-identical: Arrow carries the exact same doubles in the same
-    partition-concatenation order. ``collect`` remains the fallback.
+    partition-concatenation order. A type Arrow cannot carry takes Spark's
+    own non-Arrow ``toPandas`` (``spark.sql.execution.arrow.pyspark.
+    fallback.enabled``, on by default).
     """
 
     def _fetch(sel) -> np.ndarray:
-        try:
-            vals = sel.toPandas()[column].to_numpy()
-            return np.asarray(list(vals), dtype=np.float32)
-        except Exception:
-            return np.asarray(
-                [r[0] for r in sel.collect()], dtype=np.float32
-            )
+        vals = sel.toPandas()[column].to_numpy()
+        return np.asarray(list(vals), dtype=np.float32)
 
     if target >= n_rows:
         out = _fetch(df.select(column))

@@ -12,7 +12,7 @@ search.
 Scale shape: both stages are already bounded-top-``pool`` lists (BM25's
 TakeOrdered heap, cosine's TakeOrdered heap), so the fusion join touches
 2·pool rows total regardless of corpus size — driver-negligible, executed
-as a broadcast-sized full-outer join. The corpus is scanned once per leg,
+as a union and one aggregation over those rows. The corpus is scanned once per leg,
 each leg in its optimal plan (exploded-term filter for BM25, map-side
 distance fold for cosine).
 """
@@ -21,13 +21,18 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from pq_vector_spark.functions.text import bm25_topk
+from pq_vector_spark.functions.text import _sql_double, _sql_ident, bm25_topk
 from pq_vector_spark.operators.similarity import cosine_topk
 
 RRF_K = 60  # the SIGIR'09 constant; callers override via k_rrf
+
+
+def _contrib_sql(k_rrf: int) -> str:
+    # one leg's RRF contribution for its `rank` column: 1 / (k_rrf + rank)
+    d = _sql_double
+    return f"{d(1.0)} / ({d(float(k_rrf))} + CAST(rank AS DOUBLE))"
 
 
 def rrf_fuse(
@@ -41,54 +46,16 @@ def rrf_fuse(
 
     Each input must carry ``id_col`` and an integer ``rank`` (1-based).
     Output: (id, rrf_score, n_lists) top-k by (score desc, id asc).
+
+    The whole fusion is ONE ``spark.sql`` call (r17): ~(4 + N) eager
+    DataFrame ops → 1. ``id_col`` must be a name (``TypeError`` for a
+    Column).
     """
     if not ranked:
         raise ValueError("rrf_fuse needs at least one ranked list")
-    # r17 (guide §4 driver boundary): the whole fusion parses as ONE
-    # spark.sql call — ~(4 + N) eager DataFrame ops → 1. The SQL mirrors
-    # the Column path below clause-for-clause (same aggregation over the
-    # same per-leg rows, so the float sum sees identical inputs in the
-    # identical partition layout); equivalence pinned by
-    # test_rrf_sql_path_matches_column_path and hybrid_rrf's oracle row.
-    rendered = _rrf_sql(ranked, id_col, k, k_rrf)
-    if rendered is not None:
-        return rendered
-    legs = [
-        df.select(
-            F.col(id_col).alias("_id"),
-            (F.lit(1.0) / (F.lit(float(k_rrf)) + F.col("rank").cast("double"))).alias(
-                "_contrib"
-            ),
-        )
-        for df in ranked
-    ]
-    allrows = legs[0]
-    for leg in legs[1:]:
-        allrows = allrows.unionByName(leg)
-    fused = allrows.groupBy("_id").agg(
-        F.sum("_contrib").alias("rrf_score"),
-        F.count(F.lit(1)).cast("int").alias("n_lists"),
-    )
-    return (
-        fused.orderBy(F.col("rrf_score").desc(), F.col("_id").asc())
-        .limit(k)
-        .select(F.col("_id").alias(id_col), "rrf_score", "n_lists")
-    )
-
-
-def _rrf_sql(ranked, id_col, k, k_rrf):
-    """One-shot SQL form of rrf_fuse (r17); None unless ``id_col`` is a
-    plain string name (the render's precondition, like text._bm25_sql)."""
-    if not isinstance(id_col, str):
-        return None
-    iref = "`" + id_col.replace("`", "``") + "`"
-
-    def dlit(v: float) -> str:
-        return f"CAST('{float(v)!r}' AS DOUBLE)"
-
+    iref = _sql_ident(id_col)
     leg_sql = [
-        f"SELECT {iref} AS _id, {dlit(1.0)} / ({dlit(float(k_rrf))} "
-        f"+ CAST(rank AS DOUBLE)) AS _contrib FROM {{leg{i}}}"
+        f"SELECT {iref} AS _id, {_contrib_sql(k_rrf)} AS _contrib FROM {{leg{i}}}"
         for i in range(len(ranked))
     ]
     q = (
@@ -103,18 +70,8 @@ def _rrf_sql(ranked, id_col, k, k_rrf):
         f"  SELECT * FROM fused ORDER BY rrf_score DESC, _id ASC LIMIT {int(k)}\n"
         ")"
     )
-    kwargs = {f"leg{i}": df for i, df in enumerate(ranked)}
-    try:
-        return ranked[0].sparkSession.sql(q, **kwargs)
-    except Exception:
-        return None
-
-
-def _with_rank(df: DataFrame, order, id_col: str) -> DataFrame:
-    # select("*", …) over withColumn: identical Project, one fewer eager
-    # analysis pass per leg (r17, guide §4 driver boundary)
-    w = Window.orderBy(*order)
-    return df.select("*", F.row_number().over(w).cast("int").alias("rank"))
+    legs = {f"leg{i}": df for i, df in enumerate(ranked)}
+    return ranked[0].sparkSession.sql(q, **legs)
 
 
 def hybrid_topk(
@@ -139,12 +96,19 @@ def hybrid_topk(
     text and an embedding column); pass a separate embeddings table plus
     ``vec_id_col`` for the split-table layout. ``pool`` defaults to 4·k —
     the usual fusion depth (deep enough that a result in the other list's
-    tail still contributes).
+    tail still contributes). With no query terms the lexical leg is empty
+    and the result is the semantic leg alone.
 
     The two candidate lists are each bounded heaps over a single corpus
     scan; the single-partition rank windows that number them run over
     ≤ pool pre-limited rows, so the fusion stage's cost is O(pool), not
     O(corpus).
+
+    Everything downstream of the two lists (per-leg rank windows, union,
+    RRF aggregation, top-k, final rank) is ONE ``spark.sql`` call (r17)
+    instead of ~12 eager DataFrame ops; each DataFrame-parameterized sql
+    call also pays ~30 ms of temp-view create/drop, so one call beats
+    four. Column names only (``TypeError`` for a Column).
 
     Output: (id, rrf_score, n_lists, rank) — rank is the final 1-based
     hybrid position.
@@ -152,55 +116,14 @@ def hybrid_topk(
     pool = pool or 4 * k
     vecs = vectors if vectors is not None else docs
     vid = vec_id_col or id_col
+    iref, vref = _sql_ident(id_col), _sql_ident(vid)
 
     lex = bm25_topk(docs, text_col, id_col, query_terms, k=pool, k1=k1, b=b)
     sem = cosine_topk(vecs, vec_col, list(query_vec), pool, id_col=vid)
 
-    # r17 (guide §4 driver boundary): everything downstream of the two
-    # candidate lists — per-leg rank windows, union, RRF aggregation,
-    # top-k, final rank — parses as ONE spark.sql call instead of ~12
-    # eager DataFrame ops (each parameterized-DataFrame sql call also
-    # pays ~30 ms of temp-view create/drop, so one call beats four). The
-    # SQL mirrors the Column fallback clause-for-clause; equivalence is
-    # pinned by test_hybrid_sql_fusion_matches_column_path and
-    # hybrid_rrf's oracle row.
-    fused_sql = _hybrid_fuse_sql(lex, sem, id_col, vid, k, k_rrf)
-    if fused_sql is not None:
-        return fused_sql
-
-    # bm25_topk output is already (id, score) sorted+limited; re-derive the
-    # 1-based rank deterministically from its own ordering contract
-    lex = _with_rank(
-        lex, [F.col("score").desc(), F.col(id_col).asc()], id_col
-    ).select(F.col(id_col).alias("_hid"), "rank")
-    sem = _with_rank(
-        sem, [F.col("cosine").desc(), F.col(vid).asc()], vid
-    ).select(F.col(vid).alias("_hid"), "rank")
-
-    fused = rrf_fuse([lex, sem], "_hid", k, k_rrf=k_rrf)
-    return _with_rank(
-        fused, [F.col("rrf_score").desc(), F.col("_hid").asc()], "_hid"
-    ).select(
-        F.col("_hid").alias(id_col),
-        F.round("rrf_score", 6).alias("rrf_score"),
-        "n_lists",
-        "rank",
-    )
-
-
-def _hybrid_fuse_sql(lex, sem, id_col, vid, k, k_rrf):
-    """One-shot SQL for the fusion half of hybrid_topk (r17); None unless
-    both id columns are plain string names (caller falls back to the
-    Column chain, which builds the identical analyzed operators)."""
-    if not (isinstance(id_col, str) and isinstance(vid, str)):
-        return None
-    iref = "`" + id_col.replace("`", "``") + "`"
-    vref = "`" + vid.replace("`", "``") + "`"
-
-    def dlit(v: float) -> str:
-        return f"CAST('{float(v)!r}' AS DOUBLE)"
-
-    contrib = f"{dlit(1.0)} / ({dlit(float(k_rrf))} + CAST(rank AS DOUBLE))"
+    # each leg's 1-based rank re-derives from its own ordering contract
+    # (bm25: score desc, id asc; cosine: cosine desc, id asc)
+    contrib = _contrib_sql(k_rrf)
     q = f"""
 WITH lexr AS (
   SELECT {iref} AS _hid, CAST(row_number() OVER
@@ -230,7 +153,4 @@ FROM (
     (ORDER BY rrf_score DESC, _hid ASC) AS INT) AS rank FROM topk
 )
 """
-    try:
-        return lex.sparkSession.sql(q, lex=lex, sem=sem)
-    except Exception:
-        return None
+    return lex.sparkSession.sql(q, lex=lex, sem=sem)

@@ -5,6 +5,8 @@ from pyspark.sql import functions as F
 
 from pq_vector_spark.operators import dedup as D
 
+import text_reference as R
+
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
     (1, "the quick brown fox jumps over the lazy dog"),  # exact dup of 0
@@ -1325,15 +1327,14 @@ def test_ngram_jaccard_pairs_hot_shingle_streams(spark):
     assert fast == sorted(want)
 
 
-def test_sql_rendered_featurization_identical(spark):
-    """r16: the one-shot parsed SQL forms of shingles / shingle_hashes /
-    shingle_token_hashes / minhash_signature / _band_structs (string-name
-    inputs) must be bit-identical to the Column-op builders (Column
-    inputs force the fallback path) — including empty/NULL text, quotes,
-    backslashes, SQL-special characters, and unicode."""
-    from pyspark.sql import functions as F
-
+def test_featurization_matches_reference(spark):
+    """shingles / shingle_hashes / shingle_token_hashes /
+    minhash_signature / _band_structs against the pure-Python references
+    (md5 token hash, the ``_minhash_coeffs`` LCG) over the edge-case
+    texts: empty and NULL text, tabs and newlines, quotes, backslashes,
+    SQL-special characters, unicode, a repeating doc."""
     from pq_vector_spark.operators.dedup import (
+        MINHASH_M,
         _band_structs,
         minhash_signature,
         shingle_hashes,
@@ -1342,36 +1343,27 @@ def test_sql_rendered_featurization_identical(spark):
     )
 
     df = spark.createDataFrame(
-        [
-            (1, ""), (2, None), (3, "a"),
-            (4, "  x\t y\nz  "), (5, "one two three four five six"),
-            (6, "`backtick` 'quote' \\ slash % percent _ under"),
-            (7, "éü unicode tökens"), (8, "a b a b a b a b"),
-        ],
-        "doc_id int, text string",
-    )
-    for label, fast, slow in (
-        ("shingles", shingles("text", 3), shingles(F.col("text"), 3)),
+        list(enumerate(R.EDGE_TEXTS)), "doc_id int, text string"
+    ).orderBy("doc_id")
+    texts = [r["text"] for r in df.collect()]
+    cases = [
+        ("shingles", shingles("text", 3), lambda t: R.shingles(t, 3)),
         ("shingle_hashes", shingle_hashes("text", 3),
-         shingle_hashes(F.col("text"), 3)),
+         lambda t: [R.token_hash(s) % MINHASH_M for s in R.shingles(t, 3)]),
         ("shingle_token_hashes", shingle_token_hashes("text", 3),
-         shingle_token_hashes(F.col("text"), 3)),
+         lambda t: [R.token_hash(s) for s in R.shingles(t, 3)]),
         ("minhash", minhash_signature("text", 3, 32, 42),
-         minhash_signature(F.col("text"), 3, 32, 42)),
+         lambda t: R.minhash(t, 3, 32, 42)),
         ("minhash_n2_h16", minhash_signature("text", 2, 16, 7),
-         minhash_signature(F.col("text"), 2, 16, 7)),
-    ):
-        a = df.select(fast.alias("x")).collect()
-        b = df.select(slow.alias("x")).collect()
-        assert a == b, label
+         lambda t: R.minhash(t, 2, 16, 7)),
+    ]
+    for label, expr, ref in cases:
+        got = [r["x"] for r in df.select(expr.alias("x")).collect()]
+        assert got == [ref(t) for t in texts], label
 
-    sig = df.select(
-        "doc_id", minhash_signature(F.col("text"), 3, 32, 42).alias("_sig")
-    )
-    a = sig.select(F.explode(_band_structs("_sig", 8, 4)).alias("bk")).select(
-        "bk.band", "bk.key"
-    ).collect()
-    b = sig.select(
-        F.explode(_band_structs(F.col("_sig"), 8, 4)).alias("bk")
-    ).select("bk.band", "bk.key").collect()
-    assert a == b, "band_structs"
+    sig = df.select(minhash_signature("text", 3, 32, 42).alias("_sig"))
+    got = [
+        [(b["band"], b["key"]) for b in r["bk"]]
+        for r in sig.select(_band_structs("_sig", 8, 4).alias("bk")).collect()
+    ]
+    assert got == [R.band_keys(R.minhash(t, 3, 32, 42), 8, 4) for t in texts]

@@ -1,9 +1,11 @@
 """Hybrid BM25+cosine RRF retrieval tests."""
 
+import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pq_vector_spark.operators.hybrid import hybrid_topk, rrf_fuse
+
+import text_reference as R
 
 
 def _ranked(spark, rows):
@@ -24,55 +26,29 @@ def test_rrf_fuse_hand_computed(spark):
     assert out[1]["rrf_score"] > out[3]["rrf_score"] > out[2]["rrf_score"]
 
 
-def test_rrf_sql_path_matches_column_path(spark):
-    """r17: the one-shot SQL render of rrf_fuse must be bit-identical to
-    the Column path (forced via a backtick-hostile alias? no — forced by
-    monkeypatching the render off is brittle; instead compare against a
-    Column-path replica built inline)."""
-    from pq_vector_spark.operators import hybrid as H
-
-    lex = _ranked(spark, [(1, 1), (2, 2), (7, 3)])
-    sem = _ranked(spark, [(3, 1), (1, 2)])
-    via_sql = H._rrf_sql([lex, sem], "id", 10, 60)
-    assert via_sql is not None
-    # Column-path replica (the fallback body of rrf_fuse, verbatim)
-    legs = [
-        df.select(
-            F.col("id").alias("_id"),
-            (F.lit(1.0) / (F.lit(60.0) + F.col("rank").cast("double"))).alias(
-                "_contrib"
-            ),
-        )
-        for df in (lex, sem)
-    ]
-    allrows = legs[0].unionByName(legs[1])
-    fused = allrows.groupBy("_id").agg(
-        F.sum("_contrib").alias("rrf_score"),
-        F.count(F.lit(1)).cast("int").alias("n_lists"),
-    )
-    via_col = (
-        fused.orderBy(F.col("rrf_score").desc(), F.col("_id").asc())
-        .limit(10)
-        .select(F.col("_id").alias("id"), "rrf_score", "n_lists")
-    )
-    assert via_sql.schema == via_col.schema
-    assert [tuple(r) for r in via_sql.collect()] == [
-        tuple(r) for r in via_col.collect()
-    ]
+def test_rrf_fuse_matches_reference(spark):
+    """Three lists, overlapping ids, a non-default k_rrf and a k cut:
+    scores, list counts and order against the reference RRF."""
+    lists = [[1, 2, 7], [3, 1], [7, 4, 3, 1]]
+    ranked = [_ranked(spark, [(i, r) for r, i in enumerate(ids, 1)]) for ids in lists]
+    score, count = R.rrf(lists, 10)
+    for k in (10, 3):
+        got = rrf_fuse(ranked, "id", k, k_rrf=10).collect()
+        assert [r["id"] for r in got] == R.top(score, k)
+        for r in got:
+            assert r["rrf_score"] == pytest.approx(score[r["id"]], rel=1e-15)
+            assert r["n_lists"] == count[r["id"]]
 
 
-def test_hybrid_sql_fusion_matches_column_path(spark, monkeypatch):
-    """r17: hybrid_topk's one-shot fusion SQL must produce exactly what
-    the Column chain produces (schema + values), checked by disabling the
-    render and re-running the same inputs."""
-    from pq_vector_spark.operators import hybrid as H
-
+def _hybrid_inputs(spark):
     docs = spark.createDataFrame(
         [
             (0, "spark window functions in spark"),
             (1, "window seat spark plug spark spark"),
             (2, "completely unrelated words here"),
             (3, "nothing relevant at all"),
+            (4, None),
+            (5, "it's a \\ window"),
         ],
         "doc_id: bigint, text: string",
     )
@@ -82,25 +58,56 @@ def test_hybrid_sql_fusion_matches_column_path(spark, monkeypatch):
             (1, [0.0, 1.0, 0.0]),
             (2, [0.9, 0.1, 0.1]),
             (3, [0.0, 0.9, 0.5]),
+            (4, [0.5, 0.5, 0.5]),
+            (5, [0.2, 0.3, 0.9]),
         ],
         "vec_id: bigint, embedding: array<float>",
     )
-    kwargs = dict(
-        vectors=vecs, vec_id_col="vec_id", pool=4, k_rrf=60
-    )
-    via_sql = hybrid_topk(
-        docs, "text", "doc_id", ["spark", "window"], [1.0, 0.0, 0.0], 3,
-        **kwargs,
-    )
-    monkeypatch.setattr(H, "_hybrid_fuse_sql", lambda *a, **k: None)
-    via_col = hybrid_topk(
-        docs, "text", "doc_id", ["spark", "window"], [1.0, 0.0, 0.0], 3,
-        **kwargs,
-    )
-    assert via_sql.schema == via_col.schema
-    assert [tuple(r) for r in via_sql.collect()] == [
-        tuple(r) for r in via_col.collect()
+    return docs, vecs
+
+
+def _cosine_ranks(vecs, q, pool):
+    cos = {}
+    for r in vecs.collect():
+        v = np.asarray(r["embedding"], dtype=np.float32).astype(np.float64)
+        cos[r["vec_id"]] = float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
+    return R.top(cos, pool)
+
+
+def test_hybrid_topk_matches_reference(spark):
+    """BM25 top-pool and cosine top-pool ranked, fused by RRF, cut to k
+    and re-ranked — against the references, with non-default k1/b and
+    k_rrf and terms carrying a quote and a backslash."""
+    docs, vecs = _hybrid_inputs(spark)
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    q = np.array([1.0, 0.0, 0.0])
+    terms = ["spark", "window", "it's", "\\"]
+    pool, k, k_rrf, k1, b = 4, 3, 10, 1.7, 0.3
+    lex = {i: round(s, 4) for i, s in R.bm25(texts, terms, k1, b).items()}
+    score, count = R.rrf([R.top(lex, pool), _cosine_ranks(vecs, q, pool)], k_rrf)
+    got = hybrid_topk(
+        docs, "text", "doc_id", terms, list(q), k, vectors=vecs,
+        vec_id_col="vec_id", pool=pool, k_rrf=k_rrf, k1=k1, b=b,
+    ).collect()
+    assert [r["doc_id"] for r in got] == R.top(score, k)
+    assert [r["rank"] for r in got] == list(range(1, k + 1))
+    for r in got:
+        assert r["rrf_score"] == pytest.approx(score[r["doc_id"]], abs=5e-7)
+        assert r["n_lists"] == count[r["doc_id"]]
+
+
+def test_hybrid_topk_without_terms_is_semantic_leg(spark):
+    docs, vecs = _hybrid_inputs(spark)
+    q = [1.0, 0.0, 0.0]
+    got = hybrid_topk(
+        docs, "text", "doc_id", [], q, 3, vectors=vecs, vec_id_col="vec_id", pool=4
+    ).collect()
+    sem = _cosine_ranks(vecs, np.array(q), 4)[:3]
+    assert [(r["doc_id"], r["n_lists"], r["rank"]) for r in got] == [
+        (i, 1, rank) for rank, i in enumerate(sem, 1)
     ]
+    for rank, r in enumerate(got, 1):
+        assert r["rrf_score"] == round(1.0 / (60 + rank), 6)
 
 
 def test_rrf_fuse_empty_input(spark):

@@ -5,6 +5,8 @@ from pyspark.sql import functions as F
 
 from pq_vector_spark.functions import text as T
 
+import text_reference as R
+
 
 def _one(spark, text, col):
     df = spark.createDataFrame([(text,)], "text STRING")
@@ -134,14 +136,19 @@ def test_bm25_topk_golden(spark):
     assert rows[0]["score"] > rows[1]["score"] > 0.0
 
 
-def test_bm25_sql_path_matches_column_path(spark):
-    """r17: the one-shot SQL render of the whole bm25 pipeline must be
-    bit-identical to the Column-builder path (schema and values), with
-    non-default k1/b literals rendered exactly. The Column path is forced
-    by passing a Column text arg (SQL render requires plain names)."""
-    from pyspark.sql import functions as F
+def _edge_docs(spark, first=None):
+    rows = list(first or []) + [
+        (100 + i, t) for i, t in enumerate(R.EDGE_TEXTS)
+    ]
+    return spark.createDataFrame(rows, "doc_id int, text string")
 
-    docs = spark.createDataFrame(
+
+def test_bm25_topk_matches_reference(spark):
+    """Scores and order against the pure-Python BM25 over the edge-case
+    texts, for the default and non-default k1/b, with terms that carry
+    SQL-special characters."""
+    docs = _edge_docs(
+        spark,
         [
             (1, "spark spark window pad pad"),
             (2, "spark pad pad pad"),
@@ -149,24 +156,39 @@ def test_bm25_sql_path_matches_column_path(spark):
             (4, "nothing here at all"),
             (5, "it's a spark 'quote' test"),
         ],
-        "doc_id INT, text STRING",
     )
-    terms = ["spark", "window", "hash", "it's"]
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    terms = ["Spark", "window", "hash", "it's", "'quote'", "\\", "%", "_",
+             "`backtick`", "éü", "a", "x"]
     for k1, b in [(1.2, 0.75), (1.7, 0.3)]:
-        via_sql = T.bm25_topk(docs, "text", "doc_id", terms, k=10, k1=k1, b=b)
-        via_col = T.bm25_topk(
-            docs.withColumn("t2", F.col("text")),
-            F.col("t2"),
-            "doc_id",
-            terms,
-            k=10,
-            k1=k1,
-            b=b,
-        )
-        assert via_sql.schema == via_col.schema
-        assert [tuple(r) for r in via_sql.collect()] == [
-            tuple(r) for r in via_col.collect()
-        ]
+        want = {i: round(s, 4) for i, s in R.bm25(texts, terms, k1, b).items()}
+        got = T.bm25_topk(docs, "text", "doc_id", terms, k=100, k1=k1, b=b).collect()
+        assert {r["doc_id"] for r in got} == set(want)
+        for r in got:
+            assert r["score"] == pytest.approx(want[r["doc_id"]], abs=5e-5)
+        assert [r["doc_id"] for r in got] == R.top(want, 100)
+        short = T.bm25_topk(docs, "text", "doc_id", terms, k=3, k1=k1, b=b)
+        assert [r["doc_id"] for r in short.collect()] == R.top(want, 3)
+
+
+def test_bm25_terms_with_backslash_and_quote(spark):
+    """Terms reach the filter verbatim: a backslash is not an escape."""
+    texts = {1: "c:\\new path", 2: "plain new words", 3: "it's here"}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id int, text string")
+    terms = ["c:\\new", "it's"]
+    want = R.bm25(texts, terms, 1.2, 0.75)
+    assert set(want) == {1, 3}
+    got = T.bm25_topk(docs, "text", "doc_id", terms).collect()
+    assert [(r["doc_id"], r["score"]) for r in got] == [
+        (i, round(want[i], 4)) for i in (1, 3)
+    ]
+
+
+def test_bm25_topk_without_terms_is_empty(spark):
+    docs = spark.createDataFrame([(1, "spark")], "doc_id int, text string")
+    empty = T.bm25_topk(docs, "text", "doc_id", [])
+    assert empty.schema == T.bm25_topk(docs, "text", "doc_id", ["spark"]).schema
+    assert empty.collect() == []
 
 
 def test_bm25_length_normalization(spark):
@@ -437,35 +459,68 @@ def test_token_ngrams_upto_equals_per_n_concat(spark):
         assert got == want, f"n_max={n_max}"
 
 
-def test_sql_rendered_ngrams_identical(spark):
-    """r16: the one-shot parsed SQL forms of _token_ngrams /
-    _token_ngrams_upto (string-name inputs) must be bit-identical to the
-    Column-op builders (Column inputs force the fallback path) —
-    including empty/NULL text, whitespace-only docs, SQL-special
-    characters, and unicode."""
-    docs = spark.createDataFrame(
-        [
-            (1, ""), (2, None), (3, "a"), (4, "  x\t y\nz  "),
-            (5, "one two three four five six"),
-            (6, "`backtick` 'quote' \\ slash % percent _ under"),
-            (7, "éü unicode tökens"), (8, "a b a b a b a b"), (9, "   "),
-        ],
-        "doc_id int, text string",
-    )
-    for label, fast, slow in (
-        ("ngrams_n1", T._token_ngrams("text", 1),
-         T._token_ngrams(F.col("text"), 1)),
-        ("ngrams_n3", T._token_ngrams("text", 3),
-         T._token_ngrams(F.col("text"), 3)),
-        ("ngrams_n9", T._token_ngrams("text", 9),
-         T._token_ngrams(F.col("text"), 9)),
-        ("upto_1", T._token_ngrams_upto("text", 1),
-         T._token_ngrams_upto(F.col("text"), 1)),
-        ("upto_2", T._token_ngrams_upto("text", 2),
-         T._token_ngrams_upto(F.col("text"), 2)),
-        ("upto_4", T._token_ngrams_upto("text", 4),
-         T._token_ngrams_upto(F.col("text"), 4)),
-    ):
-        a = docs.select(fast.alias("x")).collect()
-        b = docs.select(slow.alias("x")).collect()
-        assert a == b, label
+def test_token_ngrams_match_reference(spark):
+    """_token_ngrams / _token_ngrams_upto against the pure-Python windows
+    over the edge-case texts (order and repeats kept)."""
+    docs = _edge_docs(spark)
+    texts = [r["text"] for r in docs.orderBy("doc_id").collect()]
+    for label, expr, ref in [
+        *[(f"ngrams_n{n}", T._token_ngrams("text", n),
+           lambda t, n=n: R.token_ngrams(t, n)) for n in (1, 3, 9)],
+        *[(f"upto_{n}", T._token_ngrams_upto("text", n),
+           lambda t, n=n: R.token_ngrams_upto(t, n)) for n in (1, 2, 4)],
+    ]:
+        got = [r["x"] for r in docs.orderBy("doc_id").select(expr.alias("x")).collect()]
+        assert got == [ref(t) for t in texts], label
+
+
+def test_sql_and_column_tokenizers_agree(spark):
+    """The SQL text of tokens() and token_hash() (the rendered operators
+    use it) and the Column forms (tfidf, quality, simhash use them) give
+    the same values as the reference on the edge-case texts."""
+    docs = _edge_docs(spark).orderBy("doc_id")
+    rows = docs.select(
+        "text",
+        F.expr(T._tokens_sql("`text`")).alias("sql_toks"),
+        T.tokens("text").alias("col_toks"),
+        F.expr(T._token_hash_sql("`text`")).alias("sql_hash"),
+        T.token_hash("text").alias("col_hash"),
+    ).collect()
+    for r in rows:
+        assert r["sql_toks"] == r["col_toks"] == R.tokens(r["text"])
+        want = None if r["text"] is None else R.token_hash(r["text"])
+        assert r["sql_hash"] == r["col_hash"] == want
+
+
+REJECT_CASES = [
+    "bm25_topk", "_token_ngrams", "_token_ngrams_upto", "shingles",
+    "shingle_hashes", "shingle_token_hashes", "minhash_signature",
+    "_band_structs", "rrf_fuse", "hybrid_topk",
+]
+
+
+@pytest.mark.parametrize("name", REJECT_CASES)
+def test_sql_rendered_operators_reject_columns(spark, name):
+    """The operators render SQL from column names; a Column is refused
+    up front rather than rendered from a guess at its SQL text."""
+    from pq_vector_spark.operators import dedup as D
+    from pq_vector_spark.operators import hybrid as H
+
+    df = spark.createDataFrame([(1, "a b", 1)], "doc_id int, text string, rank int")
+    c = F.col("text")
+    call = {
+        "bm25_topk": lambda: T.bm25_topk(df, c, "doc_id", ["a"]),
+        "_token_ngrams": lambda: T._token_ngrams(c, 2),
+        "_token_ngrams_upto": lambda: T._token_ngrams_upto(c, 2),
+        "shingles": lambda: D.shingles(c),
+        "shingle_hashes": lambda: D.shingle_hashes(c),
+        "shingle_token_hashes": lambda: D.shingle_token_hashes(c),
+        "minhash_signature": lambda: D.minhash_signature(c),
+        "_band_structs": lambda: D._band_structs(F.col("sig"), 2, 2),
+        "rrf_fuse": lambda: H.rrf_fuse([df], F.col("doc_id"), 3),
+        "hybrid_topk": lambda: H.hybrid_topk(
+            df, "text", F.col("doc_id"), ["a"], [1.0], 3
+        ),
+    }[name]
+    with pytest.raises(TypeError, match="column name"):
+        call()
