@@ -1643,7 +1643,8 @@ def _dedup_scale_bench(spark) -> dict:
     bstats: dict = {}
     t0 = time.time()
     n_budget = select_token_budget(
-        scored, "doc_id", "_score", "_len", budget, buckets=997, _stats=bstats
+        scored, "doc_id", "_score", "_len", budget, buckets=997,
+        local_threshold=0, _stats=bstats,
     ).count()
     budget_sec = round(time.time() - t0, 3)
     w = Window.orderBy(F.col("_score").desc(), F.col("doc_id").asc()).rowsBetween(
@@ -1665,7 +1666,8 @@ def _dedup_scale_bench(spark) -> dict:
     tstats: dict = {}
     t0 = time.time()
     n_tied = select_token_budget(
-        tied, "doc_id", "_score", "_len", budget, buckets=997, _stats=tstats
+        tied, "doc_id", "_score", "_len", budget, buckets=997,
+        local_threshold=0, _stats=tstats,
     ).count()
     ties_sec = round(time.time() - t0, 3)
     wk = Window.orderBy(F.col("doc_id").asc()).rowsBetween(
@@ -1690,7 +1692,7 @@ def _dedup_scale_bench(spark) -> dict:
     t0 = time.time()
     n_grp = select_token_budget_grouped(
         grouped, "_grp", "doc_id", "_score", "_len", gbudget, buckets=997,
-        _stats=gstats,
+        local_threshold=0, _stats=gstats,
     ).count()
     grouped_sec = round(time.time() - t0, 3)
     wg = Window.partitionBy("_grp").orderBy(
@@ -1715,7 +1717,7 @@ def _dedup_scale_bench(spark) -> dict:
     t0 = time.time()
     n_ref = select_token_budget_grouped(
         gtied, "_grp", "doc_id", "_score", "_len", budget, buckets=997,
-        window_cap=65536, _stats=rstats,
+        window_cap=65536, local_threshold=0, _stats=rstats,
     ).count()
     grouped_refined_sec = round(time.time() - t0, 3)
 

@@ -1245,15 +1245,6 @@ def semantic_dedup(
     return out.drop("_sd_cos")
 
 
-def _bounded_take(df: DataFrame, n: int) -> list:
-    """Shared lock-scoped core-wave take — see parallel.bounded_take
-    (r17, verdict #7: the conf swap is serialized under a module lock so
-    concurrent driver threads never observe each other's window)."""
-    from pq_vector_spark.parallel import bounded_take
-
-    return bounded_take(df, n)
-
-
 def _local_components(spark, rows, src_type) -> DataFrame:
     """Driver union-find over a bounded, ALREADY-COLLECTED edge row list;
     always attaches the larger root under the smaller, so by induction the
@@ -1351,10 +1342,12 @@ def connected_components(
         # graph falls back to the distributed path earlier, never later),
         # and the driver footprint stays ≤ threshold+1 rows either way.
         # Probe a full core-wave first, scoped to this one action
-        # (_bounded_take): the expected outcome is "all partitions fit",
-        # and each default 1→4→16 wave re-runs the reduce side of the
+        # (parallel.bounded_take): the expected outcome is "all partitions
+        # fit", and each default 1→4→16 wave re-runs the reduce side of the
         # pair pipeline.
-        rows = _bounded_take(base, local_threshold + 1)
+        from pq_vector_spark.parallel import bounded_take
+
+        rows = bounded_take(base, local_threshold + 1)
         if len(rows) <= local_threshold:
             return _local_components(
                 pairs.sparkSession, rows, base.schema["_src"].dataType
@@ -2136,8 +2129,10 @@ def remove_repeated_paragraphs(
     # identical fingerprint set. The _caches/_stats paths keep the count
     # (the count is what materializes the cache / feeds hot_fingerprints).
     if _caches is None and _stats is None:
+        from pq_vector_spark.parallel import bounded_take
+
         spark = df.sparkSession
-        rows = _bounded_take(hot, broadcast_threshold + 1)
+        rows = bounded_take(hot, broadcast_threshold + 1)
         small = len(rows) <= broadcast_threshold
         if small:
             from pq_vector_spark.parallel import local_plan_df

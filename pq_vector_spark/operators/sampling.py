@@ -678,8 +678,8 @@ def temperature_mix(
 def _class_walk(n_b: int):
     """Greedy iteration order over the ordered score classes: NaN (n_b+1),
     +inf (n_b), finite buckets high→low, -inf (-1), NULL (-2). Shared by
-    the single and grouped token-budget drivers so the class chain can
-    never drift between them."""
+    the walk and the grouped selector's one-level histogram so the class
+    chain can never drift between them."""
     return [n_b + 1, n_b, *range(n_b - 1, -1, -1), -1, -2]
 
 
@@ -729,8 +729,8 @@ def _gkey(g):
 
 def _driver_orderable_key(key_type) -> bool:
     """True iff Python comparison of collected values replays Spark's ASC
-    ordering for this key type exactly — the gate for the grouped
-    selector's driver fast path. Atomic orderable types only:
+    ordering for this key type exactly — the gate for both
+    selectors' driver planner. Atomic orderable types only:
 
     - int family / boolean / Decimal: numeric order on both sides;
     - string: Spark compares UTF-8 bytes, Python compares code points —
@@ -770,13 +770,14 @@ def _bounded_take(slim: DataFrame, threshold: int):
 def _plan_budget_groups_local(rows, budget_of, inf):
     """Exact greedy-prefix planning on the driver: same class chain
     (NaN > +inf > finite > -inf > NULL), same key ASC NULLS FIRST
-    tie-break, same bigint token accumulation as the distributed walk —
-    returns the per-group plan rows in the shared ``pf_schema`` encoding
-    (n_b=1, so bucket ids are the pure class codes: NaN=2, +inf=1,
-    finite=0, -inf=-1, NULL=-2), or None to punt when Python cannot
+    tie-break, same bigint token accumulation as the distributed planners
+    — returns the per-group plan rows in the grouped selector's
+    ``pf_schema`` encoding (n_b=1, so bucket ids are the pure class codes:
+    NaN=2, +inf=1, finite=0, -inf=-1, NULL=-2; ``select_token_budget``
+    reads its one row's boundary), or None to punt when Python cannot
     replay Spark's semantics exactly (NaN float keys, negative tokens —
-    the distributed two-level walk's kept set under negative tokens is
-    not a pure prefix, so the fast path refuses rather than guesses)."""
+    the distributed planners' kept set under negative tokens is not a
+    pure prefix, so the driver path refuses rather than guesses)."""
     import math
 
     by_g: dict = {}
@@ -904,6 +905,33 @@ def _conj(preds):
     return F.lit(True) if out is None else out
 
 
+def _disj(preds):
+    """OR of ``preds``, or None when there are none (nothing is kept)."""
+    out = None
+    for p in preds:
+        out = p if out is None else (out | p)
+    return out
+
+
+def _boundary_pred(s_star, k_star) -> Column:
+    """Keep predicate for a frontier whose greedy BOUNDARY row (the last
+    row that fits, in score DESC / key ASC order) is ``(s_star, k_star)``:
+    every row at or above it. Spark comparisons use the same total order
+    as its sorts (NaN > +inf > finite > -inf), so ``> s`` keeps every
+    higher class too — valid even when the frontier is the whole
+    mixed-class corpus. A NaN boundary is the top of the chain (nothing
+    is above it); a NULL boundary is the bottom (everything scored is)."""
+    import math
+
+    SCORE, key_le = F.col("_sb_score"), _key_le(F.col("_sb_key"), k_star)
+    if s_star is None:
+        return SCORE.isNotNull() | key_le
+    if math.isnan(s_star):
+        return F.isnan(SCORE) & key_le
+    s = F.lit(s_star)
+    return (SCORE > s) | ((SCORE == s) & key_le)
+
+
 def _thin_key_bounds(keys: list, n_p: int) -> list:
     """Evenly-spaced range boundaries from a sampled key list, sorted
     under the walk's NULLS-FIRST key order and deduped. Up to ``n_p - 1``
@@ -935,246 +963,40 @@ def _key_range_id(key_expr: Column, bounds: list) -> Column:
 
 def _budget_walk(
     slim: DataFrame,
-    budget: int,
-    buckets: int,
-    window_cap: int,
-    max_depth: int,
-    _stats: dict | None = None,
-    bounds=None,
-):
-    """Recursive two-phase greedy-prefix planner over a (cached) slim
-    projection carrying ``_sb_key`` / ``_sb_score`` / ``_sb_tok`` columns
-    (extra columns are ignored). Every job it runs is bounded — per-level
-    histograms / range summaries of ≤ max(buckets, ranges) rows back to
-    the driver, one exact ordered window over ≤ ``window_cap`` rows — and
-    the kept set comes back as a pure map-side predicate over
-    (_sb_score, _sb_key), or None when nothing is kept. Shared by
-    ``select_token_budget`` (whole corpus) and
-    ``select_token_budget_grouped`` (auto-refined heavy groups); the walk
-    semantics are documented on the former. ``bounds=(lo, hi)`` — the
-    frontier's FINITE score min/max, when the caller already computed it —
-    skips the walk's own level-0 min/max job.
-
-    Determinism: the RESULT is exact and deterministic, and — since r12 —
-    so are the DIAGNOSTICS: key-range refinement derives its boundaries
-    from an explicitly-seeded key sample (``sample(seed=42)`` + driver
-    thinning), not from ``repartitionByRange``'s RDD-id-seeded internal
-    sample, so two runs on the same input report identical ``_stats``
-    (``window_rows``/``levels``) and run the same planning jobs."""
-    import math
-
-    from pyspark.sql import Window
-
-    SCORE, KEY, TOK = F.col("_sb_score"), F.col("_sb_key"), F.col("_sb_tok")
-
-    bucketer, conj = _bucketer, _conj
-
-    anc: list = []  # in-crossing-bucket predicates, one per level
-    keep_terms: list = []  # disjuncts of the final map-side keep filter
-    remaining = budget
-    # frontier state: (mode, lo, hi, count) — count None means unknown
-    mode, cnt = "score", None
-    lo, hi = bounds if bounds is not None else (None, None)
-    first = bounds is None
-    force_exact = False
-    for depth in range(max_depth + 1):
-        sub = slim.filter(conj(anc)) if anc else slim
-        at_cap = (
-            depth >= max_depth
-            or force_exact
-            or (cnt is not None and cnt <= window_cap)
-        )
-        if at_cap:
-            if _stats is not None:
-                # diagnostics for tests/bench: how deep the walk went
-                # and how many rows the exact window actually held
-                # (cnt is already exact when a refinement level set it)
-                _stats.update(
-                    levels=depth,
-                    mode=mode,
-                    window_rows=int(cnt) if cnt is not None else sub.count(),
-                )
-            # exact ordered window over the bounded frontier: find the
-            # greedy BOUNDARY row (last row whose running total fits)
-            w = Window.orderBy(
-                SCORE.desc_nulls_last(), KEY.asc()
-            ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            bd = (
-                sub.withColumn("_sb_cum", F.sum(TOK).over(w))
-                .filter(F.col("_sb_cum") <= F.lit(remaining))
-                # last kept row in (score DESC, key ASC) = first in the
-                # reversed order; Spark ASC places NaN above +inf, so
-                # asc_nulls_first reverses the class chain exactly
-                .orderBy(SCORE.asc_nulls_first(), KEY.desc())
-                .limit(1)
-                .collect()
-            )
-            if bd:
-                s_star, k_star = bd[0]["_sb_score"], bd[0]["_sb_key"]
-                key_le = _key_le(KEY, k_star)
-                if s_star is None:
-                    # NULL boundary = the very bottom of the class
-                    # chain: everything scored is above it
-                    pred = SCORE.isNotNull() | key_le
-                elif math.isnan(s_star):
-                    # NaN boundary = the very top: nothing is above it
-                    pred = F.isnan(SCORE) & key_le
-                else:
-                    # Spark comparisons use the same total order as its
-                    # sorts (NaN > +inf > finite), so `> s_lit` keeps
-                    # every higher class too — valid even when the
-                    # frontier is the whole mixed-class corpus
-                    s_lit = F.lit(s_star)
-                    pred = (SCORE > s_lit) | ((SCORE == s_lit) & key_le)
-                keep_terms.append(conj(anc + [pred]))
-            break
-        if mode == "score":
-            if first:
-                lo, hi = (
-                    sub.filter(_finite_scores(SCORE))
-                    .agg(F.min(SCORE), F.max(SCORE))
-                    .collect()[0]
-                )
-                first = False
-            n_b = buckets if (lo is not None and hi > lo) else 1
-            bucket_of, width = bucketer(lo, hi, n_b)
-            hist = {
-                int(r["b"]): (
-                    int(r["t"] or 0),
-                    int(r["c"]),
-                    r["mn"],
-                    r["mx"],
-                )
-                for r in sub.groupBy(bucket_of(SCORE).alias("b"))
-                .agg(
-                    F.sum(TOK).alias("t"),
-                    F.count("*").alias("c"),
-                    F.min(SCORE).alias("mn"),
-                    F.max(SCORE).alias("mx"),
-                )
-                .collect()
-            }
-            cum, crossing = 0, None
-            for i in _class_walk(n_b):
-                t = hist.get(i, (0, 0, None, None))[0]
-                if cum + t <= remaining:
-                    cum += t
-                else:
-                    crossing = i
-                    break
-            if crossing is None:
-                if _stats is not None:
-                    _stats.update(levels=depth, mode=mode, window_rows=0)
-                keep_terms.append(conj(anc))  # whole frontier fits
-                break
-            remaining -= cum
-            _, c_cnt, c_mn, c_mx = hist[crossing]
-            keep_terms.append(conj(anc + [bucket_of(SCORE) > F.lit(crossing)]))
-            anc.append(bucket_of(SCORE) == F.lit(crossing))
-            cnt = c_cnt
-            if 0 <= crossing < n_b and c_mn is not None and c_mx > c_mn:
-                lo, hi = c_mn, c_mx  # refinable finite bucket
-                if (hi - lo) / buckets <= 0.0:
-                    # width underflow with scores NOT all equal
-                    # (subnormal spread): key-range refinement would
-                    # select in KEY order over a frontier whose true
-                    # greedy order is (score DESC, key) — fall back to
-                    # the exact window instead; exactness beats the
-                    # bound in this pathological corner
-                    force_exact = True
-            else:
-                mode = "key"  # special class or exact tie: key refine
-        else:  # mode == "key": frontier is score-tied, order = KEY ASC
-            # deterministic split (r11 ADVICE): boundaries come from an
-            # explicitly-SEEDED key sample thinned on the driver — not from
-            # repartitionByRange, whose internal sample is seeded by the
-            # RDD id and so wobbled _stats/job counts between runs. Bonus:
-            # the per-range aggregation below groups by a computed range
-            # id, so only map-side-combined partials shuffle — not the
-            # whole frontier, as the old range repartition did.
-            n_p = max(2, min(512, -(-int(cnt) // window_cap)))
-            frac = min(1.0, (32.0 * n_p) / max(int(cnt), 1))
-            samp = [
-                r["_sb_key"]
-                for r in sub.select(KEY).sample(fraction=frac, seed=42).collect()
-            ]
-            kbounds = _thin_key_bounds(samp, n_p)
-            if not kbounds:
-                # un-splittable (all sampled keys equal / empty sample):
-                # the exact window is the only refinement left
-                force_exact = True
-                continue
-            rid = _key_range_id(KEY, kbounds)
-            parts = sorted(
-                (
-                    sub.groupBy(rid.alias("p"))
-                    .agg(
-                        F.sum(TOK).alias("t"),
-                        F.count("*").alias("c"),
-                        F.max(KEY).alias("mk"),
-                    )
-                    .collect()
-                ),
-                key=lambda r: r["p"],
-            )
-            cum, cross_i = 0, None
-            for i, r in enumerate(parts):
-                t = int(r["t"] or 0)
-                if cum + t <= remaining:
-                    cum += t
-                else:
-                    cross_i = i
-                    break
-            if cross_i is None:
-                if _stats is not None:
-                    _stats.update(levels=depth, mode=mode, window_rows=0)
-                keep_terms.append(conj(anc))  # whole frontier fits
-                break
-            remaining -= cum
-            if cross_i > 0:
-                prev_mk = parts[cross_i - 1]["mk"]
-                keep_terms.append(conj(anc + [_key_le(KEY, prev_mk)]))
-                anc.append(_key_gt(KEY, prev_mk))
-            anc.append(_key_le(KEY, parts[cross_i]["mk"]))
-            cnt = int(parts[cross_i]["c"])
-    if not keep_terms:
-        return None
-    keep = None
-    for term in keep_terms:
-        keep = term if keep is None else (keep | term)
-    return keep
-
-
-def _budget_walk_grouped(
-    slim: DataFrame,
     specs: list,
     buckets: int,
     window_cap: int,
     max_depth: int,
 ) -> dict:
-    """``_budget_walk`` for MANY heavy groups in LOCK-STEP: per level, all
-    score-mode groups share ONE aggregation grouped by (group, bucket)
-    (each group's bucket id computed against its own lo/width via a
-    driver-built CASE chain over the ≤ heavy-groups frontiers) and all
-    key-mode groups share ONE seeded key sample + one (group, range-id)
-    aggregation; groups that reach the cap are staged and pay ONE final
-    boundary window partitioned by group. Total jobs: O(levels), not
-    O(heavy groups × levels) — the shape that lets a mixture spec with
-    hundreds of heavy groups plan in the same handful of jobs as one.
+    """Recursive two-phase greedy-prefix planner over a (cached) slim
+    projection carrying ``_sb_grp`` / ``_sb_key`` / ``_sb_score`` /
+    ``_sb_tok`` columns, for one or MANY groups walking in LOCK-STEP (the
+    walk semantics are documented on ``select_token_budget``). Every job
+    it runs is bounded and shared by all groups: per level, score-mode
+    groups share ONE aggregation grouped by (group, bucket) (each group's
+    bucket id computed against its own lo/width via a driver-built CASE
+    chain over the frontiers) and key-mode groups share ONE seeded key
+    sample + one (group, range-id) aggregation; groups that reach the cap
+    are staged and pay ONE final boundary window partitioned by group
+    over ≤ ``window_cap`` rows each. Total jobs: O(levels), not
+    O(groups × levels) — a mixture spec with hundreds of heavy groups
+    plans in the same handful of jobs as one.
 
-    ``specs`` rows: dicts with keys ``g`` (group value), ``gk``
-    (``_gkey``-normalized dict key), ``match`` (group-membership Column —
-    built by the caller so NULL/NaN groups stay pruning-safe), ``budget``
-    (int), ``bounds`` ((lo, hi) finite score min/max of the group).
-    Returns {gk: (keep predicate Column or None, per-group stats dict)};
-    each predicate is relative to the group's rows (the caller ANDs its
-    ``match``). Results are bit-equal to running ``_budget_walk`` per
-    group — same greedy walk, same class chain, same boundary election —
-    only the job batching differs. The key-mode determinism note on
-    ``_budget_walk`` applies here too: boundaries come from a shared
-    seeded sample, so diagnostics and job counts are run-reproducible."""
-    import math
+    ``specs`` rows: dicts with keys ``gk`` (``_gkey``-normalized group
+    value), ``match`` (group-membership Column — built by the caller so
+    NULL/NaN groups stay pruning-safe; ``F.lit(True)`` for one ungrouped
+    corpus), ``budget`` (int), ``bounds`` ((lo, hi) finite score min/max
+    of the group). Returns {gk: (keep predicate Column or None, stats
+    dict with ``levels`` / ``mode`` / ``window_rows``)}; each predicate is
+    a pure map-side filter over (_sb_score, _sb_key) relative to the
+    group's rows (the caller ANDs its ``match``).
 
+    Determinism: the RESULT is exact and deterministic, and so are the
+    DIAGNOSTICS: key-range refinement derives its boundaries from an
+    explicitly-seeded key sample (``sample(seed=42)`` + driver thinning),
+    not from ``repartitionByRange``'s RDD-id-seeded internal sample, so
+    two runs on the same input report identical stats and run the same
+    planning jobs."""
     from pyspark.sql import Window
 
     SCORE, KEY, TOK, GRP = (
@@ -1189,12 +1011,6 @@ def _budget_walk_grouped(
             mode="score", lo=lo, hi=hi, cnt=None, anc=[], keep=[],
             done=False, force_exact=False, pending=None, stats={},
         )
-
-    def _or(cols):
-        out = None
-        for c in cols:
-            out = c if out is None else (out | c)
-        return out
 
     def frontier(v):
         return _conj([v["match"]] + v["anc"])
@@ -1281,16 +1097,22 @@ def _budget_walk_grouped(
                 if 0 <= crossing < n_b and c_mn is not None and c_mx > c_mn:
                     v["lo"], v["hi"] = c_mn, c_mx
                     if (c_mx - c_mn) / buckets <= 0.0:
-                        v["force_exact"] = True  # subnormal spread
+                        # width underflow with scores NOT all equal
+                        # (subnormal spread): key-range refinement would
+                        # select in KEY order over a frontier whose true
+                        # greedy order is (score DESC, key) — take the
+                        # exact window instead
+                        v["force_exact"] = True
                 else:
                     v["mode"] = "key"  # special class or exact tie
 
         if key_act:
             # ONE range summary for every key-mode group: a shared SEEDED
             # key sample over the union of tied frontiers (deterministic —
-            # see the single-walk note on repartitionByRange's RDD-id
-            # seed), per-group boundaries thinned on the driver, then ONE
-            # map-side-combined aggregation grouped by (group, range id)
+            # see the docstring), per-group boundaries thinned on the
+            # driver, then ONE map-side-combined aggregation grouped by
+            # (group, range id): only the partials shuffle, not the
+            # frontier
             np_of = {
                 v["gk"]: max(2, min(512, -(-int(v["cnt"]) // window_cap)))
                 for v in key_act
@@ -1302,7 +1124,7 @@ def _budget_walk_grouped(
                     for v in key_act
                 ),
             )
-            filt = _or([frontier(v) for v in key_act])
+            filt = _disj([frontier(v) for v in key_act])
             kb_samp: dict = {}
             for r in (
                 slim.filter(filt)
@@ -1374,14 +1196,14 @@ def _budget_walk_grouped(
             # (max_depth=0): one bounded count so diagnostics stay honest
             cm = {
                 _gkey(r["_sb_grp"]): int(r["count"])
-                for r in slim.filter(_or([v["pending"] for v in unk]))
+                for r in slim.filter(_disj([v["pending"] for v in unk]))
                 .groupBy(GRP)
                 .count()
                 .collect()
             }
             for v in unk:
                 v["stats"]["window_rows"] = cm.get(v["gk"], 0)
-        filt = _or([v["pending"] for v in pend])
+        filt = _disj([v["pending"] for v in pend])
         remc = None
         for v in pend:
             lit = F.lit(int(v["remaining"]))
@@ -1395,6 +1217,9 @@ def _budget_walk_grouped(
             .orderBy(SCORE.desc_nulls_last(), KEY.asc())
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
+        # last kept row in (score DESC, key ASC) = first in the reversed
+        # order; Spark ASC places NaN above +inf, so asc_nulls_first
+        # reverses the class chain exactly
         wrev = Window.partitionBy(GRP).orderBy(SCORE.asc_nulls_first(), KEY.desc())
         bmap = {
             _gkey(r["_sb_grp"]): (r["_sb_score"], r["_sb_key"])
@@ -1409,19 +1234,10 @@ def _budget_walk_grouped(
         for v in pend:
             hit = bmap.get(v["gk"])
             if hit is not None:
-                s_star, k_star = hit
-                key_le = _key_le(KEY, k_star)
-                if s_star is None:
-                    pred = SCORE.isNotNull() | key_le
-                elif math.isnan(s_star):
-                    pred = F.isnan(SCORE) & key_le
-                else:
-                    s_lit = F.lit(s_star)
-                    pred = (SCORE > s_lit) | ((SCORE == s_lit) & key_le)
-                v["keep"].append(_conj(v["anc"] + [pred]))
+                v["keep"].append(_conj(v["anc"] + [_boundary_pred(*hit)]))
             v["done"] = True
 
-    return {gk: (_or(v["keep"]), v["stats"]) for gk, v in st.items()}
+    return {gk: (_disj(v["keep"]), v["stats"]) for gk, v in st.items()}
 
 
 def select_token_budget(
@@ -1442,16 +1258,16 @@ def select_token_budget(
     stays ≤ ``budget`` — the greedy prefix every "train on the best N
     tokens" curation step needs.
 
-    **Driver fast path (r16).** Shares
-    ``select_token_budget_grouped``'s bounded-take planner (one
-    synthetic group): when the slim (key, score, tokens) projection fits
-    ``local_threshold`` rows, ONE ``take`` feeds the exact greedy prefix
-    on the driver and the boundary comes back as the same pure map-side
-    (score, key) predicate the distributed walk emits — bit-identical
-    kept set, 5+ sequential bounded actions collapsed to one. Punts to
-    the walk for non-atomic key types, NaN float keys, negative token
-    counts, ``_stats`` requests, or oversized input
-    (``local_threshold=0`` forces the walk).
+    **Two planners, one output.** When the slim (key, score, tokens)
+    projection fits ``local_threshold`` rows, ONE bounded ``take`` feeds
+    the exact greedy prefix on the driver (``select_token_budget_grouped``'s
+    driver planner, one synthetic group) — 5+ sequential bounded actions
+    collapsed to one. Otherwise the distributed walk below plans it. Both
+    emit the same boundary predicate, so the kept set is bit-identical.
+    The driver path punts to the walk for non-atomic key types, NaN float
+    keys, negative token counts or oversized input; ``local_threshold=0``
+    forces the walk. ``_stats`` (``levels`` / ``mode`` / ``window_rows``)
+    describes the walk and stays empty when the driver planned.
 
     Scale shape (recursive two-phase exact selection): the naive form is a
     GLOBAL ordered cumulative sum — ONE task must hold and scan the entire
@@ -1522,12 +1338,17 @@ def select_token_budget(
         toks.alias("_sb_tok"),
     )
 
-    # ---- driver fast path: one bounded take plans the exact prefix ----
-    if (
-        _stats is None
-        and local_threshold
-        and _driver_orderable_key(slim.schema[0].dataType)
-    ):
+    out = df.withColumn("_sb_score", score.cast("double")).withColumn(
+        "_sb_key", keyc
+    )
+
+    def emit(keep):
+        # the single output pass: a pure map-side (score, key) filter
+        keep = F.lit(False) if keep is None else keep
+        return out.filter(keep).drop("_sb_score", "_sb_key")
+
+    # ---- driver planner: one bounded take plans the exact prefix ----
+    if local_threshold and _driver_orderable_key(slim.schema[0].dataType):
         taken = _bounded_take(slim, local_threshold)
         if taken is not None:
             planned = _plan_budget_groups_local(
@@ -1536,53 +1357,33 @@ def select_token_budget(
                 float("inf"),
             )
             if planned is not None:
-                out = df.withColumn(
-                    "_sb_score", score.cast("double")
-                ).withColumn("_sb_key", keyc)
-                SCORE, KEY = F.col("_sb_score"), F.col("_sb_key")
                 if not planned:
-                    # empty input — nothing to keep (df has no rows)
-                    return out.filter(F.lit(False)).drop(
-                        "_sb_score", "_sb_key"
-                    )
-                _g, _lo, _w, _nb, whole, cross, bclass, s, k = planned[0]
+                    return emit(None)  # empty input
+                _g, _lo, _w, _nb, whole, _c, bclass, s, k = planned[0]
                 if whole:
                     return df
                 if bclass == "none":
-                    return out.filter(F.lit(False)).drop(
-                        "_sb_score", "_sb_key"
-                    )
-                INF = float("inf")
-                # same class codes as the grouped emit under n_b=1:
-                # NaN=2 > +inf=1 > finite=0 > -inf=-1 > NULL=-2
-                cls = (
-                    F.when(F.isnan(SCORE), F.lit(2))
-                    .when(SCORE == F.lit(INF), F.lit(1))
-                    .when(SCORE == F.lit(-INF), F.lit(-1))
-                    .when(SCORE.isNull(), F.lit(-2))
-                    .otherwise(F.lit(0))
-                )
-                if bclass in ("nan", "null"):
-                    in_cross = _key_le(KEY, k)
-                else:
-                    in_cross = (SCORE > F.lit(s)) | (
-                        (SCORE == F.lit(s)) & _key_le(KEY, k)
-                    )
-                keep = (cls > F.lit(cross)) | (
-                    (cls == F.lit(cross)) & in_cross
-                )
-                return out.filter(keep).drop("_sb_score", "_sb_key")
+                    return emit(None)
+                s_star = {"nan": float("nan"), "null": None}.get(bclass, s)
+                return emit(_boundary_pred(s_star, k))
             # else: NaN float keys / negative tokens — fall through
 
-    slim = slim.persist()
+    # ---- distributed walk: the grouped walk over one constant group ----
+    slim = slim.withColumn("_sb_grp", F.lit(0)).persist()
     try:
-        keep = _budget_walk(slim, budget, buckets, window_cap, max_depth, _stats)
-        out = df.withColumn("_sb_score", score.cast("double")).withColumn(
-            "_sb_key", keyc
+        SCORE = F.col("_sb_score")
+        lo, hi = (
+            slim.filter(_finite_scores(SCORE))
+            .agg(F.min(SCORE), F.max(SCORE))
+            .collect()[0]
         )
-        if keep is None:
-            return out.filter(F.lit(False)).drop("_sb_score", "_sb_key")
-        return out.filter(keep).drop("_sb_score", "_sb_key")
+        spec = dict(gk=0, match=F.lit(True), budget=budget, bounds=(lo, hi))
+        keep, walk_stats = _budget_walk(
+            slim, [spec], buckets, window_cap, max_depth
+        )[0]
+        if _stats is not None:
+            _stats.update(walk_stats)
+        return emit(keep)
     finally:
         slim.unpersist()
 
@@ -1643,7 +1444,9 @@ def select_token_budget_grouped(
     output-pass filter. When SEVERAL groups need refinement they walk in
     LOCK-STEP — one per-level aggregation grouped by (group, bucket) plus
     one batched boundary window, O(levels) jobs instead of
-    O(heavy groups × levels). ``window_cap=None`` disables refinement; a
+    O(heavy groups × levels). A heavy group whose value ``F.lit`` cannot
+    express (a struct group) stays on the shared-window plan and logs a
+    WARNING. ``window_cap=None`` disables refinement; a
     crossing bucket above ``window_warn_rows`` then only logs a WARNING
     naming the group. Ordering
     matches ``select_token_budget`` exactly (class chain NaN > +inf >
@@ -1653,29 +1456,30 @@ def select_token_budget_grouped(
     is legal and ordered as Spark's ASC sorts it (NULLS FIRST), with the
     boundary predicate built null-safe to match.
 
-    **Driver fast path (r16).** The planning chain above is 5+ sequential
+    **Driver planner.** The planning chain above is 5+ sequential
     bounded actions (min/max, histogram, walk levels, boundary, output) —
     correct at any scale, but pure per-action overhead when the slim
     (group, key, score, tokens) projection is small. Like
-    ``connected_components``' bounded-take fast path, ONE
+    ``connected_components``' bounded-take path, ONE
     ``take(local_threshold+1)`` (probing a full core-wave first) decides
-    the path AND feeds it: when the slim rows fit, the identical greedy
+    the planner AND feeds it: when the slim rows fit, the identical greedy
     prefix is planned on the driver — same class chain (NaN > +inf >
     finite > -inf > NULL), same key ASC NULLS FIRST tie-break, same exact
     bigint token sums — and only the boundary row per group is shipped
-    back as the same broadcast plan table the distributed path builds, so
-    the output pass (and its plan shape) is shared and the result is
-    bit-identical. The fast path punts to the distributed planner for
-    anything Python ordering cannot replay exactly (non-atomic key types,
-    NaN float keys, negative token counts), when ``_stats`` is requested
-    (diagnostics describe the distributed walk), or when
-    ``local_threshold`` rows are exceeded (set ``local_threshold=0`` to
-    force the distributed path). Driver memory stays bounded:
+    back as the same broadcast plan table the distributed planner builds,
+    so the output pass (and its plan shape) is shared and the result is
+    bit-identical. It punts to the distributed planner for anything
+    Python ordering cannot replay exactly (non-atomic key types, NaN
+    float keys, negative token counts) or when ``local_threshold`` rows
+    are exceeded (set ``local_threshold=0`` to force the distributed
+    planner). ``_stats`` describes the distributed planner and stays
+    empty when the driver planned. Driver memory stays bounded:
     ≤ threshold+1 slim rows, the same order as the histograms the
     distributed planner already collects.
     """
     import math
 
+    from pyspark.errors import SparkRuntimeException
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
@@ -1835,12 +1639,8 @@ def select_token_budget_grouped(
             "_p_bclass", "_p_s", "_p_k",
         )
 
-    # ---- driver fast path: one bounded take plans every group exactly ----
-    if (
-        _stats is None
-        and local_threshold
-        and _driver_orderable_key(key_type)
-    ):
+    # ---- driver planner: one bounded take plans every group exactly ----
+    if local_threshold and _driver_orderable_key(key_type):
         taken = _bounded_take(slim, local_threshold)
         if taken is not None:
             planf_rows = _plan_budget_groups_local(taken, budget_of, INF)
@@ -1955,35 +1755,20 @@ def select_token_budget_grouped(
         heavy_terms: list = []
         if window_cap is not None:
             specs: list = []
-            for g in list(crossing):
-                c, _rem = crossing[g]
+            for g, (c, _rem) in crossing.items():
                 if hist.get(_gkey(g), {}).get(c, (0, 0))[1] <= window_cap:
                     continue
-                try:
-                    if g is None:
-                        grp_match = GRP.isNull()
-                    elif isinstance(g, float) and math.isnan(g):
-                        # NOT `GRP == lit(NaN)`: Spark's = does treat NaN
-                        # as equal to NaN, but the cached slim's batch
-                        # min/max stats prune that comparison to ZERO
-                        # batches (NaN sorts above every max) — isnan is
-                        # the pruning-safe NaN-group predicate
-                        grp_match = F.isnan(GRP)
-                    else:
-                        grp_match = GRP == F.lit(g)
-                except Exception as e:
-                    # a group type F.lit can't express (e.g. struct) stays
-                    # on the shared-window plan — slower, never wrong
-                    _LOG.warning(
-                        "select_token_budget_grouped: cannot build a "
-                        "literal for heavy group %r (%s: %s) — leaving it "
-                        "on the shared-window plan",
-                        g,
-                        type(e).__name__,
-                        e,
-                    )
-                    continue
-                del crossing[g]
+                if g is None:
+                    grp_match = GRP.isNull()
+                elif isinstance(g, float) and math.isnan(g):
+                    # NOT `GRP == lit(NaN)`: Spark's = does treat NaN as
+                    # equal to NaN, but the cached slim's batch min/max
+                    # stats prune that comparison to ZERO batches (NaN
+                    # sorts above every max) — isnan is the pruning-safe
+                    # NaN-group predicate
+                    grp_match = F.isnan(GRP)
+                else:
+                    grp_match = GRP == F.lit(g)
                 specs.append(
                     dict(
                         g=g,
@@ -1996,12 +1781,28 @@ def select_token_budget_grouped(
                     )
                 )
             if specs:
+                try:
+                    # F.lit cannot express every group type (a struct
+                    # group collects as a Row) and fails only when a plan
+                    # is analyzed: analyze the membership predicates now,
+                    # before the walk depends on them (one type, so one
+                    # analysis decides for every group)
+                    slim.filter(_disj([s["match"] for s in specs]))
+                except SparkRuntimeException as e:
+                    _LOG.warning(
+                        "select_token_budget_grouped: cannot build literals "
+                        "for heavy groups %r (%s) — leaving them on the "
+                        "shared-window plan",
+                        [s["g"] for s in specs],
+                        e,
+                    )
+                    specs = []
+            if specs:
                 # all heavy groups refine in LOCK-STEP: O(levels) jobs
                 # total, not O(heavy groups × levels)
-                walked = _budget_walk_grouped(
-                    slim, specs, buckets, window_cap, max_depth
-                )
+                walked = _budget_walk(slim, specs, buckets, window_cap, max_depth)
                 for s in specs:
+                    del crossing[s["g"]]
                     gpred, gs = walked[s["gk"]]
                     heavy[s["gk"]] = gs
                     if gpred is not None:

@@ -31,10 +31,6 @@ import threading
 
 from pyspark.sql import DataFrame
 
-# escape hatch: PQ_SPREAD_SMALL_SCANS=0 disables the guard everywhere
-# (e.g. to A/B the exchange cost); default on.
-_ENV_KNOB = "PQ_SPREAD_SMALL_SCANS"
-
 
 def local_plan_df(spark, rows, schema) -> DataFrame:
     """Driver-built tiny plan/lookup tables (budget plans, component maps,
@@ -155,7 +151,6 @@ def _plan_partitions(df: DataFrame) -> int:
 # 64 KB was statistically tied, 256 KB already gave some back. At scale
 # the target saturates at defaultParallelism once input > cores × 32 KB
 # (~1 MB per 32 cores), so cluster behavior is unchanged.
-_SPLIT_ENV = "PQ_SPREAD_SPLIT_BYTES"
 _DEFAULT_SPLIT_BYTES = 32 * 1024
 
 
@@ -197,7 +192,7 @@ def bounded_take(df: DataFrame, n: int) -> list:
 
 
 def ensure_compute_parallelism(
-    df: DataFrame, *, min_rows: int = 0, split_bytes: "int | None" = None
+    df: DataFrame, *, split_bytes: int = _DEFAULT_SPLIT_BYTES
 ) -> DataFrame:
     """Spread ``df`` across the cluster's cores iff its plan currently
     yields fewer partitions than ``defaultParallelism`` AND the input is
@@ -206,12 +201,11 @@ def ensure_compute_parallelism(
     Call it on the slim projection feeding a compute-heavy stage (project
     FIRST — the exchange should carry only the columns the compute needs,
     guide §2.3). Returns ``df`` unchanged when the plan is already at
-    least cores-wide, when the guard is disabled via
-    ``PQ_SPREAD_SMALL_SCANS=0``, or when partition introspection fails.
+    least cores-wide or when partition introspection fails.
 
     The spread target is size-adaptive (r17, guide §2 "make partitioning
     scale-adaptive"): ``min(defaultParallelism, ceil(input_bytes /
-    PQ_SPREAD_SPLIT_BYTES))``, so a sub-core-wave input gets a narrow
+    split_bytes))`` (default 32 KB), so a sub-core-wave input gets a narrow
     exchange (or none) instead of a cores-wide task wave whose per-task
     overhead exceeds the compute — the r16 scaling block showed the
     spread-touched rows running 22-33% FASTER at 8 cores than 32 for
@@ -221,17 +215,13 @@ def ensure_compute_parallelism(
     input size is unknown and the spread stays cores-wide (those callers
     feed generated/derived frames that are already compute-bound).
 
-    ``min_rows`` lets callers that know the row count skip the exchange
-    for trivially small inputs (0 = no row-count gate). ``split_bytes``
-    overrides the per-task byte target for call sites whose downstream
+    ``split_bytes`` overrides the per-task byte target for call sites whose downstream
     cost profile differs from the featurization default — e.g. the
     incremental-dedup delta sites pass a ~1 MB split because their
     spread frames feed a long cascade of persisted joins whose per-job
     overhead only amortizes over ≥ seconds of featurization per task
     (measured r17: any spread of the bench-scale delta LOST 0.3-0.7 s).
     """
-    if os.environ.get(_ENV_KNOB, "1") == "0":
-        return df
     try:
         sc = df.sparkSession.sparkContext
         target = sc.defaultParallelism
@@ -242,13 +232,6 @@ def ensure_compute_parallelism(
         return df
     nbytes = _input_bytes(df)
     if nbytes >= 0:
-        if split_bytes is None:
-            try:
-                split_bytes = int(
-                    os.environ.get(_SPLIT_ENV, _DEFAULT_SPLIT_BYTES)
-                )
-            except ValueError:
-                split_bytes = _DEFAULT_SPLIT_BYTES
         split_bytes = max(1, split_bytes)
         target = min(target, (nbytes + split_bytes - 1) // split_bytes)
     if n >= target or target <= 1:

@@ -1,8 +1,6 @@
 """Spread-guard (parallel.py) tests: the partition probe memo and the
 conditional round-robin spread."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from pq_vector_spark import parallel as P
@@ -45,32 +43,21 @@ def test_plan_partitions_no_memo_for_local_plans(spark):
 
 def test_spread_fires_and_noops(spark, tmp_path):
     """ensure_compute_parallelism spreads a 1-partition file scan to
-    defaultParallelism (when the input is big enough per the split knob)
-    and leaves an already-wide plan unchanged (same object), with the
-    env knob disabling it entirely."""
+    defaultParallelism (when the input is big enough per the byte split)
+    and leaves an already-wide plan unchanged (same object)."""
     path = str(tmp_path / "spread_tbl")
     spark.range(0, 100, 1, 1).write.mode("overwrite").parquet(path)
     narrow = spark.read.parquet(path).select("id")
     target = spark.sparkContext.defaultParallelism
 
     # split=1 byte: any file-backed input justifies a cores-wide spread
-    os.environ[P._SPLIT_ENV] = "1"
-    try:
-        spread = P.ensure_compute_parallelism(narrow)
-        assert spread.rdd.getNumPartitions() == target
-        # values unchanged (spread is a pure repartition)
-        assert sorted(r["id"] for r in spread.collect()) == list(range(100))
-    finally:
-        os.environ.pop(P._SPLIT_ENV, None)
+    spread = P.ensure_compute_parallelism(narrow, split_bytes=1)
+    assert spread.rdd.getNumPartitions() == target
+    # values unchanged (spread is a pure repartition)
+    assert sorted(r["id"] for r in spread.collect()) == list(range(100))
 
     wide = spark.range(0, 100, 1, target + 1)
     assert P.ensure_compute_parallelism(wide) is wide
-
-    os.environ[P._ENV_KNOB] = "0"
-    try:
-        assert P.ensure_compute_parallelism(narrow) is narrow
-    finally:
-        os.environ.pop(P._ENV_KNOB, None)
 
 
 def test_spread_target_is_size_adaptive(spark, tmp_path):
@@ -90,20 +77,12 @@ def test_spread_target_is_size_adaptive(spark, tmp_path):
     assert nbytes > 0  # file-backed: sizes are known
 
     # split far above the file size: ceil(bytes/split) == 1 -> no exchange
-    os.environ[P._SPLIT_ENV] = str(nbytes * 10)
-    try:
-        assert P.ensure_compute_parallelism(narrow) is narrow
-    finally:
-        os.environ.pop(P._SPLIT_ENV, None)
+    assert P.ensure_compute_parallelism(narrow, split_bytes=nbytes * 10) is narrow
 
     # split at half the file size: target becomes exactly 2 partitions
-    os.environ[P._SPLIT_ENV] = str((nbytes + 1) // 2)
-    try:
-        spread = P.ensure_compute_parallelism(narrow)
-        assert spread.rdd.getNumPartitions() == 2
-        assert spread.count() == 1000
-    finally:
-        os.environ.pop(P._SPLIT_ENV, None)
+    spread = P.ensure_compute_parallelism(narrow, split_bytes=(nbytes + 1) // 2)
+    assert spread.rdd.getNumPartitions() == 2
+    assert spread.count() == 1000
 
     # a non-file-backed plan has unknown size: spreads cores-wide as before
     local = spark.createDataFrame([(i,) for i in range(50)], "id int")

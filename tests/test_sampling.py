@@ -274,6 +274,11 @@ def test_temperature_mix_keeps_rare_group_whole(spark):
 # ---------------------------------------------- token-budget selection ----
 
 
+# select_token_budget's two planners: the driver planner (default
+# local_threshold) and the distributed walk (local_threshold=0)
+_PLANNERS = ({}, {"local_threshold": 0})
+
+
 def _naive_budget(rows, budget):
     """Global greedy prefix in (score desc, key asc) order."""
     kept, cum = [], 0
@@ -297,14 +302,15 @@ def test_select_token_budget_matches_global_greedy(spark):
     ]
     df = spark.createDataFrame(rows, ["id", "score", "tok"])
     total = sum(r[2] for r in rows)
-    for budget in (0, total // 10, total // 2, total + 1):
-        got = sorted(
-            r["id"]
-            for r in select_token_budget(
-                df, "id", "score", "tok", budget, buckets=16
-            ).collect()
-        )
-        assert got == _naive_budget(rows, budget), f"budget={budget}"
+    for kw in _PLANNERS:
+        for budget in (0, total // 10, total // 2, total + 1):
+            got = sorted(
+                r["id"]
+                for r in select_token_budget(
+                    df, "id", "score", "tok", budget, buckets=16, **kw
+                ).collect()
+            )
+            assert got == _naive_budget(rows, budget), f"budget={budget} {kw}"
 
 
 def test_select_token_budget_ties_break_by_key(spark):
@@ -312,10 +318,12 @@ def test_select_token_budget_ties_break_by_key(spark):
 
     rows = [(3, 1.0, 10), (1, 1.0, 10), (2, 1.0, 10), (4, 0.5, 10)]
     df = spark.createDataFrame(rows, ["id", "score", "tok"])
-    got = sorted(
-        r["id"] for r in select_token_budget(df, "id", "score", "tok", 20).collect()
-    )
-    assert got == [1, 2]  # equal scores -> smallest keys first
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget(df, "id", "score", "tok", 20, **kw).collect()
+        )
+        assert got == [1, 2], kw  # equal scores -> smallest keys first
 
 
 def test_select_token_budget_guards_and_empty(spark):
@@ -325,16 +333,17 @@ def test_select_token_budget_guards_and_empty(spark):
     with pytest.raises(ValueError):
         select_token_budget(df, "id", "score", "tok", -1)
     empty = df.filter(F.lit(False))
-    assert select_token_budget(empty, "id", "score", "tok", 100).count() == 0
     # constant scores collapse to one bucket but stay exact
     const = spark.createDataFrame(
         [(i, 2.0, 10) for i in range(10)], ["id", "score", "tok"]
     )
-    got = sorted(
-        r["id"]
-        for r in select_token_budget(const, "id", "score", "tok", 35).collect()
-    )
-    assert got == [0, 1, 2]
+    for kw in _PLANNERS:
+        assert select_token_budget(empty, "id", "score", "tok", 100, **kw).count() == 0
+        got = sorted(
+            r["id"]
+            for r in select_token_budget(const, "id", "score", "tok", 35, **kw).collect()
+        )
+        assert got == [0, 1, 2], kw
 
 
 def test_temperature_mix_null_group_is_a_group(spark):
@@ -370,16 +379,17 @@ def test_select_token_budget_null_and_nan_scores(spark):
     ]
     df = spark.createDataFrame(rows, "id: bigint, score: double, tok: bigint")
 
-    def got(budget):
+    def got(budget, kw):
         return sorted(
             r["id"]
-            for r in select_token_budget(df, "id", "score", "tok", budget).collect()
+            for r in select_token_budget(df, "id", "score", "tok", budget, **kw).collect()
         )
 
-    assert got(10) == [1]           # NaN first
-    assert got(30) == [1, 2, 5]     # then finite desc
-    assert got(45) == [1, 2, 3, 5]  # null not yet affordable... budget 45 keeps 4 rows
-    assert got(50) == [1, 2, 3, 4, 5]  # null last, once budget allows
+    for kw in _PLANNERS:
+        assert got(10, kw) == [1]           # NaN first
+        assert got(30, kw) == [1, 2, 5]     # then finite desc
+        assert got(45, kw) == [1, 2, 3, 5]  # null not yet affordable... budget 45 keeps 4 rows
+        assert got(50, kw) == [1, 2, 3, 4, 5]  # null last, once budget allows
 
     # matches the naive global window on the same data
     from pyspark.sql import Window
@@ -395,7 +405,8 @@ def test_select_token_budget_null_and_nan_scores(spark):
             .filter(SF.col("c") <= budget)
             .collect()
         )
-        assert got(budget) == naive, f"budget={budget}"
+        for kw in _PLANNERS:
+            assert got(budget, kw) == naive, f"budget={budget} {kw}"
 
 
 # ----------------------------------------------- unseen-group policy ----
@@ -512,14 +523,15 @@ def test_select_token_budget_inf_scores(spark):
         (7, float("inf"), 10),
     ]
     df = spark.createDataFrame(rows, "id: bigint, score: double, tok: bigint")
-    for budget in (0, 10, 20, 25, 30, 40, 50, 60, 70, 100):
-        got = sorted(
-            r["id"]
-            for r in select_token_budget(
-                df, "id", "score", "tok", budget, buckets=4
-            ).collect()
-        )
-        assert got == _class_greedy(rows, budget), f"budget={budget}"
+    for kw in _PLANNERS:
+        for budget in (0, 10, 20, 25, 30, 40, 50, 60, 70, 100):
+            got = sorted(
+                r["id"]
+                for r in select_token_budget(
+                    df, "id", "score", "tok", budget, buckets=4, **kw
+                ).collect()
+            )
+            assert got == _class_greedy(rows, budget), f"budget={budget} {kw}"
 
 
 def test_select_token_budget_recursive_refinement_bounds_window(spark):
@@ -540,7 +552,7 @@ def test_select_token_budget_recursive_refinement_bounds_window(spark):
         r["id"]
         for r in select_token_budget(
             df, "id", "score", "tok", total // 2,
-            buckets=8, window_cap=64, _stats=stats,
+            buckets=8, window_cap=64, local_threshold=0, _stats=stats,
         ).collect()
     )
     assert got == _class_greedy(rows, total // 2)
@@ -566,7 +578,7 @@ def test_select_token_budget_key_refinement_deterministic_stats(spark):
             r["id"]
             for r in select_token_budget(
                 df, "id", "score", "tok", 7 * 1000 + 3,
-                buckets=8, window_cap=64, _stats=stats,
+                buckets=8, window_cap=64, local_threshold=0, _stats=stats,
             ).collect()
         )
         runs.append((got, stats))
@@ -587,7 +599,7 @@ def test_select_token_budget_key_refinement_deterministic_stats(spark):
             for r in select_token_budget_grouped(
                 gdf, "grp", "id", "score", "tok",
                 {"g": 7 * 500, "h": 7 * 100}, buckets=8, window_cap=32,
-                _stats=gstats,
+                local_threshold=0, _stats=gstats,
             ).collect()
         )
         gruns.append((gout, gstats))
@@ -608,7 +620,7 @@ def test_select_token_budget_all_ties_key_refinement(spark):
         r["id"]
         for r in select_token_budget(
             df, "id", "score", "tok", budget,
-            buckets=8, window_cap=64, _stats=stats,
+            buckets=8, window_cap=64, local_threshold=0, _stats=stats,
         ).collect()
     )
     assert got == list(range(1000))  # key-asc prefix
@@ -633,18 +645,19 @@ def test_select_token_budget_depth0_mixed_class_boundary(spark):
     ]
     df = spark.createDataFrame(rows, "id: bigint, score: double, tok: bigint")
 
-    def got(budget):
+    def got(budget, kw):
         return sorted(
             r["id"]
             for r in select_token_budget(
-                df, "id", "score", "tok", budget, max_depth=0
+                df, "id", "score", "tok", budget, max_depth=0, **kw
             ).collect()
         )
 
-    assert got(10) == [1]            # boundary inside the NaN class
-    assert got(20) == [1, 2]
-    assert got(40) == [1, 2, 3, 9]   # boundary inside the NULL class
-    assert got(50) == [1, 2, 3, 4, 9]
+    for kw in _PLANNERS:
+        assert got(10, kw) == [1]            # boundary inside the NaN class
+        assert got(20, kw) == [1, 2]
+        assert got(40, kw) == [1, 2, 3, 9]   # boundary inside the NULL class
+        assert got(50, kw) == [1, 2, 3, 4, 9]
 
 
 def test_select_token_budget_output_is_map_side_filter(spark):
@@ -655,13 +668,14 @@ def test_select_token_budget_output_is_map_side_filter(spark):
 
     rows = [(i, float(i % 97), 10) for i in range(500)]
     df = spark.createDataFrame(rows, "id: bigint, score: double, tok: bigint")
-    out = select_token_budget(df, "id", "score", "tok", 2000, buckets=16)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert "Exchange" not in plan
-    # still the exact greedy prefix
-    got = sorted(r["id"] for r in out.collect())
-    assert got == _class_greedy(rows, 2000)
+    for kw in _PLANNERS:
+        out = select_token_budget(df, "id", "score", "tok", 2000, buckets=16, **kw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan, kw
+        assert "Exchange" not in plan, kw
+        # still the exact greedy prefix
+        got = sorted(r["id"] for r in out.collect())
+        assert got == _class_greedy(rows, 2000), kw
 
 
 def _grouped_greedy(rows, budget_of):
@@ -797,7 +811,8 @@ def test_select_token_budget_subnormal_spread_stays_exact(spark):
     got = sorted(
         r["id"]
         for r in select_token_budget(
-            df, "id", "score", "tok", 20, buckets=4, window_cap=1, _stats=stats
+            df, "id", "score", "tok", 20, buckets=4, window_cap=1, local_threshold=0,
+            _stats=stats,
         ).collect()
     )
     assert got == _class_greedy(rows, 20)
@@ -835,7 +850,8 @@ def test_select_token_budget_grouped_stats_bound(spark):
     df = spark.createDataFrame(rows, "g: string, id: bigint, score: double, tok: bigint")
     stats: dict = {}
     select_token_budget_grouped(
-        df, "g", "id", "score", "tok", 40, buckets=10, _stats=stats
+        df, "g", "id", "score", "tok", 40, buckets=10, local_threshold=0,
+        _stats=stats,
     ).count()
     assert stats["groups"] == 3
     assert stats["crossing_groups"] == 3
@@ -852,18 +868,19 @@ def test_select_token_budget_null_key_kept(spark):
 
     rows = [("a", 5.0, 10), (None, 5.0, 10), ("b", 5.0, 10), ("c", 1.0, 10)]
     df = spark.createDataFrame(rows, "id: string, score: double, tok: bigint")
-    got = {
-        r["id"]
-        for r in select_token_budget(df, "id", "score", "tok", 20).collect()
-    }
-    # greedy order: (NULL, 5.0), ("a", 5.0), ("b", 5.0), ("c", 1.0)
-    assert got == {None, "a"}
-    # boundary row IS the NULL-key row: only it fits
-    got1 = {
-        r["id"]
-        for r in select_token_budget(df, "id", "score", "tok", 10).collect()
-    }
-    assert got1 == {None}
+    for kw in _PLANNERS:
+        got = {
+            r["id"]
+            for r in select_token_budget(df, "id", "score", "tok", 20, **kw).collect()
+        }
+        # greedy order: (NULL, 5.0), ("a", 5.0), ("b", 5.0), ("c", 1.0)
+        assert got == {None, "a"}, kw
+        # boundary row IS the NULL-key row: only it fits
+        got1 = {
+            r["id"]
+            for r in select_token_budget(df, "id", "score", "tok", 10, **kw).collect()
+        }
+        assert got1 == {None}, kw
 
 
 def test_select_token_budget_null_key_key_refinement(spark):
@@ -879,7 +896,7 @@ def test_select_token_budget_null_key_key_refinement(spark):
         r["id"]
         for r in select_token_budget(
             df, "id", "score", "tok", 7 * 100,
-            buckets=4, window_cap=16, _stats=stats,
+            buckets=4, window_cap=16, local_threshold=0, _stats=stats,
         ).collect()
     }
     # first 100 rows of the key order: NULL, k0000..k0098
@@ -940,7 +957,7 @@ def test_select_token_budget_grouped_auto_refines_heavy_groups(spark):
         (r["g"], r["id"])
         for r in select_token_budget_grouped(
             df, "g", "id", "score", "tok", budgets,
-            buckets=8, window_cap=64, _stats=stats,
+            buckets=8, window_cap=64, local_threshold=0, _stats=stats,
         ).collect()
     )
     expect = sorted(
@@ -1013,6 +1030,34 @@ def test_select_token_budget_grouped_nan_group_respects_budget(spark):
         ).collect()
     )
     assert got2 == [0, 1, 2, 3, 4, 318, 319]
+
+
+def test_select_token_budget_grouped_struct_heavy_group(spark):
+    """A struct-typed group collects as a Row, which F.lit cannot express
+    (it fails only when a plan is analyzed): a heavy struct group must
+    stay on the shared-window plan instead of failing the walk — on both
+    planners, bit-equal to the per-group greedy prefix."""
+    from pyspark.sql import Row
+
+    from pq_vector_spark.operators.sampling import select_token_budget_grouped
+
+    heavy, light = Row(x=1, y="a"), Row(x=2, y="b")
+    rows = [(heavy, i, float(i % 5), 7) for i in range(300)] + [
+        (light, 1000 + i, float(i % 3), 7) for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "g: struct<x: int, y: string>, id: bigint, score: double, tok: bigint"
+    )
+    want = _grouped_greedy(rows, lambda g: 700)
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "g", "id", "score", "tok", 700,
+                buckets=4, window_cap=8, **kw,
+            ).collect()
+        )
+        assert got == want, kw
 
 
 def test_select_token_budget_grouped_validates_max_depth(spark):
@@ -1172,7 +1217,7 @@ def test_select_token_budget_grouped_batches_heavy_refinement(spark):
             (r["g"], r["id"])
             for r in select_token_budget_grouped(
                 df, "g", "id", "score", "tok", budget,
-                buckets=8, window_cap=32, _stats=stats,
+                buckets=8, window_cap=32, local_threshold=0, _stats=stats,
             ).collect()
         )
     finally:
