@@ -775,9 +775,8 @@ def _knn_sql(spark, sf_dir):
 
 
 def _knn_auto(spark, sf_dir):
-    """Automatic top-k PLAN interception: the query text is a CTE the
-    textual matcher (plans/sql.py regex) cannot see, so the only way this
-    can take the indexed path is the optimized-plan interceptor
+    """Automatic top-k PLAN interception: the query text is a CTE, which
+    reaches the indexed path through the optimized-plan interceptor
     (plans/intercept.py ≙ reference physical rule src/df_vector/physical.rs:
     20-229). nprobe = n_clusters ⇒ candidate set is all rows ⇒ exact.
     The CollectMetrics assertion makes the row FAIL (not silently pass on
@@ -946,8 +945,7 @@ def _knn_auto_distance(spark, sf_dir):
     bare attribute whose defining Alias lives under the Sort — the
     interceptor resolves it through the Project and the replacement emits
     the bit-equal distance column. Rounding happens OUTSIDE the
-    intercepted query (a round() inside the projection is, correctly, a
-    decline shape), mirroring how knn_distance's API twin rounds."""
+    intercepted query, mirroring how knn_distance's API twin rounds."""
     from pyspark.sql import Observation
 
     from pq_vector_spark.plans.sql import pq_sql, register_indexed_table

@@ -302,6 +302,10 @@ def append_to_index(
     else:
         meta.pop("file_stats", None)
     _write_sidecar(spark, indexed_path, idx.centroids, meta)
+    # a view registered over the layout lists the files it had then
+    from pq_vector_spark.plans.intercept import refresh_indexed_tables
+
+    refresh_indexed_tables(spark, indexed_path)
     # how many rows THIS call appended — returned (not persisted) so hot
     # callers (streaming ingest) don't pay a second sidecar read for it
     return {**meta, "last_append_rows": int(stats.rows)}
@@ -863,6 +867,8 @@ def auto_rebuild_if_stale(
         # after a successful swap the sentinel vanished with the retired
         # directory; on failure this clears it so appends resume
         _release_rebuild_sentinel(spark, indexed_path)
+    # a view registered over the layout lists the retired directory's files
+    _icpt.refresh_indexed_tables(spark, indexed_path)
 
     if sidecar is not None:
         from pq_vector_spark.index.pq import encode_indexed

@@ -218,6 +218,21 @@ def _cap_candidates(df: DataFrame, quotas: dict) -> DataFrame:
     )
 
 
+def open_index(
+    spark: SparkSession, path: str, query: Sequence[float], column: Optional[str] = None
+):
+    """The layout's sidecar and the query as float32, checked against it:
+    ``column`` (when given) must be the indexed column and the query must
+    have the index's dimension. Returns ``(LoadedIndex, query)``."""
+    idx = load_index(spark, path)
+    if column is not None and column != idx.meta["column"]:
+        # ≙ column-name validation, src/df_vector/index_exec.rs:123-129
+        raise IndexError_(
+            f"index was built on column {idx.meta['column']!r}, not {column!r}"
+        )
+    return idx, _check_query_dim(query, idx.meta["dim"])
+
+
 def indexed_topk(
     spark: SparkSession,
     path: str,
@@ -247,17 +262,41 @@ def indexed_topk(
     """
     if metric not in ("l2", "cosine"):
         raise ValueError(f"unknown metric {metric!r}; choose 'l2' or 'cosine'")
-    opts = options or VectorTopKOptions()
-    idx = load_index(spark, path)
-    if column is not None and column != idx.meta["column"]:
-        # ≙ column-name validation, src/df_vector/index_exec.rs:123-129
-        raise IndexError_(
-            f"index was built on column {idx.meta['column']!r}, not {column!r}"
-        )
-    q = _check_query_dim(query, idx.meta["dim"])
+    idx, q = open_index(spark, path, query, column)
+    return probe_topk(
+        spark.read.parquet(path),
+        idx,
+        q,
+        k,
+        options=options,
+        pre_filter=pre_filter,
+        tie_break=tie_break,
+        keep_distance=keep_distance,
+        observation=observation,
+        metric=metric,
+    )
 
+
+def probe_topk(
+    df: DataFrame,
+    idx: LoadedIndex,
+    q: np.ndarray,
+    k: int,
+    *,
+    options: Optional[VectorTopKOptions] = None,
+    pre_filter: Optional[Column] = None,
+    tie_break: Optional[str] = None,
+    keep_distance: bool = False,
+    observation=None,
+    metric: str = "l2",
+) -> DataFrame:
+    """The IVF probe of ``indexed_topk`` over ``df``, a scan of the indexed
+    layout ``idx`` describes (its rows carry the cluster column), for the
+    query ``q`` that ``open_index`` returned. The output keeps ``df``'s
+    columns, minus the cluster column."""
+    opts = options or VectorTopKOptions()
+    spark = df.sparkSession
     probed = nearest_centroids(q, idx.centroids, opts.nprobe)
-    df = spark.read.parquet(path)
     # The probed-cluster predicate pushes to the parquet scan; the
     # cluster-sorted layout turns it into file/row-group skipping. Beyond
     # spark.sql.parquet.pushdown.inFilterThreshold (default 10) parquet-mr
@@ -298,6 +337,11 @@ def indexed_topk(
         if opts.max_candidates is not None:
             n_cands = min(n_cands, opts.max_candidates)
     if observation is not None:
+        if pre_filter is not None:
+            # resolve the user filter before the single-use Observation
+            # binds: a filter that does not resolve must raise with the
+            # Observation still free for a retry
+            cands.filter(pre_filter)
         # ≙ the reference's plan counters candidate_rows / files_scanned
         # (src/df_vector/index_exec.rs:283-300, exec.rs:405-427), surfaced
         # through Spark's Observation API with zero extra passes.

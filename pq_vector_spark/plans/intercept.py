@@ -1,30 +1,34 @@
 """Automatic top-k plan interception — the PySpark realization of the
 reference's physical-optimizer rule (reference: src/df_vector/physical.rs:20-229,
-wired at src/df_vector/session.rs:16-35).
+wired at src/df_vector/session.rs:16-35), and the one route from SQL to
+the index: ``plans/sql.py:pq_sql`` is ``spark.sql`` followed by
+``try_intercept_topk``.
 
-Where ``plans/sql.py`` pattern-matches the SQL *text*, this module matches
-the *optimized logical plan* of an already-analyzed DataFrame, so any query
-that Catalyst normalizes into the canonical shape
+It matches the *optimized logical plan* of an already-analyzed DataFrame,
+so any query that Catalyst normalizes into the canonical shape
 
   GlobalLimit k
     LocalLimit k
-      [Project <attrs>]
+      [Project <output>]
         Sort [<l2-distance>(col, literal-vec) ASC [, attr ASC]] global
-          [Project <attrs> / Filter <cond>]*
+          [Project <columns> / Filter <cond>]*
             LogicalRelation parquet <indexed path>
 
-is rerouted to the IVF probe (``indexed_topk``) — regardless of how the SQL
-was written (subqueries, CTEs, odd whitespace, DataFrame API with
-``F.expr``). This is the honest in-Python equivalent of injecting a physical
-rule: PySpark cannot register Catalyst rules without a JVM extension jar
-(SURVEY §7/M4), so we inspect ``queryExecution().optimizedPlan()`` through
-py4j AFTER Catalyst has done its normalization work and swap the DataFrame
-wholesale.
+is rerouted to the IVF probe — regardless of how the query was written
+(subqueries, CTEs, odd whitespace, DataFrame API with ``F.expr``). PySpark
+cannot register Catalyst rules without a JVM extension jar (SURVEY §7/M4),
+so the plan is read AFTER Catalyst has normalized it: its shape in one
+``optimizedPlan().toJSON()`` round trip, matched in Python, whatever the
+query vector's length. The replacement is built from the matched plan's
+own resolved pieces: the candidates are its ``LogicalRelation`` (no path
+re-read), each Filter applies as a Column over its own condition, and the
+Projects are re-applied over the probe's k rows, so every computed column
+— the distance included — is the user's own expression.
 
 Every guard the reference's rule applies is applied here (single distance
 key, literal query vector, simple scan below the sort —
 physical.rs:134-177; Cast-stripping ≙ physical.rs:216-229). Two extensions
-beyond the reference: a trailing plain-attribute ASC key is accepted and
+beyond the reference: a trailing plain-column ASC key is accepted and
 forwarded as the deterministic tie-break, and ``ORDER BY
 cosine_similarity(col, vec) DESC`` (the reference is L2-ASC-only) routes to
 the IVF cosine path over the same layout. Any mismatch — or any py4j
@@ -35,14 +39,18 @@ reference's rule declining to fire.
 
 from __future__ import annotations
 
+import json
 import logging
+import math
 import os
 import re
 import threading
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from py4j.protocol import Py4JError
+from pyspark.sql import SparkSession
+from pyspark.sql.classic.column import Column
+from pyspark.sql.classic.dataframe import DataFrame
 
 _LOG = logging.getLogger("pq_vector_spark.intercept")
 
@@ -75,6 +83,31 @@ class _Decline(Exception):
 
 def _decline(reason: str):
     raise _Decline(reason)
+
+
+# tables registered as "indexed": view name -> filesystem path of the layout
+_INDEXED_TABLES: Dict[str, str] = {}
+
+
+def register_indexed_table(spark: SparkSession, name: str, path: str) -> None:
+    """Make ``name`` queryable in SQL *and* eligible for interception
+    (≙ the reference wiring its rule into the session, session.rs:24-35).
+    The view lists the layout's files as they are now; ``append_to_index``
+    and ``auto_rebuild_if_stale`` re-register it (``refresh_indexed_tables``)."""
+    from pq_vector_spark.index.build import CLUSTER_COL
+
+    spark.read.parquet(path).drop(CLUSTER_COL).createOrReplaceTempView(name)
+    _INDEXED_TABLES[name] = path
+
+
+def refresh_indexed_tables(spark: SparkSession, path: str) -> None:
+    """Re-register every view registered over the layout at ``path``, so
+    each lists the files a mutation of the layout left behind (a temp
+    view keeps the listing it was created with)."""
+    key = _normalize_path(path)
+    for name, p in list(_INDEXED_TABLES.items()):
+        if _normalize_path(p) == key:
+            register_indexed_table(spark, name, p)
 
 
 # PQ codes sidecars keyed by normalized indexed path: when registered, the
@@ -354,8 +387,27 @@ def unregister_codes_sidecar(indexed_path: str, spark=None) -> None:
     _CODES_SIDECAR_MISSES[key] = _time.monotonic()
 
 
-def _cls(jnode) -> str:
-    return jnode.getClass().getSimpleName()
+def _tree(flat: list) -> dict:
+    """Nest one flattened pre-order node list of ``TreeNode.toJSON`` into
+    its node dicts, each child list under ``"_ch"``. Children are read by
+    position only: the JSON numbers equal children by their first index
+    (both sides of ``(x - y) * (x - y)`` read ``0``)."""
+    it = iter(flat)
+
+    def build():
+        node = next(it)
+        node["_ch"] = [build() for _ in range(node["num-children"])]
+        return node
+
+    return build()
+
+
+def _cls(node) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _eid(node) -> int:
+    return node["exprId"]["id"]
 
 
 def _strip_cast(e):
@@ -363,55 +415,80 @@ def _strip_cast(e):
     # (physical.rs:216-229); Catalyst inserts Cast when the stored column is
     # array<float> and the literal folded to array<double>.
     while _cls(e) in ("Cast", "AnsiCast", "TryCast"):
-        e = e.children().apply(0)
+        e = e["_ch"][0]
     return e
 
 
 def _lambda_parts(lf):
     """LambdaFunction children are (function, arg0, arg1, ...)."""
-    ch = lf.children()
-    return ch.apply(0), [ch.apply(i) for i in range(1, ch.size())]
+    return lf["_ch"][0], lf["_ch"][1:]
 
 
-def _eid(v) -> int:
-    return v.exprId().id()
+def _is_var(e, eid: int) -> bool:
+    return _cls(e) == "NamedLambdaVariable" and _eid(e) == eid
+
+
+def _is_double(e, test) -> bool:
+    """``e`` is a double Literal whose value passes ``test``."""
+    return (
+        _cls(e) == "Literal"
+        and e.get("dataType") == "double"
+        and e.get("value") is not None
+        and test(float(e["value"]))
+    )
 
 
 def _is_sub(e, a_id: int, b_id: int) -> bool:
     """e == Subtract(var a, var b) with exactly those lambda variables."""
-    if _cls(e) != "Subtract":
+    return (
+        _cls(e) == "Subtract"
+        and _is_var(e["_ch"][0], a_id)
+        and _is_var(e["_ch"][1], b_id)
+    )
+
+
+def _is_binary_of_args(fn, op: str, args) -> bool:
+    """fn == op(var, var) over exactly the lambda's two arguments."""
+    if _cls(fn) != op or len(args) != 2:
         return False
-    l, r = e.children().apply(0), e.children().apply(1)
+    l, r = fn["_ch"]
     return (
         _cls(l) == "NamedLambdaVariable"
         and _cls(r) == "NamedLambdaVariable"
-        and _eid(l) == a_id
-        and _eid(r) == b_id
+        and {_eid(l), _eid(r)} == {_eid(args[0]), _eid(args[1])}
     )
 
 
 def _is_zero_plus_identity(zero, merge, finish) -> bool:
     """zero == 0.0, merge == (acc, x) -> acc + x, finish == identity — the
     shared tail of every fold our expansions emit."""
-    if _cls(zero) != "Literal" or float(zero.value()) != 0.0:
+    if not _is_double(zero, lambda v: v == 0.0):
         return False
     mfn, margs = _lambda_parts(merge)
-    if _cls(mfn) != "Add" or len(margs) != 2:
-        return False
-    add_ids = {_eid(mfn.children().apply(0)), _eid(mfn.children().apply(1))}
-    if add_ids != {_eid(margs[0]), _eid(margs[1])}:
+    if not _is_binary_of_args(mfn, "Add", margs):
         return False
     ffn, fargs = _lambda_parts(finish)
-    return (
-        _cls(ffn) == "NamedLambdaVariable"
-        and len(fargs) == 1
-        and _eid(ffn) == _eid(fargs[0])
-    )
+    return len(fargs) == 1 and _is_var(ffn, _eid(fargs[0]))
+
+
+def query_vector(lit) -> Optional[list]:
+    """The doubles of an ``array<double>`` Literal node, parsed from its JSON
+    ``value`` (``[x,y,...]``, each element Java's ``Double.toString``, which
+    parses back to the same double, NaN and ±Infinity included); None when
+    the literal is of another type or holds a NULL."""
+    dt = lit.get("dataType")
+    if not isinstance(dt, dict) or dt.get("elementType") != "double":
+        return None
+    body = (lit.get("value") or "")[1:-1]
+    try:
+        return [float(x) for x in body.split(",")] if body else []
+    except ValueError:
+        return None
 
 
 def _attr_lit_sides(left, right):
-    """(attr, lit) when one side is the stored column and the other the
-    (constant-folded) query-vector literal, else None."""
+    """(attr, literal, vector) when one side is the stored column and the
+    other the (constant-folded) query-vector literal, else None."""
     left, right = _strip_cast(left), _strip_cast(right)
     if _cls(left) == "AttributeReference" and _cls(right) == "Literal":
         attr, lit = left, right
@@ -419,66 +496,51 @@ def _attr_lit_sides(left, right):
         attr, lit = right, left
     else:
         return None
-    if not lit.dataType().simpleString().startswith("array<"):
+    vec = query_vector(lit)
+    return None if vec is None else (attr, lit, vec)
+
+
+def _match_fold(e, pair_op):
+    """ArrayAggregate(ZipWith(a, b, pair_op), 0.0, +, id) → (ZipWith node,
+    lambda function node, lambda args), or None."""
+    e = _strip_cast(e)
+    if _cls(e) != "ArrayAggregate" or len(e["_ch"]) != 4:
         return None
-    return attr, lit
+    zw, zero, merge, finish = e["_ch"]
+    if _cls(zw) != "ZipWith" or not _is_zero_plus_identity(zero, merge, finish):
+        return None
+    fn, args = _lambda_parts(zw["_ch"][2])
+    if _cls(fn) != pair_op or len(args) != 2:
+        return None
+    return zw, fn, args
 
 
 def _match_dot(e):
-    """ArrayAggregate(ZipWith(a, b, (x,y)->x*y), 0.0, +, id) → (attr, lit)
-    jexprs, or None."""
-    e = _strip_cast(e)
-    if _cls(e) != "ArrayAggregate":
+    """ArrayAggregate(ZipWith(a, b, (x,y)->x*y), 0.0, +, id) → (attr,
+    literal, vector), or None."""
+    m = _match_fold(e, "Multiply")
+    if m is None or not _is_binary_of_args(m[1], "Multiply", m[2]):
         return None
-    ch = e.children()
-    if ch.size() != 4:
-        return None
-    zw, zero, merge, finish = (ch.apply(i) for i in range(4))
-    if _cls(zw) != "ZipWith" or not _is_zero_plus_identity(zero, merge, finish):
-        return None
-    sides = _attr_lit_sides(zw.left(), zw.right())
-    if sides is None:
-        return None
-    fn, args = _lambda_parts(zw.function())
-    if _cls(fn) != "Multiply" or len(args) != 2:
-        return None
-    mul_ids = {_eid(fn.children().apply(0)), _eid(fn.children().apply(1))}
-    if (
-        _cls(fn.children().apply(0)) != "NamedLambdaVariable"
-        or _cls(fn.children().apply(1)) != "NamedLambdaVariable"
-        or mul_ids != {_eid(args[0]), _eid(args[1])}
-    ):
-        return None
-    return sides
+    return _attr_lit_sides(m[0]["_ch"][0], m[0]["_ch"][1])
 
 
 def _match_norm(e):
     """Sqrt(ArrayAggregate(ArrayTransform(base, v -> v*v), 0.0, +, id)) →
-    the (cast-stripped) base jexpr, or None."""
+    the (cast-stripped) base node, or None."""
     e = _strip_cast(e)
     if _cls(e) != "Sqrt":
         return None
-    agg = _strip_cast(e.children().apply(0))
-    if _cls(agg) != "ArrayAggregate":
+    agg = _strip_cast(e["_ch"][0])
+    if _cls(agg) != "ArrayAggregate" or len(agg["_ch"]) != 4:
         return None
-    ch = agg.children()
-    if ch.size() != 4:
-        return None
-    tfm, zero, merge, finish = (ch.apply(i) for i in range(4))
+    tfm, zero, merge, finish = agg["_ch"]
     if _cls(tfm) != "ArrayTransform" or not _is_zero_plus_identity(zero, merge, finish):
         return None
-    tch = tfm.children()
-    base, fn = tch.apply(0), tch.apply(1)
-    f, args = _lambda_parts(fn)
+    base, lam = tfm["_ch"]
+    f, args = _lambda_parts(lam)
     if _cls(f) != "Multiply" or len(args) != 1:
         return None
-    l, r = f.children().apply(0), f.children().apply(1)
-    if not (
-        _cls(l) == "NamedLambdaVariable"
-        and _cls(r) == "NamedLambdaVariable"
-        and _eid(l) == _eid(args[0])
-        and _eid(r) == _eid(args[0])
-    ):
+    if not all(_is_var(x, _eid(args[0])) for x in f["_ch"]):
         return None
     return _strip_cast(base)
 
@@ -492,38 +554,26 @@ def _match_l2_sort_expr(expr):
 
     Returns (column_attr, [floats], has_sqrt) or None. The Sqrt is
     optional so ``ORDER BY squared_l2(...)`` (same ordering) intercepts
-    too; ``has_sqrt`` tells the caller whether the expression's VALUE is
-    the true distance (needed when the query also projects it).
+    too; ``has_sqrt`` tells whether the expression's VALUE is the true
+    distance.
     """
     e = _strip_cast(expr)
-    has_sqrt = False
-    if _cls(e) == "Sqrt":
-        has_sqrt = True
-        e = _strip_cast(e.children().apply(0))
-    if _cls(e) != "ArrayAggregate":
+    has_sqrt = _cls(e) == "Sqrt"
+    if has_sqrt:
+        e = e["_ch"][0]
+    m = _match_fold(e, "Multiply")
+    if m is None:
         return None
-    ch = e.children()  # (argument, zero, merge, finish)
-    if ch.size() != 4:
-        return None
-    zw, zero, merge, finish = (ch.apply(i) for i in range(4))
-    if _cls(zw) != "ZipWith" or not _is_zero_plus_identity(zero, merge, finish):
-        return None
-    sides = _attr_lit_sides(zw.left(), zw.right())
-    if sides is None:
-        return None
-    attr, lit = sides
+    zw, fn, args = m
     # (x, y) -> (x - y) * (x - y)   [exprId-checked, so (x-y)*(y-x) declines]
-    fn, args = _lambda_parts(zw.function())
-    if _cls(fn) != "Multiply" or len(args) != 2:
-        return None
     a_id, b_id = _eid(args[0]), _eid(args[1])
-    m_l, m_r = fn.children().apply(0), fn.children().apply(1)
+    m_l, m_r = fn["_ch"]
     ok_xy = _is_sub(m_l, a_id, b_id) and _is_sub(m_r, a_id, b_id)
     ok_yx = _is_sub(m_l, b_id, a_id) and _is_sub(m_r, b_id, a_id)
     if not (ok_xy or ok_yx):
         return None
-    vec = [float(x) for x in lit.value().toDoubleArray()]
-    return attr, vec, has_sqrt
+    sides = _attr_lit_sides(zw["_ch"][0], zw["_ch"][1])
+    return None if sides is None else (sides[0], sides[2], has_sqrt)
 
 
 def _match_cosine_sort_expr(expr):
@@ -534,102 +584,59 @@ def _match_cosine_sort_expr(expr):
                 d -> CASE WHEN d = 0 THEN NaN ELSE dot(col, lit) / d END)[0]
 
     — i.e. GetArrayItem(ArrayTransform(CreateArray([Multiply(norm, norm)]),
-    λ CaseWhen), 0). The dot's (attr, lit) must semantically match the two
-    norm bases. Returns (column_attr, [floats]) or None.
+    λ CaseWhen), 0). The dot's (attr, lit) must match the two norm bases.
+    Returns (column_attr, [floats]) or None.
     """
     e = _strip_cast(expr)
     if _cls(e) != "GetArrayItem":
         return None
-    idx_lit = e.children().apply(1)
-    if _cls(idx_lit) != "Literal" or int(idx_lit.value()) != 0:
+    tfm, idx_lit = e["_ch"]
+    if _cls(idx_lit) != "Literal" or idx_lit.get("value") != "0":
         return None
-    tfm = _strip_cast(e.children().apply(0))
+    tfm = _strip_cast(tfm)
     if _cls(tfm) != "ArrayTransform":
         return None
-    arr, lam = tfm.children().apply(0), tfm.children().apply(1)
-    if _cls(arr) != "CreateArray" or arr.children().size() != 1:
+    arr, lam = tfm["_ch"]
+    if _cls(arr) != "CreateArray" or len(arr["_ch"]) != 1:
         return None
-    denom = _strip_cast(arr.children().apply(0))
+    denom = _strip_cast(arr["_ch"][0])
     if _cls(denom) != "Multiply":
         return None
-    base_a = _match_norm(denom.children().apply(0))
-    base_b = _match_norm(denom.children().apply(1))
-    if base_a is None or base_b is None:
+    bases = [_match_norm(x) for x in denom["_ch"]]
+    if None in bases:
         return None
     fn, args = _lambda_parts(lam)
-    if len(args) != 1 or _cls(fn) != "CaseWhen":
-        return None
     # CaseWhen children: (cond, value, elseValue) for the single branch
-    cch = fn.children()
-    if cch.size() != 3:
+    if len(args) != 1 or _cls(fn) != "CaseWhen" or len(fn["_ch"]) != 3:
         return None
-    cond, val, els = cch.apply(0), cch.apply(1), cch.apply(2)
+    cond, val, els = fn["_ch"]
     d_id = _eid(args[0])
     if _cls(cond) != "EqualTo":
         return None
-    c_l, c_r = cond.children().apply(0), cond.children().apply(1)
+    c_l, c_r = cond["_ch"]
+    is_zero = lambda v: v == 0.0  # noqa: E731
     if not (
-        (_cls(c_l) == "NamedLambdaVariable" and _eid(c_l) == d_id
-         and _cls(c_r) == "Literal" and float(c_r.value()) == 0.0)
-        or (_cls(c_r) == "NamedLambdaVariable" and _eid(c_r) == d_id
-            and _cls(c_l) == "Literal" and float(c_l.value()) == 0.0)
+        (_is_var(c_l, d_id) and _is_double(c_r, is_zero))
+        or (_is_var(c_r, d_id) and _is_double(c_l, is_zero))
     ):
         return None
-    import math
-
-    if _cls(val) != "Literal" or not math.isnan(float(val.value())):
+    if not _is_double(val, math.isnan) or _cls(els) != "Divide":
         return None
-    if _cls(els) != "Divide":
-        return None
-    dot, dvar = els.children().apply(0), els.children().apply(1)
-    if _cls(dvar) != "NamedLambdaVariable" or _eid(dvar) != d_id:
+    dot, dvar = els["_ch"]
+    if not _is_var(dvar, d_id):
         return None
     sides = _match_dot(dot)
     if sides is None:
         return None
-    attr, lit = sides
+    attr, lit, vec = sides
     # the dot's column/vector must be the same as the norms' bases
-    norm_attr = base_a if _cls(base_a) == "AttributeReference" else base_b
-    norm_lit = base_b if norm_attr is base_a else base_a
-    if _cls(norm_attr) != "AttributeReference" or _cls(norm_lit) != "Literal":
+    attrs = [b for b in bases if _cls(b) == "AttributeReference"]
+    lits = [b for b in bases if _cls(b) == "Literal"]
+    if len(attrs) != 1 or len(lits) != 1 or _eid(attrs[0]) != _eid(attr):
         return None
-    if _eid(attr) != _eid(norm_attr) or not lit.semanticEquals(norm_lit):
+    if (lits[0]["value"], lits[0]["dataType"]) != (lit["value"], lit["dataType"]):
         return None
-    vec = [float(x) for x in lit.value().toDoubleArray()]
     return attr, vec
-
-
-def _attr_only_project(jnode, allow_alias_eid: Optional[int] = None) -> Optional[list]:
-    """Project list if every output is a bare AttributeReference — or, when
-    ``allow_alias_eid`` is given, the single Alias with that exprId (the
-    projected distance column being intercepted) — else None."""
-    pl = jnode.projectList()
-    out = []
-    for i in range(pl.size()):
-        e = pl.apply(i)
-        if _cls(e) == "Alias" and allow_alias_eid is not None:
-            if e.exprId().id() != allow_alias_eid:
-                return None
-        elif _cls(e) != "AttributeReference":
-            return None
-        out.append(e.name())
-    return out
-
-
-def _projected_sort_target(sort_key, below):
-    """When the sort key is a bare attribute defined by the Project directly
-    under the Sort (``SELECT id, array_distance(v, q) AS d … ORDER BY d``),
-    return ``(defining_jexpr, alias_name, alias_eid)`` so the kernel
-    matchers can run on the alias's child; else (None, None, None)."""
-    key = _strip_cast(sort_key)
-    if _cls(key) != "AttributeReference" or _cls(below) != "Project":
-        return None, None, None
-    pl = below.projectList()
-    for i in range(pl.size()):
-        e = pl.apply(i)
-        if _cls(e) == "Alias" and e.exprId().id() == _eid(key):
-            return e.child(), e.name(), e.exprId().id()
-    return None, None, None
 
 
 def _normalize_path(p: str) -> str:
@@ -638,35 +645,46 @@ def _normalize_path(p: str) -> str:
     return os.path.abspath(p.rstrip("/"))
 
 
-def _unqualified_sql(spark, jexpr) -> str:
-    """Regenerate a Filter condition's SQL with every ``AttributeReference``
-    qualifier dropped — by rebuilding the EXPRESSION TREE (py4j:
-    ``withQualifier`` on attribute nodes, ``withNewChildren`` up the spine),
-    never by rewriting the SQL string. A string literal whose text contains
-    ``alias.`` therefore survives verbatim (the old regex approach was
-    quote-blind and could corrupt such literals into silently-wrong
-    filters). The rebuilt scan has no view alias, so the unqualified names
-    resolve against it directly."""
-    to_seq = spark._jvm.org.apache.spark.api.python.PythonUtils.toSeq
+def _walk(node):
+    yield node
+    for c in node["_ch"]:
+        yield from _walk(c)
 
-    def rebuild(e):
-        if _cls(e) == "AttributeReference":
-            return e.withQualifier(to_seq([]))
-        ch = e.children()
-        if ch.size() == 0:
-            return e
-        rebuilt = [rebuild(ch.apply(i)) for i in range(ch.size())]
-        return e.withNewChildren(to_seq(rebuilt))
 
-    return rebuild(jexpr).sql()
+def _reads_only(expr, eids) -> bool:
+    """Every column ``expr`` reads is one of ``eids``, and it runs no
+    subquery (a subquery expression carries its own ``plan``)."""
+    return all(
+        "plan" not in n
+        and (_cls(n) != "AttributeReference" or _eid(n) in eids)
+        for n in _walk(expr)
+    )
+
+
+_JVM_REFS: dict = {}
+
+
+def _jvm_ref(spark, dotted: str):
+    """A JVM class or static method by its dotted name, cached: py4j
+    resolves every segment of ``spark._jvm.a.b.C.m`` with a round trip of
+    its own."""
+    key = (spark._jvm, dotted)
+    if key not in _JVM_REFS:
+        ref = spark._jvm
+        for part in dotted.split("."):
+            ref = getattr(ref, part)
+        _JVM_REFS[key] = ref
+    return _JVM_REFS[key]
 
 
 def _try_pq_route(
-    spark, df, path, column, vec, k, tie_break, options, observation,
+    spark, path, column, vec, k, tie_break, options, observation, avail, out_cols,
     dist_alias=None,
 ):
     """Attempt the IVF-PQ interception route for an L2, unfiltered top-k
-    over ``path``. Returns ``(out_df, obs_consumed)``:
+    over ``path`` whose output columns ``out_cols`` are plain columns of
+    the relation (``avail``, without the cluster column) or the projected
+    distance ``dist_alias``. Returns ``(out_df, obs_consumed)``:
 
     - ``(DataFrame, _)`` — route succeeded;
     - ``(None, False)`` — route not applicable or failed before the
@@ -692,16 +710,13 @@ def _try_pq_route(
 
         # ivfpq_topk's output is the raw layout minus the cluster column —
         # plus, when the query projects the distance itself, the re-rank
-        # stage's exact distance column (renamed below); a projection
-        # outside that set cannot take this route (schema-only probe — no
-        # job)
-        avail = set(spark.read.parquet(path).columns) - {CLUSTER_COL}
+        # stage's exact distance column (renamed below)
         if dist_alias is not None:
             avail = avail | {dist_alias}
-        if not set(df.columns) <= avail:
+        if not set(out_cols) <= avail:
             _LOG.info(
                 "ivfpq route skipped: projection needs columns the codes "
-                "route drops (%s)", sorted(set(df.columns) - avail)
+                "route drops (%s)", sorted(set(out_cols) - avail)
             )
             return None, False
         # codes-table shape pre-check (schema-only): every post-attach
@@ -762,7 +777,7 @@ def _try_pq_route(
 
             if dist_alias != DISTANCE_COL:
                 out = out.withColumnRenamed(DISTANCE_COL, dist_alias)
-        return out.select(*df.columns), False
+        return out.select(*out_cols), False
     except Exception as e:
         consumed = (
             observation is not None and getattr(observation, "_jo", None) is not None
@@ -783,19 +798,17 @@ def try_intercept_topk(
     observation=None,
 ) -> Optional[DataFrame]:
     """Inspect ``df``'s optimized logical plan; if it is the canonical
-    top-k-by-L2-distance shape over a registered indexed table, return the
+    top-k-by-distance shape over a registered indexed table, return the
     equivalent IVF-probe DataFrame (same output columns), else None.
 
     Never raises: any unexpected plan/py4j shape declines (returns None)
     and records the guard that fired in ``last_decline_reason()``.
     """
-    from pq_vector_spark.plans.sql import _INDEXED_TABLES
-
     if not _INDEXED_TABLES:
         _set_decline("no-indexed-tables: register_indexed_table was never called")
         return None
     try:
-        out = _try_intercept(spark, df, options, observation, _INDEXED_TABLES)
+        out = _try_intercept(spark, df, options, observation)
         _set_decline(None)
         return out
     except _Decline as d:
@@ -806,129 +819,160 @@ def try_intercept_topk(
         return None
 
 
-def _try_intercept(spark, df, options, observation, indexed_tables):
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if _cls(plan) != "GlobalLimit":
-        _decline(f"root-not-global-limit: plan root is {_cls(plan)}, not GlobalLimit")
-    k_lit = plan.limitExpr()
+def _try_intercept(spark, df, options, observation):
+    from pq_vector_spark.index.build import CLUSTER_COL
+
+    jplan = df._jdf.queryExecution().optimizedPlan()
+    # the whole plan in one round trip: its pre-order node list. Above the
+    # scan only unary nodes without subqueries are accepted, so list index
+    # i is also the pre-order number ``jplan.p(i)`` fetches node i by.
+    nodes = json.loads(jplan.toJSON())
+    if _cls(nodes[0]) != "GlobalLimit":
+        _decline(f"root-not-global-limit: plan root is {_cls(nodes[0])}, not GlobalLimit")
+    k_lit = _tree(nodes[0]["limitExpr"])
     if _cls(k_lit) != "Literal":
         _decline("limit-not-literal: LIMIT is not a constant")
-    k = int(k_lit.value())
-    node = plan.children().apply(0)
-    if _cls(node) != "LocalLimit":
-        _decline(f"no-local-limit: under GlobalLimit is {_cls(node)}")
-    node = node.children().apply(0)
-    if _cls(node) == "Project":
-        if _attr_only_project(node) is None:
-            _decline("project-not-attrs-only: projection computes expressions")
-        node = node.children().apply(0)
-    if _cls(node) != "Sort" or not getattr(node, "global")():
-        _decline(f"no-global-sort: under limit is {_cls(node)} (need global Sort)")
-    order = node.order()
-    if order.size() not in (1, 2):
-        _decline(f"order-keys: {order.size()} sort keys (need 1-2)")
-    so = order.apply(0)
+    k = int(k_lit["value"])
+    if _cls(nodes[1]) != "LocalLimit":
+        _decline(f"no-local-limit: under GlobalLimit is {_cls(nodes[1])}")
+    i = 2
+    top = None  # the Project above the Sort: the query's output
+    if _cls(nodes[i]) == "Project":
+        top, i = i, i + 1
+    sort = nodes[i]
+    if _cls(sort) != "Sort" or not sort["global"]:
+        _decline(f"no-global-sort: under limit is {_cls(sort)} (need global Sort)")
+    order = [_tree(o) for o in sort["order"]]
+    if len(order) not in (1, 2):
+        _decline(f"order-keys: {len(order)} sort keys (need 1-2)")
+
+    # below the Sort: projections and filters down to one relation scan
+    pre = None  # the first Project under the Sort
+    filters = []
+    i += 1
+    while _cls(nodes[i]) in ("Project", "Filter"):
+        if _cls(nodes[i]) == "Filter":
+            filters.append(i)
+        elif pre is None:
+            pre = i
+        i += 1
+    if _cls(nodes[i]) != "LogicalRelation":
+        _decline(f"scan-shape: below Sort is {_cls(nodes[i])}, not a simple relation scan")
+    rel_out = [_tree(a) for a in nodes[i]["output"]]
+    rel_cols = {_eid(a): a["name"] for a in rel_out}
+    if not all(_reads_only(_tree(nodes[f]["condition"]), rel_cols) for f in filters):
+        _decline(
+            "filter-reference: a filter below the Sort reads something other "
+            "than the scanned relation's columns"
+        )
+    pre_list = [_tree(e) for e in nodes[pre]["projectList"]] if pre is not None else []
+    if not all(_reads_only(e, rel_cols) for e in pre_list):
+        _decline(
+            "projection-reference: the projection below the Sort reads "
+            "something other than the scanned relation's columns"
+        )
+    top_list = [_tree(e) for e in nodes[top]["projectList"]] if top is not None else []
+    if any("plan" in n for e in top_list for n in _walk(e)):
+        # a subquery's plan also takes pre-order numbers: jplan.p(i) below
+        # would not fetch node i
+        _decline("projection-reference: the output projection runs a subquery")
+    computed = [e for e in pre_list + top_list if _cls(e) != "AttributeReference"]
+    # the projections re-applied over the probe's rows, innermost first:
+    # the one under the Sort when it computes anything or is the output,
+    # then the output one
+    applied = []
+    if pre is not None and (top is None or any(e in computed for e in pre_list)):
+        applied.append((pre, pre_list))
+    if top is not None:
+        applied.append((top, top_list))
+    out_list = applied[-1][1] if applied else rel_out
+    read = [n for _, lst in applied for e in lst for n in _walk(e)] if applied else rel_out
+    cluster = {e for e, name in rel_cols.items() if name == CLUSTER_COL}
+    if any(_cls(n) == "AttributeReference" and _eid(n) in cluster for n in read):
+        _decline(f"cluster-column: the query reads {CLUSTER_COL}, which the probe drops")
+
+    so = order[0]
+    key = _strip_cast(so["_ch"][0])
     # the sort key may be the kernel expression inline, or a bare attribute
-    # whose defining Alias lives in the Project directly under the Sort
-    # (``SELECT id, array_distance(v, q) AS d … ORDER BY d``) — in the
-    # latter case the replacement must also PRODUCE the distance column
-    proj_target, dist_alias, dist_eid = _projected_sort_target(
-        so.child(), node.children().apply(0)
-    )
-    if so.direction().sql() == "ASC":
+    # whose defining Alias is in the Project under the Sort
+    # (``SELECT id, array_distance(v, q) AS d … ORDER BY d``)
+    alias = None
+    if _cls(key) == "AttributeReference":
+        alias = next(
+            (e for e in pre_list if _cls(e) == "Alias" and _eid(e) == _eid(key)), None
+        )
+    target = key if alias is None else alias["_ch"][0]
+    if so["direction"]["object"].endswith("Ascending$"):
         # L2 distance, ascending — the reference's one shape
         # (ASC-only guard ≙ physical.rs:143-145)
         metric = "l2"
-        matched = _match_l2_sort_expr(so.child())
-        if matched is not None:
-            dist_alias = dist_eid = None  # inline expr; nothing projected
-        elif proj_target is not None:
-            matched = _match_l2_sort_expr(proj_target)
-            if matched is not None and not matched[2]:
-                # the projected VALUE is squared-l2; the probe outputs the
-                # true (sqrt) distance and sqrt(x)^2 re-squares with ulp
-                # error — never silently emit almost-equal values
-                _decline(
-                    "projected-squared-distance: squared_l2 is accepted as "
-                    "a sort key but not as a projected output column"
-                )
+        matched = _match_l2_sort_expr(target)
         if matched is None:
             _decline(
                 "sort-expr-not-l2: ASC sort key is not the canonical "
                 "l2/squared-l2(column, literal-vector) expression"
             )
-        attr, vec, _ = matched
+        attr, vec, true_distance = matched
     else:
         # cosine similarity, DESCENDING — our extension metric over the
         # same layout (probes L2 centroids like the batch kernel)
         metric = "cosine"
-        matched = _match_cosine_sort_expr(so.child())
-        if matched is not None:
-            dist_alias = dist_eid = None
-        elif proj_target is not None:
-            matched = _match_cosine_sort_expr(proj_target)
+        matched = _match_cosine_sort_expr(target)
         if matched is None:
             _decline(
                 "sort-expr-not-cosine: DESC sort key is not the canonical "
                 "cosine_similarity(column, literal-vector) expression"
             )
-        attr, vec = matched
+        (attr, vec), true_distance = matched, False
+    if _eid(attr) not in rel_cols:
+        _decline("sort-column: the distance is not over a column of the scanned relation")
     tie_break = None
-    if order.size() == 2:
-        so2 = order.apply(1)
-        t = _strip_cast(so2.child())
-        if so2.direction().sql() != "ASC" or _cls(t) != "AttributeReference":
-            _decline("tie-break-shape: second sort key must be a plain attribute ASC")
-        tie_break = t.name()
+    if len(order) == 2:
+        so2 = order[1]
+        t = _strip_cast(so2["_ch"][0])
+        if (
+            not so2["direction"]["object"].endswith("Ascending$")
+            or _cls(t) != "AttributeReference"
+            or _eid(t) not in rel_cols
+        ):
+            _decline(
+                "tie-break-shape: second sort key must be a plain column of "
+                "the scanned relation, ASC"
+            )
+        tie_break = t["name"]
 
-    # below the Sort: only attr-projections and filters down to one parquet scan
-    conds = []
-    n2 = node.children().apply(0)
-    while _cls(n2) in ("Project", "Filter"):
-        if _cls(n2) == "Project":
-            if _attr_only_project(n2, allow_alias_eid=dist_eid) is None:
-                _decline("pre-sort-project: projection below Sort computes expressions")
-        else:
-            conds.append(_unqualified_sql(spark, n2.condition()))
-        n2 = n2.children().apply(0)
-    if _cls(n2) != "LogicalRelation":
-        _decline(f"scan-shape: below Sort is {_cls(n2)}, not a simple relation scan")
-    rel = n2.relation()
-    if _cls(rel) != "HadoopFsRelation":
-        _decline(f"relation-kind: {_cls(rel)} is not a file-based relation")
-    rps = rel.location().rootPaths()
-    if rps.size() != 1:
-        _decline(f"multi-root-scan: {rps.size()} root paths (need exactly 1)")
-    scan_path = _normalize_path(rps.apply(0).toString())
+    jrel = jplan.p(i)
+    try:
+        roots = jrel.relation().location().rootPaths().mkString("\n").split("\n")
+    except Py4JError:
+        _decline("relation-kind: the scanned relation is not file-based")
+    if len(roots) != 1:
+        _decline(f"multi-root-scan: {len(roots)} root paths (need exactly 1)")
+    scan_path = _normalize_path(roots[0])
     path = next(
-        (p for p in indexed_tables.values() if _normalize_path(p) == scan_path),
+        (p for p in _INDEXED_TABLES.values() if _normalize_path(p) == scan_path),
         None,
     )
     if path is None:
         _decline(f"path-not-indexed: {scan_path} is not a registered indexed table")
-
-    pre = None
-    for c in conds:
-        col = F.expr(c)
-        pre = col if pre is None else (pre & col)
-    if pre is not None:
-        # analysis-only resolution probe (no job): a condition the rebuilt
-        # scan can't resolve declines HERE, before an Observation could be
-        # attached to a plan that then fails.
-        spark.read.parquet(path).filter(pre).schema
+    if (filters or computed) and not jplan.deterministic():
+        _decline("nondeterministic: the plan computes a nondeterministic expression")
 
     # Prefer the doubly-pruned IVF-PQ plan (cluster prune × m-byte ADC
     # codes scan × exact re-rank) when a codes sidecar is registered for
     # this layout and the shape allows it: L2 metric (ADC tables are
-    # squared-L2), no pre-filter (the codes table carries only id+cluster+
-    # codes, so a payload filter can't push into stage one), and the
-    # tie-break — if any — matching the sidecar's id column (ivfpq_topk
-    # breaks ties on it unconditionally). Any failure inside the PQ route
-    # falls back to the raw IVF probe below, never to brute force.
-    if metric == "l2" and pre is None:
+    # squared-L2), no filter (the codes table carries only id+cluster+
+    # codes, so a payload filter can't push into stage one), no computed
+    # column but the true distance the sort is on, and the tie-break — if
+    # any — matching the sidecar's id column (ivfpq_topk breaks ties on it
+    # unconditionally). Any failure inside the PQ route falls back to the
+    # raw IVF probe below, never to brute force.
+    if metric == "l2" and not filters and all(e is alias for e in computed):
         pq_out, obs_consumed = _try_pq_route(
-            spark, df, path, attr.name(), vec, k, tie_break, options, observation,
-            dist_alias=dist_alias,
+            spark, path, attr["name"], vec, k, tie_break, options, observation,
+            set(rel_cols.values()) - {CLUSTER_COL},
+            [e["name"] for e in out_list],
+            dist_alias=alias["name"] if alias is not None and true_distance else None,
         )
         if pq_out is not None:
             return pq_out
@@ -939,28 +983,34 @@ def _try_intercept(spark, df, options, observation, indexed_tables):
             # decline to brute force)
             observation = None
 
-    from pq_vector_spark.index.search import indexed_topk
+    from pq_vector_spark.index.search import open_index, probe_topk
 
-    out = indexed_topk(
-        spark,
-        path,
-        vec,
+    idx, q = open_index(spark, path, vec, attr["name"])
+    # the candidates are the matched plan's own relation; its filters and
+    # projections apply as the resolved expressions they are (no path
+    # re-read, no SQL re-render)
+    session = spark._jsparkSession
+    of_rows = _jvm_ref(spark, "org.apache.spark.sql.classic.Dataset.ofRows")
+    to_column = _jvm_ref(spark, "org.apache.spark.sql.classic.ExpressionUtils.column")
+    pre_filter = None
+    for f in filters:
+        cond = Column(to_column(jplan.p(f).condition()))
+        pre_filter = cond if pre_filter is None else (pre_filter & cond)
+    out = probe_topk(
+        DataFrame(of_rows(session, jrel), spark),
+        idx,
+        q,
         k,
-        column=attr.name(),
         options=options,
-        pre_filter=pre,
+        pre_filter=pre_filter,
         tie_break=tie_break,
         observation=observation,
         metric=metric,
-        keep_distance=dist_alias is not None,
     )
-    if dist_alias is not None:
-        # the query projects the distance/similarity value itself; the
-        # probe's column carries the identical canonical fold (bit-equal),
-        # renamed to the query's alias
-        from pq_vector_spark.operators.topk import DISTANCE_COL
-
-        if dist_alias != DISTANCE_COL:
-            out = out.withColumnRenamed(DISTANCE_COL, dist_alias)
-    # identical output schema (names + order) to the plan being replaced
-    return out.select(*df.columns)
+    # the query's own projections, recomputed over the k rows: its
+    # distance and other computed columns are the user's expressions
+    project = _jvm_ref(spark, "org.apache.spark.sql.catalyst.plans.logical.Project")
+    for p, _ in applied:
+        plan = project(jplan.p(p).projectList(), out._jdf.logicalPlan())
+        out = DataFrame(of_rows(session, plan), spark)
+    return out

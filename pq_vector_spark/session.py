@@ -130,8 +130,8 @@ class PqSession:
         register_sql_functions(self.spark)
 
     def sql(self, query: str, observation=None):
-        """Vector-aware SQL entry point (see plans/sql.py): textual fast
-        path first, then plan-level interception (plans/intercept.py)."""
+        """Vector-aware SQL entry point (see plans/sql.py): ``spark.sql``,
+        then plan-level interception (plans/intercept.py)."""
         from pq_vector_spark.plans.sql import pq_sql
 
         return pq_sql(self.spark, query, options=self.options, observation=observation)

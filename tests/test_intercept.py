@@ -1,6 +1,8 @@
 """Plan-level top-k interception tests (plans/intercept.py) — the PySpark
-analogue of the reference's physical-optimizer rule firing on query shapes
-the TEXTUAL matcher cannot see (CTEs, subselects, DataFrame API).
+analogue of the reference's physical-optimizer rule, and the one route
+``pq_sql`` takes to the index: the same matcher fires however the query
+was written (plain SELECT, CTE, subselect, DataFrame API), and its
+replacement keeps the query's own filters and projections.
 ≙ reference rule guards: src/df_vector/physical.rs:134-177."""
 
 import numpy as np
@@ -46,8 +48,9 @@ def _brute(spark, sql):
 
 
 def test_cte_shape_intercepts_and_is_exact(spark, icpt_table):
-    """The textual regex cannot match a CTE; the plan interceptor must, and
-    with nprobe = n_clusters the answer equals brute force exactly."""
+    """A CTE normalizes to the canonical plan shape, so the interceptor
+    fires, and with nprobe = n_clusters the answer equals brute force
+    exactly."""
     q = (
         "WITH c AS (SELECT id, vec FROM icpt_vectors) "
         f"SELECT id FROM c ORDER BY array_distance(vec, {VEC}), id LIMIT 10"
@@ -92,11 +95,10 @@ def test_where_inside_cte_applies(spark, icpt_table):
 
 def test_filter_string_literal_containing_alias_dot(spark, icpt_table):
     """A WHERE clause whose STRING LITERAL contains '<alias>.' must reach
-    the rebuilt scan verbatim: conditions are unqualified by rebuilding the
-    expression tree (withQualifier on attribute nodes), never by regexing
-    the SQL text — the old quote-blind regex corrupted such literals into
-    silently-wrong filters. Interception must still fire, with metrics
-    proving the pruned path executed."""
+    the probe verbatim: the filter applies as its own resolved condition,
+    never as re-rendered SQL text (a quote-blind rewrite once corrupted
+    such literals into silently-wrong filters). Interception must still
+    fire, with metrics proving the pruned path executed."""
     q = (
         "WITH c AS (SELECT id, vec FROM icpt_vectors) "
         "SELECT id FROM c "
@@ -524,20 +526,22 @@ def test_projected_distance_not_selected_still_intercepts(spark, icpt_table):
     assert [r["id"] for r in hit.collect()] == _brute(spark, q)
 
 
-def test_projected_squared_distance_declines(spark, icpt_table):
-    """squared_l2 is fine as a SORT KEY (same ordering) but cannot be a
-    projected OUTPUT through the probe (sqrt(x)^2 re-squares with ulp
-    error — never emit almost-equal values). Guard has its own reason."""
-    from pq_vector_spark.plans.intercept import last_decline_reason
-
+def test_projected_squared_distance_intercepts(spark, icpt_table):
+    """squared_l2 as a projected OUTPUT intercepts: the probe orders by
+    its own kernel and the query's projection is recomputed over the k
+    rows, so ``d`` is the user's squared_l2 expression — ids and values
+    equal brute force."""
     q = (
         "WITH c AS (SELECT id, vec FROM icpt_vectors) "
         f"SELECT id, squared_l2(vec, {VEC}) AS d FROM c "
         "ORDER BY d, id LIMIT 5"
     )
     raw = spark.sql(expand_vector_functions(q))
-    assert try_intercept_topk(spark, raw) is None
-    assert last_decline_reason().startswith("projected-squared-distance")
+    hit = try_intercept_topk(spark, raw, options=VectorTopKOptions(nprobe=N_CLUSTERS))
+    assert hit is not None
+    assert hit.columns == ["id", "d"]
+    want = [(r["id"], r["d"]) for r in raw.collect()]
+    assert [(r["id"], r["d"]) for r in hit.collect()] == want
 
 
 def test_projected_cosine_alias_intercepts(spark, icpt_table):
@@ -557,14 +561,47 @@ def test_projected_cosine_alias_intercepts(spark, icpt_table):
     assert [(r["id"], r["sim"]) for r in hit.collect()] == want
 
 
-def test_unrelated_computed_projection_still_declines(spark, icpt_table):
+def test_unrelated_computed_projection_intercepts(spark, icpt_table):
+    """A computed column beside the distance (``id + 1``) is recomputed
+    over the probe's k rows from the query's own expression: ids and
+    values equal brute force."""
     q = (
         "WITH c AS (SELECT id, vec FROM icpt_vectors) "
         f"SELECT id, id + 1 AS id2, array_distance(vec, {VEC}) AS d FROM c "
         "ORDER BY d, id LIMIT 5"
     )
     raw = spark.sql(expand_vector_functions(q))
+    hit = try_intercept_topk(spark, raw, options=VectorTopKOptions(nprobe=N_CLUSTERS))
+    assert hit is not None
+    assert hit.columns == ["id", "id2", "d"]
+    want = [tuple(r) for r in raw.collect()]
+    assert [tuple(r) for r in hit.collect()] == want
+
+
+def test_computed_output_projection_intercepts(spark, icpt_table):
+    """A Project above the Sort that computes (``id * 2``, a literal) is
+    re-applied over the probe's k rows; a projection running a subquery
+    declines with its own reason and keeps the brute-force answer."""
+    from pq_vector_spark.plans.intercept import last_decline_reason
+
+    dist = _FN_EXPANSIONS["array_distance"].format(a="vec", b=VEC)
+    df = (
+        spark.table("icpt_vectors")
+        .orderBy(F.expr(dist), F.col("id"))
+        .select((F.col("id") * 2).alias("x"), F.lit(7).alias("seven"))
+        .limit(5)
+    )
+    hit = try_intercept_topk(spark, df, options=VectorTopKOptions(nprobe=N_CLUSTERS))
+    assert hit is not None
+    assert [tuple(r) for r in hit.collect()] == [tuple(r) for r in df.collect()]
+
+    q = (
+        "SELECT id, (SELECT max(id) FROM icpt_vectors) AS m FROM icpt_vectors "
+        f"ORDER BY array_distance(vec, {VEC}), id LIMIT 5"
+    )
+    raw = spark.sql(expand_vector_functions(q))
     assert try_intercept_topk(spark, raw) is None
+    assert last_decline_reason().startswith("projection-reference")
 
 
 def test_sidecar_stale_after_append_declines_pq_route(spark, icpt_table, tmp_path):

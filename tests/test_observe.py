@@ -40,6 +40,28 @@ def test_candidate_rows_observed(spark, obs_table):
     assert got["files_scanned"] >= 1
 
 
+def test_observation_free_after_unresolvable_filter(spark, obs_table):
+    """A pre_filter that does not resolve raises before the single-use
+    Observation binds, so a retry with a corrected filter can still use
+    the same Observation."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    obs = Observation("pq_retry")
+    opts = VectorTopKOptions(nprobe=2)
+    with pytest.raises(AnalysisException):
+        indexed_topk(
+            spark, obs_table, [0.5] * 4, 5, options=opts,
+            pre_filter=F.col("no_such_column") > 1, observation=obs,
+        )
+    out = indexed_topk(
+        spark, obs_table, [0.5] * 4, 5, options=opts,
+        pre_filter=F.col("id") >= 10, observation=obs,
+    )
+    assert len(out.collect()) == 5
+    assert obs.get["candidate_rows"] > 0
+
+
 def test_full_probe_observes_all_rows(spark, obs_table):
     obs = Observation("pq_vector_full")
     out = indexed_topk(

@@ -358,6 +358,11 @@ def test_select_token_budget_matches_greedy_property(spark, data):
     assert got == sorted(kept)
 
 
+# the token-budget selectors' two planners: the driver planner (default
+# local_threshold) and the distributed walk (local_threshold=0)
+_PLANNERS = ({}, {"local_threshold": 0})
+
+
 @settings(max_examples=10, deadline=None)
 @given(data=st.data())
 def test_select_token_budget_grouped_matches_greedy_property(spark, data):
@@ -405,13 +410,6 @@ def test_select_token_budget_grouped_matches_greedy_property(spark, data):
     df = spark.createDataFrame(
         rows, "g: string, id: bigint, score: double, tok: bigint"
     )
-    got = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "g", "id", "score", "tok", budgets,
-            buckets=buckets, default_budget=default, window_cap=window_cap,
-        ).collect()
-    )
     kept = []
     by_g = {}
     for g, k, s, t in rows:
@@ -424,7 +422,16 @@ def test_select_token_budget_grouped_matches_greedy_property(spark, data):
                 break
             cum += t
             kept.append(k)
-    assert got == sorted(kept)
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "g", "id", "score", "tok", budgets,
+                buckets=buckets, default_budget=default, window_cap=window_cap,
+                **kw,
+            ).collect()
+        )
+        assert got == sorted(kept), kw
 
 
 def test_select_token_budget_grouped_subnormal_width_regression(spark):
@@ -471,13 +478,6 @@ def test_select_token_budget_grouped_subnormal_width_regression(spark):
     df = spark.createDataFrame(
         rows, "g: string, id: bigint, score: double, tok: bigint"
     )
-    got = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "g", "id", "score", "tok", {},
-            buckets=14, default_budget=181, window_cap=1,
-        ).collect()
-    )
     kept = []
     by_g: dict = {}
     for g, k, s, t in rows:
@@ -489,7 +489,15 @@ def test_select_token_budget_grouped_subnormal_width_regression(spark):
                 break
             cum += t
             kept.append(k)
-    assert got == sorted(kept)
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "g", "id", "score", "tok", {},
+                buckets=14, default_budget=181, window_cap=1, **kw,
+            ).collect()
+        )
+        assert got == sorted(kept), kw
 
 
 @settings(max_examples=10, deadline=None)

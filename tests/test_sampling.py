@@ -727,32 +727,33 @@ def test_select_token_budget_grouped_matches_per_group_greedy(spark):
     df = spark.createDataFrame(rows, "lang: string, id: bigint, score: double, tok: bigint")
     budgets = {"en": 2000, "de": 500, None: 0, "code": None}
 
-    got = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "lang", "id", "score", "tok", budgets, buckets=16
-        ).collect()
-    )
-    assert got == _grouped_greedy(rows, lambda g: budgets[g])
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "lang", "id", "score", "tok", budgets, buckets=16, **kw
+            ).collect()
+        )
+        assert got == _grouped_greedy(rows, lambda g: budgets[g]), kw
 
-    # scalar budget applies to every group
-    got2 = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "lang", "id", "score", "tok", 1000, buckets=16
-        ).collect()
-    )
-    assert got2 == _grouped_greedy(rows, lambda g: 1000)
+        # scalar budget applies to every group
+        got2 = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "lang", "id", "score", "tok", 1000, buckets=16, **kw
+            ).collect()
+        )
+        assert got2 == _grouped_greedy(rows, lambda g: 1000), kw
 
-    # missing group falls back to default_budget
-    got3 = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "lang", "id", "score", "tok", {"en": 2000},
-            buckets=16, default_budget=300,
-        ).collect()
-    )
-    assert got3 == _grouped_greedy(rows, lambda g: 2000 if g == "en" else 300)
+        # missing group falls back to default_budget
+        got3 = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "lang", "id", "score", "tok", {"en": 2000},
+                buckets=16, default_budget=300, **kw,
+            ).collect()
+        )
+        assert got3 == _grouped_greedy(rows, lambda g: 2000 if g == "en" else 300), kw
 
 
 def test_select_token_budget_grouped_edge_scores_and_guards(spark):
@@ -770,18 +771,21 @@ def test_select_token_budget_grouped_edge_scores_and_guards(spark):
         ("b", 7, 2.0, 10),
     ]
     df = spark.createDataFrame(rows, "g: string, id: bigint, score: double, tok: bigint")
-    got = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "g", "id", "score", "tok", {"a": 30, "b": 10}, buckets=4
-        ).collect()
-    )
-    assert got == [1, 2, 3, 7]  # a: NaN > inf > finite; b: best-first
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "g", "id", "score", "tok", {"a": 30, "b": 10}, buckets=4, **kw
+            ).collect()
+        )
+        assert got == [1, 2, 3, 7], kw  # a: NaN > inf > finite; b: best-first
 
-    with pytest.raises(ValueError, match="budget"):
-        select_token_budget_grouped(df, "g", "id", "score", "tok", {"a": -1})
-    with pytest.raises(ValueError, match="buckets"):
-        select_token_budget_grouped(df, "g", "id", "score", "tok", 10, buckets=0)
+        with pytest.raises(ValueError, match="budget"):
+            select_token_budget_grouped(df, "g", "id", "score", "tok", {"a": -1}, **kw)
+        with pytest.raises(ValueError, match="buckets"):
+            select_token_budget_grouped(
+                df, "g", "id", "score", "tok", 10, buckets=0, **kw
+            )
 
 
 def test_select_token_budget_grouped_is_broadcast_filter(spark):
@@ -792,10 +796,13 @@ def test_select_token_budget_grouped_is_broadcast_filter(spark):
 
     rows = [("g%d" % (i % 3), i, float(i % 50), 10) for i in range(300)]
     df = spark.createDataFrame(rows, "g: string, id: bigint, score: double, tok: bigint")
-    out = select_token_budget_grouped(df, "g", "id", "score", "tok", 500, buckets=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
+    for kw in _PLANNERS:
+        out = select_token_budget_grouped(
+            df, "g", "id", "score", "tok", 500, buckets=8, **kw
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, kw
+        assert "SortMergeJoin" not in plan, kw
 
 
 def test_select_token_budget_subnormal_spread_stays_exact(spark):
@@ -829,16 +836,19 @@ def test_select_token_budget_grouped_accepts_float_budgets(spark):
 
     rows = [("a", i, float(i), 10) for i in range(10)]
     df = spark.createDataFrame(rows, "g: string, id: bigint, score: double, tok: bigint")
-    got = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "g", "id", "score", "tok", {"a": 35.9}, buckets=4
-        ).collect()
-    )
-    assert got == [7, 8, 9]  # floor(35.9)=35 -> 3 rows of 10
+    for kw in _PLANNERS:
+        got = sorted(
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "g", "id", "score", "tok", {"a": 35.9}, buckets=4, **kw
+            ).collect()
+        )
+        assert got == [7, 8, 9], kw  # floor(35.9)=35 -> 3 rows of 10
 
-    with pytest.raises(ValueError, match="finite"):
-        select_token_budget_grouped(df, "g", "id", "score", "tok", float("nan"))
+        with pytest.raises(ValueError, match="finite"):
+            select_token_budget_grouped(
+                df, "g", "id", "score", "tok", float("nan"), **kw
+            )
 
 
 def test_select_token_budget_grouped_stats_bound(spark):
@@ -920,21 +930,22 @@ def test_select_token_budget_grouped_null_key_kept(spark):
     df = spark.createDataFrame(
         rows, "grp: string, id: string, score: double, tok: bigint"
     )
-    got = {
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "grp", "id", "score", "tok", {"g": 20, "h": 10}
-        ).collect()
-    }
-    assert got == {None, "a", "x"}
-    # NULL boundary key: only the NULL-key row fits g's budget
-    got1 = {
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "grp", "id", "score", "tok", {"g": 10, "h": 0}
-        ).collect()
-    }
-    assert got1 == {None}
+    for kw in _PLANNERS:
+        got = {
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "grp", "id", "score", "tok", {"g": 20, "h": 10}, **kw
+            ).collect()
+        }
+        assert got == {None, "a", "x"}, kw
+        # NULL boundary key: only the NULL-key row fits g's budget
+        got1 = {
+            r["id"]
+            for r in select_token_budget_grouped(
+                df, "grp", "id", "score", "tok", {"g": 10, "h": 0}, **kw
+            ).collect()
+        }
+        assert got1 == {None}, kw
 
 
 def test_select_token_budget_grouped_auto_refines_heavy_groups(spark):
@@ -982,16 +993,17 @@ def test_select_token_budget_grouped_refined_output_stays_map_side(spark):
     df = spark.createDataFrame(
         rows, "g: string, id: bigint, score: double, tok: bigint"
     )
-    out = select_token_budget_grouped(
-        df, "g", "id", "score", "tok", 700, buckets=8, window_cap=32
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # exactly one join on the output path: the broadcast plan table
-    assert plan.count("Join") == plan.count("BroadcastHashJoin") + plan.count(
-        "BroadcastNestedLoopJoin"
-    )
+    for kw in _PLANNERS:
+        out = select_token_budget_grouped(
+            df, "g", "id", "score", "tok", 700, buckets=8, window_cap=32, **kw
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, kw
+        assert "SortMergeJoin" not in plan, kw
+        # exactly one join on the output path: the broadcast plan table
+        assert plan.count("Join") == plan.count("BroadcastHashJoin") + plan.count(
+            "BroadcastNestedLoopJoin"
+        ), kw
 
 
 def test_select_token_budget_grouped_nan_group_respects_budget(spark):
@@ -1011,25 +1023,26 @@ def test_select_token_budget_grouped_nan_group_respects_budget(spark):
     df = spark.createDataFrame(
         rows, "g: double, id: bigint, score: double, tok: bigint"
     )
-    for cap in (None, 16):  # shared-window plan AND the refined path
-        got = sorted(
+    for kw in _PLANNERS:
+        for cap in (None, 16):  # shared-window plan AND the refined path
+            got = sorted(
+                r["id"]
+                for r in select_token_budget_grouped(
+                    df, "g", "id", "score", "tok", 50,
+                    buckets=8, window_cap=cap, **kw,
+                ).collect()
+            )
+            # NaN group: all-ties, key order -> ids 0..24 (25 rows * 2 = 50);
+            # group 1.0: 20 rows * 2 = 40 tokens <= 50 -> kept whole
+            assert got == list(range(25)) + list(range(300, 320)), f"cap={cap} {kw}"
+        # a NaN KEY in the budgets dict must reach the NaN group
+        got2 = sorted(
             r["id"]
             for r in select_token_budget_grouped(
-                df, "g", "id", "score", "tok", 50,
-                buckets=8, window_cap=cap,
+                df, "g", "id", "score", "tok", {nan: 10, 1.0: 4}, buckets=8, **kw
             ).collect()
         )
-        # NaN group: all-ties, key order -> ids 0..24 (25 rows * 2 = 50);
-        # group 1.0: 20 rows * 2 = 40 tokens <= 50 -> kept whole
-        assert got == list(range(25)) + list(range(300, 320)), f"cap={cap}"
-    # a NaN KEY in the budgets dict must reach the NaN group
-    got2 = sorted(
-        r["id"]
-        for r in select_token_budget_grouped(
-            df, "g", "id", "score", "tok", {nan: 10, 1.0: 4}, buckets=8
-        ).collect()
-    )
-    assert got2 == [0, 1, 2, 3, 4, 318, 319]
+        assert got2 == [0, 1, 2, 3, 4, 318, 319], kw
 
 
 def test_select_token_budget_grouped_struct_heavy_group(spark):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from pq_vector_spark.index.build import build_index
 from pq_vector_spark.plans.explain import vector_route
 from pq_vector_spark.plans.sql import (
-    _TOPK_RE,
     expand_vector_functions,
     pq_sql,
     register_indexed_table,
@@ -31,7 +30,6 @@ def sql_table(spark, tmp_path_factory):
 
 def test_topk_shape_matches(spark, sql_table):
     q = "SELECT id FROM sql_vectors ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 5"
-    assert _TOPK_RE.match(q)
     df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=8))
     assert vector_route(df) == "ivf"
     assert len(df.collect()) == 5
@@ -161,7 +159,9 @@ def sql_table_str(spark, tmp_path_factory):
 
 
 def test_projection_with_function_commas(spark, sql_table):
-    """round(x, 2) in the projection must not be split apart."""
+    """A computed projection (a rounded distance, with a comma inside
+    round's arguments) keeps the indexed route: the interceptor re-applies
+    it over the probe's rows."""
     q = (
         "SELECT id, round(array_distance(vec, [0.5, 0.5, 0.5, 0.5]), 2) AS d "
         "FROM sql_vectors ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 4"
@@ -199,6 +199,23 @@ def test_quoted_literal_with_comma_and_keywords(spark, sql_table_str):
             options=VectorTopKOptions(nprobe=4),
         ).collect()
     )
+
+
+def test_quoted_text_is_not_expanded(spark, sql_table_str):
+    """Quoted literals keep their text: a projected string that looks like
+    a bracket vector or a distance call comes back as written, on the
+    intercepted route."""
+    q = (
+        "SELECT id, '[0.5, 1]' AS tag, 'array_distance(vec, [9])' AS s "
+        "FROM sql_vectors_str WHERE name != 'it''s [1]' "
+        "ORDER BY array_distance(vec, [0.5, 0.5, 0.5, 0.5]) LIMIT 3"
+    )
+    assert "'[0.5, 1]'" in expand_vector_functions(q)
+    df = pq_sql(spark, q, options=VectorTopKOptions(nprobe=4))
+    assert vector_route(df) == "ivf"
+    rows = df.collect()
+    assert len(rows) == 3
+    assert {(r["tag"], r["s"]) for r in rows} == {("[0.5, 1]", "array_distance(vec, [9])")}
 
 
 def test_subquery_in_where_falls_through(spark, sql_table):
@@ -244,3 +261,50 @@ def test_unterminated_quote_falls_through(spark, sql_table):
         # error from the fall-through, never a wrong rewrite
         pq_sql(spark, "SELECT id FROM sql_vectors WHERE name = 'oops "
                       "ORDER BY array_distance(vec, [0.1]) LIMIT 1").collect()
+
+
+def test_registered_table_follows_append_and_rebuild(spark, tmp_path):
+    """A view registered over a layout lists the layout's files as they
+    were at registration; append_to_index and auto_rebuild_if_stale
+    re-register it. The count, an intercepted ASC top-k and a declined
+    (brute-force) DESC top-k all see every row after either mutation."""
+    from pq_vector_spark.index.build import append_to_index, auto_rebuild_if_stale
+
+    src = str(tmp_path / "src.parquet")
+    out = str(tmp_path / "indexed")
+    rng = np.random.default_rng(13)
+
+    def rows(start, n):
+        return [
+            (int(start + i), [float(x) for x in rng.random(4, dtype=np.float32)])
+            for i in range(n)
+        ]
+
+    spark.createDataFrame(rows(0, 300), "id INT, vec ARRAY<FLOAT>").write.parquet(src)
+    build_index(spark, src, out, column="vec", options=IndexBuildOptions(n_clusters=8))
+    register_indexed_table(spark, "sql_growing", out)
+    append_to_index(spark, spark.createDataFrame(rows(300, 200), "id INT, vec ARRAY<FLOAT>"), out)
+
+    vec = "[0.5, 0.5, 0.5, 0.5]"
+    opts = VectorTopKOptions(nprobe=64)  # every cluster, before and after the rebuild
+
+    def counts():
+        n = pq_sql(spark, "SELECT count(*) AS n FROM sql_growing").collect()[0]["n"]
+        asc = pq_sql(
+            spark,
+            f"SELECT id FROM sql_growing ORDER BY array_distance(vec, {vec}) LIMIT 500",
+            options=opts,
+        )
+        desc = pq_sql(
+            spark,
+            f"SELECT id FROM sql_growing ORDER BY array_distance(vec, {vec}) DESC LIMIT 500",
+            options=opts,
+        )
+        assert vector_route(asc) == "ivf"
+        assert vector_route(desc) == "brute-force"
+        return n, len(asc.collect()), len(desc.collect())
+
+    assert counts() == (500, 500, 500)
+    assert auto_rebuild_if_stale(spark, out)["rebuilt"]  # 200/500 appended
+    # the swap retired every file the view listed before it
+    assert counts() == (500, 500, 500)
