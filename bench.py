@@ -104,105 +104,6 @@ HEADLINE = [
 K = 100
 NPROBE = 16
 
-# machine-speed anchor recorded by the LAST round's driver run
-# (BENCH_r11.json calib_sec) — this round's calib divides by it so the
-# verdict can mechanically separate host noise from plan regressions:
-# r10 saw the whole board drift +8% (untouched queries included) with no
-# way to prove it wasn't code; r11's host ran 34% slower than r10's
-# recording (ratio 1.336). |ratio - 1| > 0.15 flags the run as
-# machine-skewed; divide headline totals by the ratio to compare rounds.
-CALIB_BASELINE_SEC = 0.362
-CALIB_BASELINE_ROUND = "r11"
-
-
-def _calibrate(reps: int = 3) -> float:
-    """Fixed single-core pure-Python workload, timed min-of-N — a
-    machine-speed anchor emitted as ``calib_sec``. Headline times drifted
-    ~1.2× uniformly across rounds on unchanged code (host noise); dividing
-    cross-round headline totals by their calib_sec ratio normalizes that
-    drift out."""
-
-    def once() -> float:
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(5_000_000):
-            acc = (acc + i * i) % 1000003
-        assert acc >= 0
-        return time.perf_counter() - t0
-
-    return round(min(once() for _ in range(reps)), 3)
-
-
-# JVM anchor recorded by the r12 driver run (BENCH_r12.json calib_jvm_sec)
-# — pinned in r13 per the r12 verdict so the board can separate JVM-side
-# multicore host drift from plan regressions (same convention as
-# CALIB_BASELINE_SEC; the Python anchor alone under-corrects JVM effects)
-CALIB_JVM_BASELINE_SEC = 0.113
-CALIB_JVM_BASELINE_ROUND = "r12"
-
-
-def _calibrate_jvm(spark, reps: int = 3) -> float:
-    """Fixed JVM-side workload (32-partition range + xxhash64 fold), one
-    warmup then min-of-N — emitted as ``calib_jvm_sec``. Complements the
-    single-core Python anchor: the headline queries are JVM/multicore
-    bound, and the r11 verdict observed the Python anchor can
-    under-correct JVM-speed drift (the knn_batch false alarm). Two
-    anchors bracket the host: Python for interpreter/driver speed, this
-    for executor throughput."""
-    from pyspark.sql import functions as F
-
-    def once() -> float:
-        t0 = time.perf_counter()
-        # pmod before the sum: 20M raw xxhash64 values overflow a long
-        # under ANSI mode; the bounded residues sum to < 2e13
-        spark.range(0, 20_000_000, 1, 32).select(
-            F.sum(F.pmod(F.xxhash64("id"), F.lit(1_000_003)))
-        ).collect()
-        return time.perf_counter() - t0
-
-    once()
-    return round(min(once() for _ in range(reps)), 3)
-
-
-# Long JVM anchor (r14, r13 verdict #5): the 20M-row min-of-3 anchor above
-# swung 0.074-0.119 s across same-day runs (±40% — too noisy to adjudicate
-# an ambiguous round). This one runs ~10× longer (~1 s) and reports
-# median-of-5 plus the run spread, so scheduling noise amortizes; both
-# anchors are emitted so cross-round comparisons can bridge eras.
-# Baseline measured r14 on this host: 4 repeat calls in one warm JVM gave
-# medians 0.602-0.691 (a 14% cross-call band vs the short anchor's ±40%),
-# within-call spreads settling to ~8%. Pinned at the warm-band midpoint —
-# re-pin whenever calib_jvm_long_spread says the host changed.
-CALIB_JVM_LONG_BASELINE_SEC = 0.63
-CALIB_JVM_LONG_BASELINE_ROUND = "r14"
-
-
-def _calibrate_jvm_long(spark, reps: int = 5) -> tuple:
-    """~1 s JVM-side workload (1B-row range + xxhash64 fold over 32
-    partitions), TWO warmups then MEDIAN-of-N, returning (median, spread)
-    where spread = (max - min) / median over the N timed runs. The
-    headline drift adjudicator: a spread < 10% makes the median a
-    trustworthy host-speed statistic; a larger spread says the host is
-    contended and NO single-run ratio should adjudicate the round."""
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    def once() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 1_000_000_000, 1, 32).select(
-            F.sum(F.pmod(F.xxhash64("id"), F.lit(1_000_003)))
-        ).collect()
-        return time.perf_counter() - t0
-
-    once()  # two warmups: the first run after codegen still carries C2
-    once()  # compilation of shared infrastructure (~20% on this host)
-    runs = sorted(once() for _ in range(reps))
-    med = statistics.median(runs)
-    spread = (runs[-1] - runs[0]) / med if med > 0 else 0.0
-    return round(med, 3), round(spread, 3)
-
-
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
     try:
@@ -250,8 +151,6 @@ def main() -> None:
     from pq_vector_spark.session import IndexBuildOptions, VectorTopKOptions
     from pq_vector_spark.sources.parquet import load_table
 
-    calib_sec = _calibrate()  # before the JVM exists: clean machine anchor
-
     # The bench JVM runs ~an hour of work (3 headline passes + the 1M×256
     # scale sections) in ONE process; r15's first full run OOM'd an 8 GB
     # heap in the embedding-dedup stage (untouched code — cumulative heap
@@ -285,9 +184,6 @@ def main() -> None:
     # harness warms up the same way (3 s warmup per benchmark by default).
     for name in HEADLINE:
         qs[name](spark, SF_DIR).collect()
-
-    calib_jvm_sec = _calibrate_jvm(spark)
-    calib_jvm_long_sec, calib_jvm_long_spread = _calibrate_jvm_long(spark)
 
     # Noise-robust headline (r15, r14 verdict #1): each query is timed
     # MEDIAN-of-N over N full INTERLEAVED passes — pass 1 runs every query
@@ -497,9 +393,10 @@ def main() -> None:
     # — BENCH_r13/r14 both overflowed it (parsed=null) because the calib
     # narrative rode the same line as 57 query timings. The final line now
     # carries ONLY the driver contract (metric/value/unit/queries/sf) plus
-    # the four adjudication scalars; everything else (anchor baselines,
-    # adjusted totals, per-query spreads, recall notes) moves to the
-    # bench_detail SECTION line, which also lands in BENCH_sections.json.
+    # the adjudication scalars (reps, hl_spread, contended, recall);
+    # everything else (per-query spreads, pass totals, recall notes) moves
+    # to the bench_detail SECTION line, which also lands in
+    # BENCH_sections.json.
     out = {
         "metric": "headline_total",
         "value": total,
@@ -512,56 +409,13 @@ def main() -> None:
         # statistic (≥0.10 ⇒ treat this run as weather, not engineering)
         "reps": reps,
         "hl_spread": headline_spread,
-        "calib_jvm_long_sec": calib_jvm_long_sec,
-        "calib_jvm_long_spread": calib_jvm_long_spread,
-        "contended": bool(
-            calib_jvm_long_spread >= 0.10 or headline_spread >= 0.10
-        ),
+        "contended": headline_spread >= 0.10,
         "recall_at_100": recall,
     }
     detail = {
         "per_query_spread": spreads,
         "pass_totals": pass_totals,
         "split_leakage_breakdown": leakage_breakdown,
-        "calib_sec": calib_sec,
-        "calib_jvm_sec": calib_jvm_sec,
-        "calib_jvm_baseline_sec": CALIB_JVM_BASELINE_SEC,
-        "calib_baseline_sec": CALIB_BASELINE_SEC,
-        f"calib_ratio_vs_{CALIB_BASELINE_ROUND}": round(
-            calib_sec / CALIB_BASELINE_SEC, 3
-        ),
-        # total with host-speed drift divided out — the cross-round
-        # comparable number (raw total stays the headline metric)
-        "headline_total_calib_adj": round(
-            total / (calib_sec / CALIB_BASELINE_SEC), 2
-        ),
-        "calib_drift_flag": abs(calib_sec / CALIB_BASELINE_SEC - 1.0) > 0.15,
-        # JVM-anchor twin (r13, per the r12 verdict): the headline queries
-        # are JVM/multicore bound, so THIS ratio — not the single-core
-        # Python one — adjudicates whether a board-wide drift was host
-        # contention or plan regressions
-        f"calib_jvm_ratio_vs_{CALIB_JVM_BASELINE_ROUND}": round(
-            calib_jvm_sec / CALIB_JVM_BASELINE_SEC, 3
-        ),
-        "headline_total_jvm_adj": round(
-            total / (calib_jvm_sec / CALIB_JVM_BASELINE_SEC), 2
-        ),
-        "calib_jvm_drift_flag": abs(
-            calib_jvm_sec / CALIB_JVM_BASELINE_SEC - 1.0
-        ) > 0.15,
-        # long JVM anchor (r14, r13 verdict #5): ~1 s median-of-5 with its
-        # run spread — the cross-check on the headline's own hl_spread. A
-        # spread >= 0.10 marks the host contended.
-        "calib_jvm_long_baseline_sec": CALIB_JVM_LONG_BASELINE_SEC,
-        f"calib_jvm_long_ratio_vs_{CALIB_JVM_LONG_BASELINE_ROUND}": round(
-            calib_jvm_long_sec / CALIB_JVM_LONG_BASELINE_SEC, 3
-        ),
-        "headline_total_jvm_long_adj": round(
-            total / (calib_jvm_long_sec / CALIB_JVM_LONG_BASELINE_SEC), 2
-        ),
-        "calib_jvm_long_drift_flag": abs(
-            calib_jvm_long_sec / CALIB_JVM_LONG_BASELINE_SEC - 1.0
-        ) > 0.15,
         # sf0.1's embeddings table is 2k rows: k=100 is 5% of the table and
         # nprobe 16/45 probes 36% of it — cluster granularity dominates
         # recall here. The regime the index exists for is the `scale`
@@ -621,8 +475,6 @@ def main() -> None:
     line = json.dumps(out)
     for droppable in (
         "recall_at_100",
-        "calib_jvm_long_sec",
-        "calib_jvm_long_spread",
         "hl_spread",
         "reps",
     ):

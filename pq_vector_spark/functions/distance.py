@@ -35,10 +35,11 @@ Reference parity notes:
 - f64 query literals are narrowed to the f32 grid by the reference
   (src/df_vector/expr.rs:48-50); we keep stored vectors float32 and cast up
   to double at compute time, which is lossless for float32 inputs.
-- null / dim-mismatched rows at query time yield NULL distance, which the
-  top-k operators sort after every scored row (``asc_nulls_last``), so a
-  top-k returns them only when fewer than k rows score; the reference
-  skips them silently (src/df_vector/exec.rs:495-528).
+- null / dim-mismatched rows at query time yield NULL distance. Every
+  vector top-k ranks through the one rule in
+  ``operators/topk.py:rank_order``, which sorts NULL after every scored
+  row, so a top-k returns such rows only when fewer than k rows score; the
+  reference skips them silently (src/df_vector/exec.rs:495-528).
 """
 
 from __future__ import annotations
@@ -333,24 +334,24 @@ def _unrolled_expr(kind: str, raw, q) -> "Column | None":
 # Wide literal queries scoring at most this many vector elements (rows_hint ×
 # dim) use the native fold instead of the Arrow kernel. The fold has no
 # fixed cost but is slower per row; the Arrow kernel pays for Python-worker
-# start-up on every task. Measured with tools/fold_breakeven.py at local[2]
-# on 4 vCPUs (the parallelism perfbench's ann_query uses there), 2-file
-# tables, median of 9 queries per point; wall / CPU seconds of the driver,
-# JVM and Python workers, with the crossing of the two linear fits:
-#   dim 256, 4k-32k rows:  fold 0.32 s + 8.1 µs/row wall, 0.58 s + 28.2 µs/row
-#     CPU; Arrow 0.45 s + 2.9 µs/row, 0.84 s + 20.1 µs/row; cross at 6.0M
-#     elements wall, 8.0M CPU.
-#   dim 256, 2k-64k rows:  cross at 14.1M wall, 26.3M CPU.
-#   dim 1024, 1k-16k rows: fold 0.37 s + 27.3 µs/row, 0.69 s + 85.6 µs/row;
-#     Arrow 0.39 s + 26.4 µs/row, 0.78 s + 77.9 µs/row; cross at 21.5M
-#     wall, 12.5M CPU.
-# The fits are loose (points a few hundredths of a second off the line), and
-# point by point the two kernels are within noise of each other from about
-# 4M elements at both dims; at 2M and below the fold led in every sweep but
-# one wall-time point (dim 1024, 2M: 0.467 vs 0.455 s). The budget sits
-# under all of that, where the fold led or was level in these sweeps.
-# Other dims and parallelism are unmeasured. perfbench exercises only the
-# fold side: ann_query's indexed ops score about 2.7k rows × 256 (0.7M
+# start-up on every task. Measured with tools/fold_breakeven.py, which lifts
+# this budget inside its own process and checks each leg's kernel on the
+# executed plan (older sweeps ran the Arrow kernel on both legs above the
+# budget, so their fits past 3M elements compared it with itself). dim 256,
+# local[2] on 4 vCPUs, 4-file tables; wall / CPU seconds of the driver, JVM
+# and Python workers, median of 7 queries per point:
+#   22k rows (5.6M elements): fold 0.57 s / 1.25 s, Arrow 0.43 s / 1.18 s
+#   88k rows (22.5M):         fold 1.68 s / 3.33 s, Arrow 0.67 s / 2.00 s
+# The fits (fold 0.21 s + 16.7 µs/row wall, 0.56 s + 31.5 µs/row CPU; Arrow
+# 0.35 s + 3.7 µs/row, 0.91 s + 12.4 µs/row) cross at 2.7M elements in wall
+# time and 4.7M in CPU time; the budget sits between the two. At 1M rows
+# (256M elements, median of 3) the fold took 20.4 s / 41.7 s against the
+# Arrow kernel's 5.5 s / 16.8 s. So the fold cannot replace the Arrow
+# kernel: its per-row cost is 2.5× in CPU and about 4× in wall time.
+# ZipWith and ArrayAggregate run interpreted (CodegenFallback in Spark
+# 4.1.2), and the codegen'd unrolled chain stops at UNROLL_LIMIT. Other
+# dims and parallelism are unmeasured. perfbench exercises only the fold
+# side: ann_query's indexed ops score about 2.7k rows × 256 (0.7M
 # elements), and its brute-force ops pass no hint.
 FOLD_ELEMENT_BUDGET = 3_000_000
 

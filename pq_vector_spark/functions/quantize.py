@@ -246,7 +246,7 @@ def binary_topk(
     recall is measured per-config in the bench's ``scale.bq`` entries,
     the SQ8/PQ discipline."""
     from pq_vector_spark.functions.distance import array_distance
-    from pq_vector_spark.operators.topk import DISTANCE_COL
+    from pq_vector_spark.operators.topk import shortlist_rerank
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -255,24 +255,12 @@ def binary_topk(
     qbits = pack_query_bits([float(x) for x in query])
     qlit = F.array(*[F.lit(int(w)).cast("long") for w in qbits])
     bits = F.col(bq_col) if bq_col else binary_quantize(col, len(query))
-    ham = hamming_distance(bits, qlit)
-    order = [F.col("_bq_ham").asc()]
-    if tie_break is not None:
-        order.append(F.col(tie_break).asc())
-    shortlist = (
-        df.withColumn("_bq_ham", ham)
-        .orderBy(*order)
-        .limit(int(k) * int(oversample))
+    # string name, not F.col(...): lets the one-shot SQL render fire (r16)
+    exact = array_distance(col, [float(x) for x in query])
+    return shortlist_rerank(
+        df, "_bq_ham", hamming_distance(bits, qlit), exact, int(k) * int(oversample),
+        k, tie_break=tie_break, keep_distance=keep_distance,
     )
-    out = shortlist.withColumn(
-        # string name, not F.col(...): lets the one-shot SQL render fire (r16)
-        DISTANCE_COL, array_distance(col, [float(x) for x in query])
-    )
-    order2 = [F.col(DISTANCE_COL).asc_nulls_last()]
-    if tie_break is not None:
-        order2.append(F.col(tie_break).asc())
-    out = out.orderBy(*order2).limit(k).drop("_bq_ham")
-    return out if keep_distance else out.drop(DISTANCE_COL)
 
 
 def binary_topk_with_fetch(
@@ -300,7 +288,7 @@ def binary_topk_with_fetch(
     Hamming is an angular proxy — recall vs oversample is measured
     per-config in the bench (1M×256 mixture: 1.0 at oversample 16)."""
     from pq_vector_spark.functions.distance import array_distance
-    from pq_vector_spark.operators.topk import DISTANCE_COL
+    from pq_vector_spark.operators.topk import shortlist_rerank
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -308,26 +296,9 @@ def binary_topk_with_fetch(
         raise ValueError(f"oversample must be >= 1, got {oversample}")
     qbits = pack_query_bits([float(x) for x in query])
     qlit = F.array(*[F.lit(int(w)).cast("long") for w in qbits])
-    order = [F.col("_bq_ham").asc()]
-    if tie_break is not None:
-        order.append(F.col(tie_break).asc())
-    elif id_col:
-        order.append(F.col(id_col).asc())
-    cand = (
-        words_df.withColumn("_bq_ham", hamming_distance(F.col(words_col), qlit))
-        .orderBy(*order)
-        .limit(int(k) * int(oversample))
-        .select(id_col)
+    return shortlist_rerank(
+        words_df, "_bq_ham", hamming_distance(F.col(words_col), qlit),
+        array_distance(column, [float(x) for x in query]), int(k) * int(oversample),
+        k, tie_break=tie_break or id_col, raw=raw_df, id_col=id_col,
+        keep_distance=keep_distance,
     )
-    fetched = raw_df.join(F.broadcast(cand), id_col)
-    order2 = [F.col(DISTANCE_COL).asc_nulls_last()]
-    if tie_break is not None:
-        order2.append(F.col(tie_break).asc())
-    out = (
-        fetched.withColumn(
-            DISTANCE_COL, array_distance(column, [float(x) for x in query])
-        )
-        .orderBy(*order2)
-        .limit(k)
-    )
-    return out if keep_distance else out.drop(DISTANCE_COL)

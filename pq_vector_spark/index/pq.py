@@ -327,29 +327,19 @@ def pq_topk(
     plan shape of the exact path (src/ivf/search.rs:112-127's max-heap,
     distributed)."""
     from pq_vector_spark.functions.distance import array_distance
-    from pq_vector_spark.operators.topk import DISTANCE_COL
+    from pq_vector_spark.operators.topk import shortlist_rerank
 
     derived_codes = codes_col is None
     if derived_codes:
         df = encode_pq(df, column, codebook, CODES_COL)
         codes_col = CODES_COL
-    cand = df.withColumn(ADC_COL, adc_distance(codebook, query, codes_col))
-    order = [F.col(ADC_COL).asc_nulls_last()]
-    if tie_break:
-        order.append(F.col(tie_break).asc())
     c = max(k * rerank, k)
-    cand = cand.orderBy(*order).limit(c)
-    exact = cand.withColumn(
-        DISTANCE_COL, array_distance(column, list(query), rows_hint=c)
+    out = shortlist_rerank(
+        df, ADC_COL, adc_distance(codebook, query, codes_col),
+        array_distance(column, list(query), rows_hint=c), c, k,
+        tie_break=tie_break, keep_distance=keep_distance,
     )
-    order2 = [F.col(DISTANCE_COL).asc_nulls_last()]
-    if tie_break:
-        order2.append(F.col(tie_break).asc())
-    out = exact.orderBy(*order2).limit(k)
-    drop = [codes_col, ADC_COL] if derived_codes else [ADC_COL]
-    if not keep_distance:
-        drop.append(DISTANCE_COL)
-    return out.drop(*drop)
+    return out.drop(codes_col) if derived_codes else out
 
 
 def pq_topk_with_fetch(
@@ -377,24 +367,14 @@ def pq_topk_with_fetch(
     raw f32, src/ivf/parquet.rs); at 100 TB the codes table is the only
     full scan."""
     from pq_vector_spark.functions.distance import array_distance
-    from pq_vector_spark.operators.topk import DISTANCE_COL
+    from pq_vector_spark.operators.topk import shortlist_rerank
 
     c = max(k * rerank, k)
-    cand = (
-        codes_df.withColumn(ADC_COL, adc_distance(codebook, query, codes_col))
-        .orderBy(F.col(ADC_COL).asc_nulls_last(), F.col(id_col).asc())
-        .limit(c)
-        .select(id_col)
+    return shortlist_rerank(
+        codes_df, ADC_COL, adc_distance(codebook, query, codes_col),
+        array_distance(column, list(query), rows_hint=c), c, k,
+        tie_break=id_col, raw=raw_df, id_col=id_col, keep_distance=keep_distance,
     )
-    fetched = raw_df.join(F.broadcast(cand), id_col)
-    out = (
-        fetched.withColumn(
-            DISTANCE_COL, array_distance(column, list(query), rows_hint=c)
-        )
-        .orderBy(F.col(DISTANCE_COL).asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
-    return out if keep_distance else out.drop(DISTANCE_COL)
 
 
 def encode_indexed(
@@ -499,8 +479,8 @@ def ivfpq_topk(
     from pq_vector_spark.functions.distance import array_distance
     from pq_vector_spark.index.build import CLUSTER_COL
     from pq_vector_spark.index.kmeans import nearest_centroids
-    from pq_vector_spark.index.search import load_index
-    from pq_vector_spark.operators.topk import DISTANCE_COL
+    from pq_vector_spark.index.search import cluster_predicate, load_index
+    from pq_vector_spark.operators.topk import shortlist_rerank
 
     idx = load_index(spark, indexed_path)
     if idx.meta["dim"] != codebook.dim:
@@ -512,7 +492,7 @@ def ivfpq_topk(
         raise ValueError(f"query dim {q.shape} != {codebook.dim}")
     probed = [int(c) for c in nearest_centroids(q, idx.centroids, nprobe)]
 
-    pred = F.col(CLUSTER_COL).isin(probed)
+    pred = cluster_predicate(spark, probed)
     codes = spark.read.parquet(codes_path).filter(pred)
     if observation is not None:
         # same metric name as indexed_topk's CollectMetrics (A23 parity):
@@ -521,18 +501,10 @@ def ivfpq_topk(
             observation, F.count(F.lit(1)).alias("candidate_rows")
         )
     c = max(k * rerank, k)
-    cand = (
-        codes.withColumn(ADC_COL, adc_distance(codebook, list(query), CODES_COL))
-        .orderBy(F.col(ADC_COL).asc_nulls_last(), F.col(id_col).asc())
-        .limit(c)
-        .select(id_col)
+    out = shortlist_rerank(
+        codes, ADC_COL, adc_distance(codebook, list(query), CODES_COL),
+        array_distance(column, list(query), rows_hint=c), c, k,
+        tie_break=id_col, raw=spark.read.parquet(indexed_path).filter(pred),
+        id_col=id_col, keep_distance=keep_distance,
     )
-    raw = spark.read.parquet(indexed_path).filter(pred)
-    out = (
-        raw.join(F.broadcast(cand), id_col)
-        .withColumn(DISTANCE_COL, array_distance(column, list(query), rows_hint=c))
-        .orderBy(F.col(DISTANCE_COL).asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-        .drop(CLUSTER_COL)
-    )
-    return out if keep_distance else out.drop(DISTANCE_COL)
+    return out.drop(CLUSTER_COL)

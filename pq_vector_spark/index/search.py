@@ -21,15 +21,13 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from functools import reduce
-from operator import or_
 from typing import Optional, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pq_vector_spark.functions.distance import array_distance
+from pq_vector_spark.functions.distance import array_distance, cosine_similarity
 from pq_vector_spark.index.build import (
     CLUSTER_COL,
     INDEX_DIR,
@@ -39,7 +37,7 @@ from pq_vector_spark.index.build import (
     assign_clusters,
 )
 from pq_vector_spark.index.kmeans import nearest_centroids, train_kmeans
-from pq_vector_spark.operators.topk import DISTANCE_COL
+from pq_vector_spark.operators.topk import DISTANCE_COL, global_topk
 from pq_vector_spark.session import VectorTopKOptions
 
 
@@ -218,6 +216,27 @@ def _cap_candidates(df: DataFrame, quotas: dict) -> DataFrame:
     )
 
 
+def cluster_predicate(spark: SparkSession, cluster_ids) -> Column:
+    """``CLUSTER_COL IN (cluster_ids)`` as ONE parsed SQL expression: one
+    py4j round trip, where ``isin`` builds a literal per id (about 4.5 round
+    trips each). It pushes to the parquet scan, where the cluster-sorted
+    layout turns it into file/row-group skipping. Beyond
+    spark.sql.parquet.pushdown.inFilterThreshold parquet-mr receives an
+    IN-list only as a weak min/max RANGE filter, useless for arbitrary
+    probed ids, so larger sets are rendered as an explicit OR-of-equals
+    chain instead: ParquetFilters translates Or recursively (FilterApi.or)
+    with NO threshold, the pruning is exact, no session conf is mutated,
+    and the pushdown survives any later re-planning of DataFrames derived
+    from the filtered one."""
+    ids = [str(int(c)) for c in cluster_ids]
+    if not ids:
+        return F.lit(False)
+    in_thr = int(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
+    if len(ids) <= in_thr:
+        return F.expr(f"{CLUSTER_COL} IN ({', '.join(ids)})")
+    return F.expr(" OR ".join(f"{CLUSTER_COL} = {c}" for c in ids))
+
+
 def open_index(
     spark: SparkSession, path: str, query: Sequence[float], column: Optional[str] = None
 ):
@@ -297,25 +316,7 @@ def probe_topk(
     opts = options or VectorTopKOptions()
     spark = df.sparkSession
     probed = nearest_centroids(q, idx.centroids, opts.nprobe)
-    # The probed-cluster predicate pushes to the parquet scan; the
-    # cluster-sorted layout turns it into file/row-group skipping. Beyond
-    # spark.sql.parquet.pushdown.inFilterThreshold (default 10) parquet-mr
-    # receives an IN-list only as a weak min/max RANGE filter — useless for
-    # arbitrary probed ids — so larger probe sets are emitted as an explicit
-    # OR-of-equals chain instead: ParquetFilters translates Or recursively
-    # (FilterApi.or(eq, eq)) with NO threshold, the pruning is exact, no
-    # session conf is mutated, and the pushdown survives any later
-    # re-planning of DataFrames derived from this one (a save/restore of
-    # the threshold only protected the plan forced inside the window).
-    probed_ids = sorted(int(c) for c in probed)
-    in_thr = int(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
-    if len(probed_ids) <= in_thr:
-        cluster_pred = F.col(CLUSTER_COL).isin(probed_ids)
-    else:
-        cluster_pred = reduce(
-            or_, [F.col(CLUSTER_COL) == v for v in probed_ids]
-        )
-    cands = df.filter(cluster_pred)
+    cands = df.filter(cluster_predicate(spark, sorted(probed)))
     counts = _candidate_counts_from_meta(idx.meta, probed)
     if opts.max_candidates is not None:
         if counts is None:
@@ -364,28 +365,17 @@ def probe_topk(
         cands = cands.filter(pre_filter)
 
     if metric == "cosine":
-        from pq_vector_spark.functions.distance import cosine_similarity
-
-        out = cands.withColumn(
-            # string name, not F.col(...): lets the one-shot SQL render fire (r16)
-            DISTANCE_COL,
-            cosine_similarity(
-                idx.meta["column"], [float(x) for x in q], rows_hint=n_cands
-            ),
+        # string name, not F.col(...): lets the one-shot SQL render fire (r16)
+        d = cosine_similarity(
+            idx.meta["column"], [float(x) for x in q], rows_hint=n_cands
         )
-        order = [F.col(DISTANCE_COL).desc()]
     else:
-        out = cands.withColumn(
-            DISTANCE_COL,
-            array_distance(idx.meta["column"], list(q), rows_hint=n_cands),
-        )
-        order = [F.col(DISTANCE_COL).asc_nulls_last()]
-    if tie_break is not None:
-        order.append(F.col(tie_break).asc())
-    out = out.orderBy(*order).limit(k).drop(CLUSTER_COL)
-    if not keep_distance:
-        out = out.drop(DISTANCE_COL)
-    return out
+        d = array_distance(idx.meta["column"], list(q), rows_hint=n_cands)
+    out = global_topk(
+        cands.withColumn(DISTANCE_COL, d), DISTANCE_COL, k,
+        descending=metric == "cosine", tie_break=tie_break, keep_score=keep_distance,
+    )
+    return out.drop(CLUSTER_COL)
 
 
 def ivf_topk_adhoc(
@@ -416,16 +406,12 @@ def ivf_topk_adhoc(
         df, column, _sample_size(stats.rows, n_clusters, sample_cap), stats.rows, seed
     )
     centroids = train_kmeans(sample, n_clusters, max_iters=max_iters, seed=seed)
-    q = _check_query_dim(query, stats.dim)
-    probed = set(int(c) for c in nearest_centroids(q, centroids, nprobe))
-
-    assigned = assign_clusters(df, column, centroids)
-    cands = assigned.filter(F.col(CLUSTER_COL).isin(list(probed)))
-    out = cands.withColumn(DISTANCE_COL, array_distance(column, list(q)))
-    order = [F.col(DISTANCE_COL).asc_nulls_last()]
-    if tie_break is not None:
-        order.append(F.col(tie_break).asc())
-    out = out.orderBy(*order).limit(k).drop(CLUSTER_COL)
-    if not keep_distance:
-        out = out.drop(DISTANCE_COL)
-    return out
+    return probe_topk(
+        assign_clusters(df, column, centroids),
+        LoadedIndex(meta={"column": column}, centroids=centroids),
+        _check_query_dim(query, stats.dim),
+        k,
+        options=VectorTopKOptions(nprobe=nprobe),
+        tie_break=tie_break,
+        keep_distance=keep_distance,
+    )

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -22,6 +22,7 @@ from pq_vector_spark.functions.distance import (
     cosine_similarity,
     multi_distances,
 )
+from pq_vector_spark.operators.topk import global_topk, per_query_topk
 
 
 def cosine_topk(
@@ -39,10 +40,7 @@ def cosine_topk(
     # string names — a Column input costs ~dim×3 py4j round trips of
     # fallback Column building per plan (r16)
     scored = df.withColumn("cosine", cosine_similarity(vec_col, list(query)))
-    order = [F.col("cosine").desc()]
-    if id_col:
-        order.append(F.col(id_col).asc())
-    return scored.orderBy(*order).limit(k)
+    return global_topk(scored, "cosine", k, descending=True, tie_break=id_col)
 
 
 def similarity_join(
@@ -81,23 +79,16 @@ def similarity_join(
     pairs = c.crossJoin(broadcast(q))
     if metric == "l2":
         score = array_distance(F.col("_cv"), F.col("_qv"), dim_hint=dim_hint)
-        order = [F.col("score").asc(), F.col("_cid").asc()]
     elif metric == "cosine":
         score = cosine_similarity(F.col("_cv"), F.col("_qv"), dim_hint=dim_hint)
-        order = [F.col("score").desc(), F.col("_cid").asc()]
     else:
         raise ValueError(f"unknown metric {metric!r}")
-    scored = pairs.withColumn("score", score)
-    w = Window.partitionBy("_qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_cid").alias(corpus_id),
-            "score",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    ranked = per_query_topk(
+        pairs.withColumn("score", score), "_qid", "score", k,
+        descending=metric == "cosine", tie_break="_cid",
+    )
+    return ranked.select(
+        F.col("_qid").alias(query_id), F.col("_cid").alias(corpus_id), "score", "rank"
     )
 
 
@@ -136,28 +127,27 @@ def multi_query_topk(
     qids = [q[0] for q in queries]
     qmat = [q[1] for q in queries]
     scores = multi_distances(F.col(vec_col), qmat, metric=metric)
-    asc = metric in ("l2", "sq_l2")
 
     cols = [F.col(id_col).alias("_cid")] if id_col else []
     exploded = corpus.select(
         *cols, F.posexplode(scores).alias("_qidx", "score")
     ).filter(F.col("score").isNotNull())
-    order = [F.col("score").asc() if asc else F.col("score").desc()]
-    if id_col:
-        order.append(F.col("_cid").asc())
-    w = Window.partitionBy("_qidx").orderBy(*order)
-    ranked = (
-        exploded.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    return _topk_per_literal_query(
+        exploded, qids, k, metric not in ("l2", "sq_l2"), id_col, query_id_name
     )
-    qid_lookup = F.element_at(
-        F.array(*[F.lit(q) for q in qids]), F.col("_qidx") + 1
+
+
+def _topk_per_literal_query(scored, qids, k, descending, id_col, query_id_name):
+    """``per_query_topk`` of ``scored`` rows (``_qidx``: the query's position
+    in ``qids``, ``_cid``: the corpus id, present with ``id_col``, and
+    ``score``) as (query_id_name, id_col?, score, rank)."""
+    ranked = per_query_topk(
+        scored, "_qidx", "score", k, descending=descending,
+        tie_break="_cid" if id_col else None,
     )
-    out_cols = [qid_lookup.alias(query_id_name)]
-    if id_col:
-        out_cols.append(F.col("_cid").alias(id_col))
-    out_cols += [F.col("score"), F.col("rank")]
-    return ranked.select(*out_cols)
+    qid = F.element_at(F.array(*[F.lit(q) for q in qids]), F.col("_qidx") + 1)
+    cid = [F.col("_cid").alias(id_col)] if id_col else []
+    return ranked.select(qid.alias(query_id_name), *cid, "score", "rank")
 
 
 def batch_topk(
@@ -243,7 +233,7 @@ def ivf_multi_query_topk(
 
     from pq_vector_spark.index.build import CLUSTER_COL
     from pq_vector_spark.index.kmeans import nearest_centroids, nearest_centroids_batch
-    from pq_vector_spark.index.search import load_index
+    from pq_vector_spark.index.search import cluster_predicate, load_index
 
     if metric not in ("l2", "cosine"):
         raise ValueError(f"unknown metric {metric!r}")
@@ -271,10 +261,9 @@ def ivf_multi_query_topk(
     corpus = spark.read.parquet(corpus_indexed_path)
     id_type = corpus.schema[id_col].dataType.simpleString()
     if len(probed_union) < idx.meta["n_clusters"]:
-        corpus = corpus.filter(F.col(CLUSTER_COL).isin(probed_union))
+        corpus = corpus.filter(cluster_predicate(spark, probed_union))
     pruned = corpus.select(id_col, vec_col, CLUSTER_COL)
 
-    asc = metric == "l2"
     out_schema = f"_qidx INT, _cid {id_type}, score DOUBLE"
 
     if metric == "cosine":
@@ -329,19 +318,9 @@ def ivf_multi_query_topk(
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    scored = pruned.mapInPandas(_score, schema=out_schema)
-    order = [F.col("score").asc() if asc else F.col("score").desc(), F.col("_cid").asc()]
-    w = Window.partitionBy("_qidx").orderBy(*order)
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-    qid_lookup = F.element_at(F.array(*[F.lit(q) for q in qids]), F.col("_qidx") + 1)
-    return ranked.select(
-        qid_lookup.alias(query_id_name),
-        F.col("_cid").alias(id_col),
-        F.col("score"),
-        F.col("rank"),
+    return _topk_per_literal_query(
+        pruned.mapInPandas(_score, schema=out_schema), qids, k, metric == "cosine",
+        id_col, query_id_name,
     )
 
 
@@ -391,7 +370,7 @@ def ivf_similarity_join(
     collisions with corpus columns.
     """
     from pq_vector_spark.index.build import CLUSTER_COL, PROBE_COL, probe_clusters
-    from pq_vector_spark.index.search import load_index
+    from pq_vector_spark.index.search import cluster_predicate, load_index
 
     idx = load_index(spark, corpus_indexed_path)
 
@@ -410,7 +389,7 @@ def ivf_similarity_join(
             r[0] for r in probe_df.select("_pq_cluster").distinct().collect()
         ]
         if len(probed_union) < idx.meta["n_clusters"]:
-            corpus = corpus.filter(F.col(CLUSTER_COL).isin(probed_union))
+            corpus = corpus.filter(cluster_predicate(spark, probed_union))
     if broadcast_queries:
         probe_df = broadcast(probe_df)
 
@@ -421,14 +400,7 @@ def ivf_similarity_join(
             F.col(idx.meta["column"]), F.col("_pq_qv"), dim_hint=idx.meta["dim"]
         ),
     )
-    order = [F.col("score").asc()]
-    if corpus_id is not None:
-        order.append(F.col(corpus_id).asc())  # deterministic tie-break
-    w = Window.partitionBy("_pq_qid").orderBy(*order)
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    ranked = per_query_topk(scored, "_pq_qid", "score", k, tie_break=corpus_id)
     cols = [F.col("_pq_qid").alias(query_id)]
     if corpus_id is not None:
         cols.append(F.col(corpus_id))
@@ -486,10 +458,9 @@ def maxsim_topk(
         + F.array_max(F.transform(d, lambda dv: _dot(qv, dv))),
     )
     out = df.filter(d.isNotNull()).withColumn("maxsim", score)
-    order = [F.col("maxsim").desc_nulls_last()]
-    if tie_break:
-        order.append(F.col(id_col).asc())
-    return out.orderBy(*order).limit(k)
+    return global_topk(
+        out, "maxsim", k, descending=True, tie_break=id_col if tie_break else None
+    )
 
 
 def ivf_maxsim_topk(

@@ -403,7 +403,7 @@ def indexed_topk_with_pending(
     arrives pre-limited to k and the pending side is delta-sized."""
     from pq_vector_spark.functions.distance import array_distance, cosine_similarity
     from pq_vector_spark.index.search import indexed_topk, load_index
-    from pq_vector_spark.operators.topk import DISTANCE_COL
+    from pq_vector_spark.operators.topk import DISTANCE_COL, global_topk
 
     main = indexed_topk(
         spark,
@@ -424,15 +424,13 @@ def indexed_topk_with_pending(
     if metric == "cosine":
         # string name, not F.col(...): lets the one-shot SQL render fire (r16)
         d = cosine_similarity(col, [float(x) for x in query])
-        order = [F.col(DISTANCE_COL).desc()]
     else:
         d = array_distance(col, list(query))
-        order = [F.col(DISTANCE_COL).asc_nulls_last()]
-    if tie_break is not None:
-        order.append(F.col(tie_break).asc())
     both = main.unionByName(pend.withColumn(DISTANCE_COL, d).select(main.columns))
-    out = both.orderBy(*order).limit(k)
-    return out if keep_distance else out.drop(DISTANCE_COL)
+    return global_topk(
+        both, DISTANCE_COL, k, descending=metric == "cosine", tie_break=tie_break,
+        keep_score=keep_distance,
+    )
 
 
 def streaming_index_ingest(

@@ -84,8 +84,6 @@ def test_intercept_round_trips_do_not_grow_with_dim(spark, tmp_path):
     """py4j round trips per intercepted query are the same at dim 160 and
     dim 640 over the same table shape (proxy-release messages, which
     depend on garbage collection, are not counted)."""
-    from py4j.java_gateway import GatewayClient
-
     rng = np.random.default_rng(17)
     sqls = {}
     for dim in (160, 640):
@@ -105,6 +103,15 @@ def test_intercept_round_trips_do_not_grow_with_dim(spark, tmp_path):
         )
 
     opts = VectorTopKOptions(nprobe=2)
+    counts = {dim: counted_pq_sql(spark, q, opts) for dim, q in sqls.items()}
+    assert counts[160] == counts[640], counts
+
+
+def counted_pq_sql(spark, query, opts) -> int:
+    """py4j round trips (proxy releases excluded) of one warm ``pq_sql``
+    construction; the query must take the IVF route and return 10 rows."""
+    from py4j.java_gateway import GatewayClient
+
     calls = [0]
     send = GatewayClient.send_command
 
@@ -113,16 +120,35 @@ def test_intercept_round_trips_do_not_grow_with_dim(spark, tmp_path):
             calls[0] += 1
         return send(self, command, *args, **kwargs)
 
-    counts = {}
-    for dim, q in sqls.items():
-        pq_sql(spark, q, options=opts)  # warm: sidecar and codes-lookup caches
-        GatewayClient.send_command = counting
-        try:
-            calls[0] = 0
-            df = pq_sql(spark, q, options=opts)
-            counts[dim] = calls[0]
-        finally:
-            GatewayClient.send_command = send
-        assert vector_route(df) == "ivf"
-        assert len(df.collect()) == 10
-    assert counts[160] == counts[640], counts
+    pq_sql(spark, query, options=opts)  # warm: sidecar and codes-lookup caches
+    GatewayClient.send_command = counting
+    try:
+        df = pq_sql(spark, query, options=opts)
+    finally:
+        GatewayClient.send_command = send
+    assert vector_route(df) == "ivf"
+    assert len(df.collect()) == 10
+    return calls[0]
+
+
+def test_probe_round_trips_do_not_grow_with_nprobe(spark, tmp_path):
+    """The probed-cluster predicate is one parsed expression, so probing 2,
+    8 or 16 clusters costs the same py4j round trips. The 16-cluster probe
+    exceeds a lowered inFilterThreshold and takes the OR-of-equals form."""
+    rng = np.random.default_rng(23)
+    src = str(tmp_path / "src.parquet")
+    out = str(tmp_path / "indexed")
+    rows = [(int(i), [float(x) for x in rng.random(8, dtype=np.float32)]) for i in range(400)]
+    spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>").coalesce(1).write.parquet(src)
+    build_index(spark, src, out, column="vec", options=IndexBuildOptions(n_clusters=16))
+    register_indexed_table(spark, "route_nprobe", out)
+    lit = ", ".join(repr(float(x)) for x in rng.random(8, dtype=np.float32))
+    q = f"SELECT id FROM route_nprobe ORDER BY array_distance(vec, [{lit}]) LIMIT 10"
+    key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    thr = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        counts = {n: counted_pq_sql(spark, q, VectorTopKOptions(nprobe=n)) for n in (2, 8, 16)}
+    finally:
+        spark.conf.set(key, thr)
+    assert counts[2] == counts[8] == counts[16], counts

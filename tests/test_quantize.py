@@ -209,3 +209,27 @@ def test_binary_topk_with_fetch_matches_single_table(spark):
         ).select("vec_id").collect()
     ]
     assert a == b and len(a) == 10
+
+
+def test_binary_topk_shortlist_skips_unscored_rows(spark):
+    """Rows without a vector have no Hamming distance. The shortlist ranks
+    them after every scored row, so they cannot crowd the scored rows out
+    of the ``k * oversample`` candidates; both stages break ties on the id
+    (``tie_break``, else ``id_col``)."""
+    from pq_vector_spark.functions.quantize import (
+        binary_quantize,
+        binary_topk,
+        binary_topk_with_fetch,
+    )
+
+    rows = [(i, None) for i in range(8)] + [
+        (100 + i, [float(i), float(i)]) for i in range(4)
+    ]
+    df = spark.createDataFrame(rows, "id INT, v ARRAY<FLOAT>")
+    q = [1.0, 1.0]
+    # 101 is at distance 0; 100 and 102 tie at sqrt(2) and the id decides
+    got = binary_topk(df, "v", q, 2, oversample=4, tie_break="id").collect()
+    assert [r["id"] for r in got] == [101, 100]
+    words = df.select("id", binary_quantize("v", 2).alias("bq_words"))
+    fetched = binary_topk_with_fetch(words, df, "v", "id", q, 2, oversample=4)
+    assert [r["id"] for r in fetched.collect()] == [101, 100]

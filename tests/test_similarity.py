@@ -41,6 +41,19 @@ def test_similarity_join_l2(spark, corpus):
         assert r["score"] == pytest.approx(0.0)
 
 
+def test_similarity_join_ranks_unscored_rows_last(spark):
+    """A corpus row with a NULL vector, or one of another length, has a
+    NULL L2 score. The per-query top-k returns it only when fewer than k
+    rows score, so here the answer is the two scored rows."""
+    corpus = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, None), (4, [5.0])],
+        "cid INT, vec ARRAY<FLOAT>",
+    )
+    queries = spark.createDataFrame([(10, [0.0, 0.0])], "qid INT, qv ARRAY<FLOAT>")
+    rows = similarity_join(queries, corpus, "qid", "cid", "qv", "vec", 2).collect()
+    assert sorted((r["rank"], r["cid"]) for r in rows) == [(1, 1), (2, 2)]
+
+
 def test_similarity_join_broadcasts(spark, corpus):
     """The query side must broadcast — corpus never shuffles."""
     queries = corpus.limit(2).select(F.col("cid").alias("qid"), F.col("vec").alias("qv"))
@@ -131,6 +144,9 @@ def test_ivf_similarity_join_prune_scan_same_results(spark, corpus, tmp_path_fac
         ).collect()
         key = lambda r: (r["qid"], r["rank"])
         assert sorted(on, key=key) == sorted(off, key=key)
+    # no query probes any cluster: the pruned scan reads nothing
+    none = queries.filter(F.lit(False))
+    assert ivf_similarity_join(none, out_path, spark, "qid", "vec", k=3).collect() == []
 
 
 def test_ivf_similarity_join_prune_scan_pushes_filter(spark, corpus, tmp_path_factory):

@@ -9,6 +9,12 @@ wall seconds and in CPU seconds of the whole process tree (driver, JVM and
 Python workers, read from ``/proc``). The rows × dim where the fits cross
 is the element budget (``FOLD_ELEMENT_BUDGET``).
 
+The script lifts that budget inside its own process, so the "fold" leg
+runs the fold at every size (the program itself switches to the Arrow
+kernel above the budget), and it checks each leg's kernel on the executed
+plan: the Arrow leg must plan an ``ArrowEvalPython`` node, the fold leg
+none.
+
 Usage (from the repo root):
 
     SPARK_GRAFT_CPUS=2 python tools/fold_breakeven.py [--dim 256]
@@ -74,10 +80,13 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from pq_vector_spark import get_spark
+    from pq_vector_spark.functions import distance
     from pq_vector_spark.functions.distance import UNROLL_LIMIT, array_distance
 
     if args.dim <= UNROLL_LIMIT:
         sys.exit(f"--dim must exceed UNROLL_LIMIT ({UNROLL_LIMIT})")
+    # the fold leg must measure the fold at every size, over the budget too
+    distance.FOLD_ELEMENT_BUDGET = float("inf")
     spark = get_spark("fold_breakeven", shuffle_partitions=8)
     rng = np.random.default_rng(7)
     tmp = tempfile.mkdtemp(prefix="fold_breakeven_")
@@ -95,9 +104,13 @@ def main() -> None:
                 q = rng.normal(size=args.dim).astype(np.float32).tolist()
                 c0, t0 = tree_cpu_s(), time.perf_counter()
                 d = array_distance("v", q, rows_hint=n if kernel == "fold" else None)
-                (spark.read.parquet(os.path.join(tmp, f"t{n}")).withColumn("d", d)
-                 .orderBy(F.col("d")).limit(100).collect())
+                df = (spark.read.parquet(os.path.join(tmp, f"t{n}")).withColumn("d", d)
+                      .orderBy(F.col("d")).limit(100))
+                df.collect()
                 wall, cpu = time.perf_counter() - t0, tree_cpu_s() - c0
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                if ("ArrowEvalPython" in plan) != (kernel == "arrow"):
+                    sys.exit(f"the {kernel} leg at {n} rows planned the other kernel:\n{plan}")
                 if rnd >= 2:
                     runs[n, kernel][0].append(wall)
                     runs[n, kernel][1].append(cpu)
