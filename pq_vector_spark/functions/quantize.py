@@ -255,10 +255,12 @@ def binary_topk(
     qbits = pack_query_bits([float(x) for x in query])
     qlit = F.array(*[F.lit(int(w)).cast("long") for w in qbits])
     bits = F.col(bq_col) if bq_col else binary_quantize(col, len(query))
-    # string name, not F.col(...): lets the one-shot SQL render fire (r16)
-    exact = array_distance(col, [float(x) for x in query])
+    c = int(k) * int(oversample)
+    # string name, not F.col(...): lets the one-shot SQL render fire (r16);
+    # rows_hint=c keeps a wide query's shortlist re-rank on the JVM fold
+    exact = array_distance(col, [float(x) for x in query], rows_hint=c)
     return shortlist_rerank(
-        df, "_bq_ham", hamming_distance(bits, qlit), exact, int(k) * int(oversample),
+        df, "_bq_ham", hamming_distance(bits, qlit), exact, c,
         k, tie_break=tie_break, keep_distance=keep_distance,
     )
 
@@ -296,9 +298,10 @@ def binary_topk_with_fetch(
         raise ValueError(f"oversample must be >= 1, got {oversample}")
     qbits = pack_query_bits([float(x) for x in query])
     qlit = F.array(*[F.lit(int(w)).cast("long") for w in qbits])
+    c = int(k) * int(oversample)
     return shortlist_rerank(
         words_df, "_bq_ham", hamming_distance(F.col(words_col), qlit),
-        array_distance(column, [float(x) for x in query]), int(k) * int(oversample),
+        array_distance(column, [float(x) for x in query], rows_hint=c), c,
         k, tie_break=tie_break or id_col, raw=raw_df, id_col=id_col,
         keep_distance=keep_distance,
     )

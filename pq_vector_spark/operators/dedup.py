@@ -165,41 +165,42 @@ def _band_structs(sig_col: str, bands: int, rows_per_band: int) -> Column:
     return F.expr("array(" + ", ".join(parts) + ")")
 
 
-def _expand_sorted_member_pairs(
-    grouped: DataFrame, members_col: str = "_m", small_cap: int = 1024
+def _expand_sorted_id_pairs(
+    grouped: DataFrame, ids_col: str = "_ids", out: Sequence[str] = ("id_a", "id_b")
 ) -> DataFrame:
-    """``_expand_sorted_id_pairs`` generalized to STRUCT members: buckets
-    of sorted member structs → within-bucket ordered pair rows
-    ``(_a struct, _b struct)`` with _a before _b in the sorted order.
+    """Buckets of SORTED members (ids, or structs that sort by id) →
+    within-bucket ordered pair rows ``out = (a, b)``, a before b in the
+    sorted order — the one pair expansion of ``minhash_lsh_pairs``,
+    ``ngram_jaccard_pairs``, ``_cluster_pair_expansion`` and
+    ``winnow_overlap_pairs``.
 
-    r16 shape (this optimization round): TWO chained generators in ONE
-    plan — posexplode every non-final member as an anchor, then explode
-    the suffix slice after it. Both Generate nodes fuse into one
-    whole-stage-codegen nested loop, so no pair array is ever BUILT at
-    all: the previous flatten-of-transforms comprehension allocated each
-    bucket's C(n, 2) struct array before exploding it (~2.3 µs/pair,
-    measured 1.17 s for the sf0.1 jaccard expansion vs 0.72 s for this
-    shape), and the r13 small/big hybrid existed only to keep that
-    allocation under the 2^31 single-row array limit. Here the widest
-    row is one bucket's member array (exactly what the old big path
-    carried per block row), so hot shingles stream by construction —
-    ``small_cap`` is retained for signature compatibility but no size
-    cut is needed; every bucket takes the same streaming path.
-    Callers must have filtered size >= 2 already (a size-0/1 bucket
-    emits nothing either way — the anchor slice is empty)."""
-    m = F.col(members_col)
+    r16 shape: TWO chained generators in ONE plan — posexplode every
+    non-final member as an anchor, then explode the suffix slice after
+    it. The Generate nodes fuse into one whole-stage-codegen nested loop,
+    so no pair array is ever BUILT: the previous flatten-of-transforms
+    comprehension allocated each bucket's C(n, 2) struct array before
+    exploding it (~2.3 µs/pair — it was the dominant cost of the sf0.1
+    jaccard/minhash/winnow pair stages; 1.17 s vs 0.72 s for the sf0.1
+    jaccard expansion), and needed a small/big hybrid to stay under the
+    2^31 single-row array limit. The widest row here is one bucket's
+    member array, so hot buckets stream by construction. Callers must
+    have filtered size >= 2 already (a size-0/1 bucket emits nothing
+    either way — the anchor slice is empty); pairs are emitted once per
+    bucket (dedupe across buckets stays the caller's job)."""
+    m = F.col(ids_col)
+    xp = f"_xp{ids_col}"
     anchors = grouped.select(
-        m.alias("_xp_m"),
+        m.alias(xp),
         F.posexplode(
             F.slice(m, 1, F.greatest(F.size(m) - 1, F.lit(0)))
         ).alias("_xp_i", "_xp_a"),
     )
-    mm = F.col("_xp_m")
+    mm = F.col(xp)
     return anchors.select(
-        F.col("_xp_a").alias("_a"),
+        F.col("_xp_a").alias(out[0]),
         F.explode(
             F.slice(mm, F.col("_xp_i") + 2, F.size(mm) - F.col("_xp_i") - 1)
-        ).alias("_b"),
+        ).alias(out[1]),
     )
 
 
@@ -210,7 +211,6 @@ def ngram_jaccard_pairs(
     *,
     n: int = 3,
     threshold: float = 0.5,
-    small_cap: int = 1024,
 ) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (id_a < id_b, jaccard ≥ threshold).
 
@@ -230,7 +230,7 @@ def ngram_jaccard_pairs(
     engines.
 
     Hot-shingle safety (r16, ordered by the r15 verdict): pair expansion
-    routes through ``_expand_sorted_member_pairs`` — a two-generator
+    routes through ``_expand_sorted_id_pairs`` — a two-generator
     anchor + suffix-slice explode in one fused codegen loop, so no row
     ever holds a bucket's C(n, 2) pair set: a boilerplate shingle shared
     by 100k docs degrades to quadratic-but-streaming output (like the
@@ -268,7 +268,7 @@ def ngram_jaccard_pairs(
         .filter(F.size("_m") >= 2)
     )
     inter = (
-        _expand_sorted_member_pairs(grouped, "_m", small_cap=small_cap)
+        _expand_sorted_id_pairs(grouped, "_m", ("_a", "_b"))
         .select(
             F.col("_a._id").alias("id_a"),
             F.col("_b._id").alias("id_b"),
@@ -285,43 +285,6 @@ def ngram_jaccard_pairs(
         inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _expand_sorted_id_pairs(
-    grouped: DataFrame, ids_col: str = "_ids", small_cap: int = 1024
-) -> DataFrame:
-    """Buckets of SORTED member ids → within-bucket ordered (id_a, id_b)
-    pairs, id_a < id_b.
-
-    r16 reshape (this optimization round): TWO chained generators in ONE
-    plan — posexplode every non-final id as an anchor, then explode the
-    suffix slice after it (see ``_expand_sorted_member_pairs``). The
-    Generate nodes fuse into one whole-stage-codegen nested loop, so no
-    pair array is ever BUILT: the previous flatten-of-transforms
-    comprehension allocated each bucket's C(n, 2) struct array before
-    exploding it (~2.3 µs/pair — it was the dominant cost of the sf0.1
-    jaccard/minhash/winnow pair stages), and the small/big hybrid
-    existed only to keep that allocation under the 2^31 single-row
-    array limit. The widest row here is one bucket's id array (exactly
-    what the old big path carried per block row), so hot buckets stream
-    by construction; ``small_cap`` is retained for signature
-    compatibility but no size cut is needed. Callers must have filtered
-    size >= 2 already; pairs are emitted once per bucket (dedupe across
-    buckets stays the caller's job)."""
-    ids = F.col(ids_col)
-    anchors = grouped.select(
-        ids.alias("_xp_ids"),
-        F.posexplode(
-            F.slice(ids, 1, F.greatest(F.size(ids) - 1, F.lit(0)))
-        ).alias("_xp_i", "_xp_a"),
-    )
-    bids = F.col("_xp_ids")
-    return anchors.select(
-        F.col("_xp_a").alias("id_a"),
-        F.explode(
-            F.slice(bids, F.col("_xp_i") + 2, F.size(bids) - F.col("_xp_i") - 1)
-        ).alias("id_b"),
     )
 
 
@@ -561,34 +524,21 @@ def embedding_near_dup_bucketed(
     Plan: train centroids on a ≤``sample_cap`` driver sample (the only
     collect, same contract as the index build) → multi-probe every row to
     its ``nprobe`` nearest clusters map-side (broadcast centroids + pandas
-    UDF, see index/build.probe_clusters) → self-join on cluster id so only
-    co-clustered pairs are generated → distinct candidate ids → exact cosine
-    on candidates only. Pair generation is Σ_c |c|², not n² — candidate
-    volume tracks cluster sizes (distributed analogue of the reference's
-    inverted-list gather, src/ivf/search.rs:100-120).
+    UDF, see index/build.probe_clusters) → the embedding pair stage
+    (``_embedding_pairs``, shared with :func:`semantic_dedup`): only
+    co-clustered pairs are generated, exact cosine on candidates only.
+    Pair generation is Σ_c |c|², not n² — candidate volume tracks cluster
+    sizes (distributed analogue of the reference's inverted-list gather,
+    src/ivf/search.rs:100-120).
 
     ``nprobe > 1`` is multi-probe blocking: near-boundary pairs co-occur in
     a shared neighboring cluster. With ``nprobe = n_clusters`` every pair
     shares every cluster and the result is EXACTLY ``embedding_near_dup``
     (the correctness envelope the oracle checks).
 
-    ``method`` names the within-cluster compute (both produce the same
-    pair SET — all co-clustered pairs at cosine ≥ ``threshold``):
-
-    - ``"expand"`` (default): one-shuffle grouped candidate expansion
-      (cluster → sorted member list, singletons filtered before any pair
-      exists, streaming two-step generator — r13, never a single C(n, 2)
-      allocation) → exact ``cosine_similarity`` via a join back to the
-      vectors. Cosines are the SQL left-to-right fold, so an external
-      engine replays them bit-for-bit — the oracle-row path. The
-      join-back ships ~Σ|c|² candidate pairs × two vectors, so it is for
-      MODEST candidate volumes;
-    - ``"gram"``: per-cluster tiled Gram matrix (``_cluster_gram_pairs``,
-      SemDeDup's compute shape) — candidates never leave the executor;
-      the only exchange is the (id, vector) cluster grouping. THE scale
-      path at 1M+ rows, where expand's pair join-back would shuffle
-      hundreds of GB. Cosines come from float64 BLAS (last-ulp may differ
-      from the SQL fold; multi-probe duplicates resolve by max).
+    ``method`` names the within-cluster compute (``"expand"``, the default
+    and the engine-replayable oracle path, or ``"gram"``, THE scale path
+    at 1M+ rows); ``_embedding_pairs`` documents the trade.
 
     ``max_cluster`` is the hot-cluster guard the LSH buckets already had
     (r12): a degenerate cluster (mass near-identical embeddings) is
@@ -599,45 +549,14 @@ def embedding_near_dup_bucketed(
     ``_caches`` — the module's unpersist-after-action contract — to avoid
     recomputing the grouped frame on the expand path).
     """
-    import math
-
-    from pq_vector_spark.index.build import (
-        PROBE_COL,
-        _sample_size,
-        probe_clusters,
-        sample_embeddings_to_driver,
+    rows, n_clusters, nprobe, complete = _embedding_blocking(
+        df, vec_col, method, n_clusters, nprobe
     )
-    from pq_vector_spark.index.kmeans import train_kmeans
-    from pq_vector_spark.schema import validate_vector_column
-
-    if method not in ("expand", "gram"):
-        raise ValueError(f"method must be expand|gram, got {method!r}")
-    stats = validate_vector_column(df, vec_col)
-    if n_clusters is None:
-        n_clusters = max(1, math.ceil(math.sqrt(stats.rows)))
-    n_clusters = min(n_clusters, stats.rows)
-    nprobe = max(1, min(int(nprobe), n_clusters))
-    # exactness envelope shortcut (r13): nprobe = n_clusters puts EVERY
-    # point in EVERY cluster — the pair set is complete with ONE block,
-    # and probing all clusters would generate each pair n_clusters times
-    # (the r13 bench measured that redundancy at 45× on the oracle row).
-    # No centroids are needed to block a single complete block. On the
-    # expand path, a one-block grouped expansion would emit all C(n, 2)
-    # pairs from ONE task and pay the interpreted-HOF cosine on every
-    # one; instead the complete case discovers CANDIDATES via the BLAS
-    # gram kernel at (threshold − 1e-9) — the margin absorbs the
-    # last-ulp BLAS-vs-SQL-fold difference, so no qualifying pair can be
-    # missed — and the ordinary join-back then applies the EXACT SQL
-    # cosine at the real threshold. Bit-identical result, gram speed.
-    complete = nprobe >= n_clusters
+    probed = None
     if not complete:
-        sample = sample_embeddings_to_driver(
-            df, vec_col, _sample_size(stats.rows, n_clusters, sample_cap),
-            stats.rows, seed,
-        )
-        centroids = train_kmeans(sample, n_clusters, max_iters=max_iters, seed=seed)
-        probed = probe_clusters(
-            df.select(id_col, vec_col), vec_col, centroids, nprobe
+        _, probed = _fit_probe(
+            df, df.select(id_col, vec_col), vec_col, rows, n_clusters, nprobe,
+            seed=seed, max_iters=max_iters, sample_cap=sample_cap,
         )
         # Persist ONLY when probed actually has a second consumer: the
         # capped-cluster count is _stats-gated, so without _stats the
@@ -649,40 +568,137 @@ def embedding_near_dup_bucketed(
 
             probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
             _caches.append(probed)
-    if method == "gram":
-        if complete:
-            pe = df.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                F.lit(0).alias("_c"),
-            )
-        else:
-            pe = probed.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                F.explode(PROBE_COL).alias("_c"),
-            )
+    return _embedding_pairs(
+        df, vec_col, id_col, probed, rows, threshold, method, max_cluster,
+        _stats, _caches,
+    )
+
+
+def _embedding_blocking(
+    df: DataFrame, vec_col: str, method: str, n_clusters: Optional[int], nprobe: int
+) -> tuple:
+    """Shared set-up of the IVF-blocked embedding operators: checks
+    ``method``, defaults ``n_clusters`` to ⌈√rows⌉, clamps ``nprobe``.
+    Returns ``(rows, n_clusters, nprobe, complete)``.
+
+    ``complete`` is the exactness-envelope shortcut (r13): nprobe =
+    n_clusters puts EVERY point in EVERY cluster, so the pair set is
+    complete with ONE block, and probing all clusters would generate
+    each pair n_clusters times (the r13 bench measured that redundancy at
+    45× on the oracle row). No centroids are needed to block a single
+    complete block."""
+    import math
+
+    from pq_vector_spark.schema import validate_vector_column
+
+    if method not in ("expand", "gram"):
+        raise ValueError(f"method must be expand|gram, got {method!r}")
+    rows = validate_vector_column(df, vec_col).rows
+    if n_clusters is None:
+        n_clusters = max(1, math.ceil(math.sqrt(rows)))
+    n_clusters = min(n_clusters, rows)
+    nprobe = max(1, min(int(nprobe), n_clusters))
+    return rows, n_clusters, nprobe, nprobe >= n_clusters
+
+
+def _fit_probe(
+    df: DataFrame,
+    frame: DataFrame,
+    vec_col: str,
+    rows: int,
+    n_clusters: int,
+    nprobe: int,
+    *,
+    seed: int,
+    max_iters: int,
+    sample_cap: int,
+):
+    """k-means on a ≤``sample_cap`` driver sample of ``df`` (the only
+    collect, the index-build contract), then ``frame`` with every row's
+    ``nprobe`` nearest centroid ids in ``PROBE_COL`` (lazy, map-side).
+    Returns ``(centroids, probed)``."""
+    from pq_vector_spark.index.build import (
+        _sample_size,
+        probe_clusters,
+        sample_embeddings_to_driver,
+    )
+    from pq_vector_spark.index.kmeans import train_kmeans
+
+    sample = sample_embeddings_to_driver(
+        df, vec_col, _sample_size(rows, n_clusters, sample_cap), rows, seed
+    )
+    centroids = train_kmeans(sample, n_clusters, max_iters=max_iters, seed=seed)
+    return centroids, probe_clusters(frame, vec_col, centroids, nprobe)
+
+
+def _embedding_pairs(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    probed: Optional[DataFrame],
+    rows: int,
+    threshold: float,
+    method: str,
+    max_cluster: Optional[int],
+    _stats: Optional[dict],
+    _caches: Optional[list],
+) -> DataFrame:
+    """The embedding pair stage of :func:`embedding_near_dup_bucketed` and
+    :func:`semantic_dedup`: ``(id_a, id_b, cosine)``, id_a < id_b, every
+    pair that shares a cluster of ``probed`` (``PROBE_COL`` memberships;
+    None for the one complete block) at cosine ≥ ``threshold``, once.
+    Clusters past ``max_cluster`` members keep their first ``max_cluster``
+    by id; ``_stats`` receives ``capped_clusters``.
+
+    ``method`` names the within-cluster compute (both produce the same
+    pair SET):
+
+    - ``"expand"``: one-shuffle grouped candidate expansion
+      (``_cluster_pair_expansion``) → exact ``cosine_similarity`` via a
+      join back to the vectors. Cosines are the SQL left-to-right fold,
+      so an external engine replays them bit-for-bit — the oracle-row
+      path. The join-back ships ~Σ|c|² candidate pairs × two vectors, so
+      it is for MODEST candidate volumes. The complete block does not
+      expand: a one-block grouped expansion would emit all C(n, 2) pairs
+      from ONE task and pay the interpreted-HOF cosine on every one, so
+      it discovers CANDIDATES with the BLAS gram kernel at (threshold −
+      1e-9) — the margin absorbs the last-ulp BLAS-vs-SQL-fold
+      difference, so no qualifying pair can be missed — and the same
+      join-back applies the EXACT SQL cosine at the real threshold.
+      Bit-identical result, gram speed;
+    - ``"gram"``: per-cluster tiled Gram matrix (``_cluster_gram_pairs``,
+      SemDeDup's compute shape) — candidates never leave the executor;
+      the only exchange is the (id, vector) cluster grouping. THE scale
+      path at 1M+ rows, where expand's pair join-back would shuffle
+      hundreds of GB. Cosines come from float64 BLAS (last-ulp may differ
+      from the SQL fold; multi-probe duplicates resolve by max).
+    """
+    from pq_vector_spark.index.build import PROBE_COL
+
+    if probed is None:
+        pe = df.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), F.lit(0).alias("_c")
+        )
         if _stats is not None:
-            if complete:
-                _stats["capped_clusters"] = int(
-                    max_cluster is not None and stats.rows > max_cluster
-                )
-            else:
-                _stats["capped_clusters"] = _count_capped_clusters(
-                    probed, id_col, PROBE_COL, max_cluster
-                )
+            _stats["capped_clusters"] = int(max_cluster is not None and rows > max_cluster)
+    else:
+        pe = probed.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_v"),
+            F.explode(PROBE_COL).alias("_c"),
+        )
+    if method == "gram":
+        if _stats is not None and probed is not None:
+            _stats["capped_clusters"] = _count_capped_clusters(
+                probed, PROBE_COL, max_cluster
+            )
         pairs = _cluster_gram_pairs(pe, threshold, max_cluster)
         return pairs.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
-    if complete:
-        pe = df.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-        )
+    if probed is not None:
+        cands = _cluster_pair_expansion(pe.select("_id", "_c"), max_cluster, _stats, _caches)
+    else:
         nb = _gram_block_count(df.sparkSession)
-        if (
-            nb > 1
-            and stats.rows > 2048
-            and (max_cluster is None or stats.rows <= max_cluster)
-        ):
+        if nb > 1 and rows > 2048 and (max_cluster is None or rows <= max_cluster):
             # parallel blocked candidate discovery (r16): the margin +
             # exact-cosine re-verify below make last-ulp GEMM-shape
             # differences harmless; truncation (which is global
@@ -692,20 +708,9 @@ def embedding_near_dup_bucketed(
             # per-group Arrow/pandas overheads dwarfing the compute)
             cands = _blocked_gram_candidates(pe, threshold - 1e-9, nb)
         else:
-            cands = _cluster_gram_pairs(
-                pe.withColumn("_c", F.lit(0)),
-                threshold - 1e-9,
-                max_cluster,
-            ).select("id_a", "id_b")
-        if _stats is not None:
-            _stats["capped_clusters"] = int(
-                max_cluster is not None and stats.rows > max_cluster
+            cands = _cluster_gram_pairs(pe, threshold - 1e-9, max_cluster).select(
+                "id_a", "id_b"
             )
-    else:
-        exploded = probed.select(
-            F.col(id_col).alias("_id"), F.explode(PROBE_COL).alias("_c")
-        )
-        cands = _cluster_pair_expansion(exploded, max_cluster, _stats, _caches)
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     return (
@@ -715,6 +720,55 @@ def embedding_near_dup_bucketed(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
+
+
+def _unit_rows(pdf, cap: Optional[int] = None):
+    """One gram block's ``(_id, _v)`` rows as ``(ids, unit vectors)``:
+    sorted by id, the first ``cap`` kept (the hot-cluster truncation),
+    each vector L2-normalized. A zero norm clamps to 1, so a zero vector
+    scores cosine 0 against everything — ``cosine_similarity``'s no-NaN
+    contract downstream."""
+    import numpy as np
+
+    order = np.argsort(pdf["_id"].to_numpy(), kind="stable")[:cap]
+    ids = pdf["_id"].to_numpy()[order]
+    if len(ids) == 0:
+        return ids, np.zeros((0, 0))
+    X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"].to_numpy()[order]])
+    norms = np.linalg.norm(X, axis=1)
+    norms[norms == 0.0] = 1.0
+    return ids, X / norms[:, None]
+
+
+def _gram_tile_pairs(a, b, threshold: float, tile: int):
+    """The one tiled Gram loop of both gram kernels: pairs at cosine ≥
+    ``threshold`` between ``_unit_rows`` blocks, evaluated ``tile`` ×
+    ``tile`` (2048² × 8 B = 32 MB) at a time, never |block|². ``b`` None:
+    the strict upper triangle of a·aᵀ (i < j in id order); else the full
+    cross product a·bᵀ. Returns ``(ids_a, ids_b, cosines)`` arrays."""
+    import numpy as np
+
+    ia, Xa = a
+    ib, Xb = a if b is None else b
+    out_a, out_b, out_c = [ia[:0]], [ib[:0]], [np.zeros(0)]
+    for i0 in range(0, len(ia), tile):
+        ai = Xa[i0 : i0 + tile]
+        for j0 in range(i0 if b is None else 0, len(ib), tile):
+            g = ai @ Xb[j0 : j0 + tile].T
+            if b is None and j0 == i0:
+                # upper triangle only: strict i < j within the block
+                g = np.triu(g, k=1)
+                hit = np.argwhere(g >= threshold)
+                # triu zeroed the rest, but threshold <= 0 would let
+                # zeros through — mask explicitly
+                if threshold <= 0.0:
+                    hit = hit[hit[:, 1] > hit[:, 0]]
+            else:
+                hit = np.argwhere(g >= threshold)
+            out_a.append(ia[i0 + hit[:, 0]])
+            out_b.append(ib[j0 + hit[:, 1]])
+            out_c.append(g[hit[:, 0], hit[:, 1]])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
 def _blocked_gram_candidates(
@@ -768,66 +822,19 @@ def _blocked_gram_candidates(
         import numpy as np
         import pandas as pd
 
-        def prep(sub):
-            ids = sub["_id"].to_numpy()
-            if len(ids) == 0:
-                return ids, None
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            vecs = sub["_v"].to_numpy()[order]
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            norms = np.linalg.norm(X, axis=1)
-            norms[norms == 0.0] = 1.0
-            return ids, X / norms[:, None]
-
-        empty = pd.DataFrame({"id_a": [], "id_b": []})
         gi, gj = int(key[0]), int(key[1])
-        out_a, out_b = [], []
         if gi == gj:
-            ids, Xn = prep(pdf)
-            n = len(ids)
-            if n < 2:
-                return empty
-            for i0 in range(0, n, tile):
-                ai = Xn[i0 : i0 + tile]
-                for j0 in range(i0, n, tile):
-                    g = ai @ Xn[j0 : j0 + tile].T
-                    if j0 == i0:
-                        g = np.triu(g, k=1)
-                        hit = np.argwhere(g >= threshold)
-                        if threshold <= 0.0 and len(hit):
-                            hit = hit[hit[:, 1] > hit[:, 0]]
-                    else:
-                        hit = np.argwhere(g >= threshold)
-                    if len(hit):
-                        out_a.append(ids[i0 + hit[:, 0]])
-                        out_b.append(ids[j0 + hit[:, 1]])
-            if not out_a:
-                return empty
-            return pd.DataFrame(
-                {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
+            a, b, _ = _gram_tile_pairs(_unit_rows(pdf), None, threshold, tile)
+        else:
+            a, b, _ = _gram_tile_pairs(
+                _unit_rows(pdf[pdf["_blk"] == gi]),
+                _unit_rows(pdf[pdf["_blk"] == gj]),
+                threshold,
+                tile,
             )
-        ia, Xa = prep(pdf[pdf["_blk"] == gi])
-        ib, Xb = prep(pdf[pdf["_blk"] == gj])
-        if len(ia) == 0 or len(ib) == 0:
-            return empty
-        for i0 in range(0, len(ia), tile):
-            ai = Xa[i0 : i0 + tile]
-            for j0 in range(0, len(ib), tile):
-                g = ai @ Xb[j0 : j0 + tile].T
-                hit = np.argwhere(g >= threshold)
-                if len(hit):
-                    out_a.append(ia[i0 + hit[:, 0]])
-                    out_b.append(ib[j0 + hit[:, 1]])
-        if not out_a:
-            return empty
-        a = np.concatenate(out_a)
-        b = np.concatenate(out_b)
-        # cross-block pairs arrive in arbitrary id order — normalize
-        swap = a > b
-        return pd.DataFrame(
-            {"id_a": np.where(swap, b, a), "id_b": np.where(swap, a, b)}
-        )
+            # cross-block pairs arrive in arbitrary id order — normalize
+            a, b = np.minimum(a, b), np.maximum(a, b)
+        return pd.DataFrame({"id_a": a, "id_b": b})
 
     return rep.groupBy("_gi", "_gj").applyInPandas(gram, out_schema)
 
@@ -843,7 +850,7 @@ def _gram_block_count(spark) -> int:
 
 
 def _count_capped_clusters(
-    probed: DataFrame, id_col: str, probe_col: str, max_cluster: Optional[int]
+    probed: DataFrame, probe_col: str, max_cluster: Optional[int]
 ) -> int:
     """Diagnostic twin of the expand path's ``capped_clusters`` stat for
     the gram path (which truncates inside the pandas worker): one bounded
@@ -868,10 +875,11 @@ def _cluster_gram_pairs(
 ) -> DataFrame:
     """(_id, _v, _c) memberships → within-cluster (id_a < id_b, cosine)
     pairs at cosine ≥ ``threshold``, via a PER-CLUSTER TILED GRAM MATRIX
-    (``applyInPandas`` + BLAS) instead of pair expansion + vector
-    join-back. This is the 100 TB path for the embedding-dedup family
-    (SemDeDup's own compute shape, Abbas et al. 2023 §3: normalize the
-    cluster's vectors, X·Xᵀ, threshold the upper triangle):
+    (``applyInPandas`` + BLAS, ``_gram_tile_pairs``) instead of pair
+    expansion + vector join-back. This is the 100 TB path for the
+    embedding-dedup family (SemDeDup's own compute shape, Abbas et al.
+    2023 §3: normalize the cluster's vectors, X·Xᵀ, threshold the upper
+    triangle):
 
     - the ONLY exchange is the cluster grouping itself — n·nprobe rows of
       (id, vector), ~2 KB each at 256 dims. Candidate PAIRS never travel:
@@ -882,11 +890,7 @@ def _cluster_gram_pairs(
       2 vectors ≈ hundreds of GB shuffled at 1M×256 — does not exist here;
     - per-group memory is bounded: hot clusters truncate to their first
       ``max_cluster`` members by id (the expand path's exact semantics)
-      and the Gram matrix is evaluated in ``tile``×``tile`` blocks
-      (2048² × 8 B = 32 MB), never |c|²;
-    - zero-norm vectors score cosine 0 against everything (they divide by
-      a clamped norm of 1), matching ``cosine_similarity``'s no-NaN
-      contract downstream.
+      and the Gram matrix is evaluated in ``tile``×``tile`` blocks.
 
     Multi-probe (nprobe > 1) emits a shared pair once PER shared cluster;
     the caller dedupes with ``groupBy(id_a, id_b).agg(max(cosine))`` —
@@ -908,50 +912,10 @@ def _cluster_gram_pairs(
     )
 
     def gram(pdf):
-        import numpy as np
         import pandas as pd
 
-        ids = pdf["_id"].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        vecs = pdf["_v"].to_numpy()[order]
-        if max_cluster is not None and len(ids) > max_cluster:
-            ids, vecs = ids[:max_cluster], vecs[:max_cluster]
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0
-        Xn = X / norms[:, None]
-        n = len(ids)
-        out_a, out_b, out_c = [], [], []
-        for i0 in range(0, n, tile):
-            ai = Xn[i0 : i0 + tile]
-            for j0 in range(i0, n, tile):
-                g = ai @ Xn[j0 : j0 + tile].T
-                if j0 == i0:
-                    # upper triangle only: strict i < j within the block
-                    g = np.triu(g, k=1)
-                    hit = np.argwhere(g >= threshold)
-                    # triu zeroed the rest, but threshold <= 0 would let
-                    # zeros through — mask explicitly
-                    if threshold <= 0.0 and len(hit):
-                        hit = hit[hit[:, 1] > hit[:, 0]]
-                else:
-                    hit = np.argwhere(g >= threshold)
-                if len(hit):
-                    out_a.append(ids[i0 + hit[:, 0]])
-                    out_b.append(ids[j0 + hit[:, 1]])
-                    out_c.append(g[hit[:, 0], hit[:, 1]])
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        a, b, c = _gram_tile_pairs(_unit_rows(pdf, max_cluster), None, threshold, tile)
+        return pd.DataFrame({"id_a": a, "id_b": b, "cosine": c})
 
     return probed_exploded.groupBy("_c").applyInPandas(gram, out_schema)
 
@@ -1037,17 +1001,18 @@ def semantic_dedup(
     truncates a degenerate cluster of mass-near-identical embeddings —
     run ``exact_dedup`` on the payloads first, the hot-bucket stance;
     ``_stats["capped_clusters"]`` reports when it fired), and a
-    component-keyed survivor window. ``method`` picks the within-cluster
-    compute, exactly as in :func:`embedding_near_dup_bucketed`:
-    ``"expand"`` (default — grouped candidate expansion + SQL cosine, the
-    engine-replayable oracle path) or ``"gram"`` (per-cluster tiled Gram
-    matrix, the paper's own compute shape and THE path at 1M+ rows —
-    candidate pairs never leave the executor). ``nprobe`` > 1 catches
-    near-boundary pairs; ``nprobe = n_clusters`` with an uncapped
-    ``max_cluster`` is the exactness envelope (identical to all-pairs
-    cosine at 1 - eps). The centroid set is trained ONCE and shared by
-    blocking and scoring, so the survivor score is consistent with the
-    blocking geometry.
+    component-keyed survivor window. Its pairs come from the same
+    blocking stage as :func:`embedding_near_dup_bucketed`
+    (``_embedding_pairs``) at threshold 1 - ``eps``; ``method`` picks the
+    within-cluster compute there: ``"expand"`` (default — grouped
+    candidate expansion + SQL cosine, the engine-replayable oracle path)
+    or ``"gram"`` (per-cluster tiled Gram matrix, the paper's own compute
+    shape and THE path at 1M+ rows — candidate pairs never leave the
+    executor). ``nprobe`` > 1 catches near-boundary pairs; ``nprobe =
+    n_clusters`` with an uncapped ``max_cluster`` is the exactness
+    envelope (identical to all-pairs cosine at 1 - eps). The centroid
+    set is trained ONCE and shared by blocking and scoring, so the
+    survivor score is consistent with the blocking geometry.
 
     **Pass ``_caches`` for any corpus-scale run**: the probed frame
     (corpus + centroid assignment) has up to FOUR consumers — pair
@@ -1064,60 +1029,38 @@ def semantic_dedup(
     ``count()`` actions only materialize caches that are reused, never
     recompute.
     """
-    import math
+    import time as _time
 
-    from pq_vector_spark.index.build import (
-        PROBE_COL,
-        _sample_size,
-        probe_clusters,
-        sample_embeddings_to_driver,
-    )
-    from pq_vector_spark.index.kmeans import train_kmeans
-    from pq_vector_spark.schema import validate_vector_column
-
-    from pq_vector_spark.index.build import PROBE_COL as _PROBE
+    from pq_vector_spark.index.build import PROBE_COL
 
     if keep not in ("outlier", "prototype", "min_id"):
         raise ValueError(f"keep must be outlier|prototype|min_id, got {keep!r}")
-    if method not in ("expand", "gram"):
-        raise ValueError(f"method must be expand|gram, got {method!r}")
     if not (0.0 < eps < 1.0):
         raise ValueError(f"eps must be in (0, 1), got {eps}")
-    reserved = {"_sd_cos", "_sd_c", "_sd_cv", "canonical_id", "is_canonical", _PROBE}
+    reserved = {"_sd_cos", "_sd_c", "_sd_cv", "canonical_id", "is_canonical", PROBE_COL}
     hit = [c for c in df.columns if c in reserved]
     if hit:
         raise ValueError(f"input columns {hit} collide with reserved names")
-    spark = df.sparkSession
-    stats = validate_vector_column(df, vec_col)
-    if n_clusters is None:
-        n_clusters = max(1, math.ceil(math.sqrt(stats.rows)))
-    n_clusters = min(n_clusters, stats.rows)
-    nprobe = max(1, min(int(nprobe), n_clusters))
-    # exactness envelope shortcut (r13, as in embedding_near_dup_bucketed):
-    # nprobe = n_clusters makes blocking complete with ONE block — probing
-    # all clusters would emit every pair n_clusters times. Centroids are
-    # still trained when the SURVIVOR SCORE needs them (keep != min_id);
-    # the pure min_id envelope skips k-means entirely.
-    complete = nprobe >= n_clusters
-    import time as _time
-
+    rows, n_clusters, nprobe, complete = _embedding_blocking(
+        df, vec_col, method, n_clusters, nprobe
+    )
+    # Centroids are still trained on the complete block when the SURVIVOR
+    # SCORE needs them (keep != min_id); the pure min_id envelope skips
+    # k-means entirely.
     diag = _stats is not None and _caches is not None
+    probed = None
     if not complete or keep != "min_id":
         _t0 = _time.time()
-        sample = sample_embeddings_to_driver(
-            df, vec_col, _sample_size(stats.rows, n_clusters, sample_cap),
-            stats.rows, seed,
-        )
-        centroids = train_kmeans(
-            sample, n_clusters, max_iters=max_iters, seed=seed
-        )
-        if _stats is not None:
-            _stats["fit_sec"] = round(_time.time() - _t0, 3)
         # probe the FULL frame: probe_clusters only appends a column, so
         # the survivor score below rides the same rows — no corpus-keyed
         # join to reattach it (the blocking explode still projects just
         # (id, cluster))
-        probed = probe_clusters(df, vec_col, centroids, nprobe)
+        centroids, probed = _fit_probe(
+            df, df, vec_col, rows, n_clusters, nprobe,
+            seed=seed, max_iters=max_iters, sample_cap=sample_cap,
+        )
+        if _stats is not None:
+            _stats["fit_sec"] = round(_time.time() - _t0, 3)
         # Persist ONLY under the _caches contract AND only when probed has
         # a second consumer: keep != min_id adds resolve's two scored-frame
         # joins (the 199 s → 80 s case), _stats adds the capped-cluster
@@ -1132,77 +1075,10 @@ def semantic_dedup(
                 _t0 = _time.time()
                 probed.count()
                 _stats["assign_sec"] = round(_time.time() - _t0, 3)
-    if method == "gram":
-        # SemDeDup's own compute shape: per-cluster tiled Gram matrix —
-        # candidate pairs never leave the executor (see
-        # embedding_near_dup_bucketed's method docs for the trade)
-        if complete:
-            pe = df.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                F.lit(0).alias("_c"),
-            )
-        else:
-            pe = probed.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                F.explode(PROBE_COL).alias("_c"),
-            )
-        if _stats is not None:
-            if complete:
-                _stats["capped_clusters"] = int(
-                    max_cluster is not None and stats.rows > max_cluster
-                )
-            else:
-                _stats["capped_clusters"] = _count_capped_clusters(
-                    probed, id_col, PROBE_COL, max_cluster
-                )
-        pairs = _cluster_gram_pairs(pe, 1.0 - eps, max_cluster).select(
-            "id_a", "id_b"
-        ).distinct()
-    else:
-        if complete:
-            # gram-BLAS candidate discovery at a 1e-9 margin + exact SQL
-            # cosine verify — see embedding_near_dup_bucketed's complete
-            # path for why; blocked across id-hash block pairs (r16) so
-            # the one complete block does not run in a single task
-            pe = df.select(
-                F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-            )
-            nb = _gram_block_count(spark)
-            if (
-                nb > 1
-                and stats.rows > 2048
-                and (max_cluster is None or stats.rows <= max_cluster)
-            ):
-                # blocked only past one kernel tile — see
-                # embedding_near_dup_bucketed's complete branch
-                cands = _blocked_gram_candidates(pe, (1.0 - eps) - 1e-9, nb)
-            else:
-                cands = _cluster_gram_pairs(
-                    pe.withColumn("_c", F.lit(0)),
-                    (1.0 - eps) - 1e-9,
-                    max_cluster,
-                ).select("id_a", "id_b")
-            if _stats is not None:
-                _stats["capped_clusters"] = int(
-                    max_cluster is not None and stats.rows > max_cluster
-                )
-        else:
-            exploded = probed.select(
-                F.col(id_col).alias("_id"), F.explode(PROBE_COL).alias("_c")
-            )
-            cands = _cluster_pair_expansion(exploded, max_cluster, _stats, _caches)
-        va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-        vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-        pairs = (
-            cands.join(va, "id_a")
-            .join(vb, "id_b")
-            .filter(
-                cosine_similarity(F.col("_va"), F.col("_vb")) >= F.lit(1.0 - eps)
-            )
-            .select("id_a", "id_b")
-        )
+    pairs = _embedding_pairs(
+        df, vec_col, id_col, None if complete else probed, rows, 1.0 - eps,
+        method, max_cluster, _stats, _caches,
+    ).select("id_a", "id_b")
     if diag:
         # diagnostics breakdown: pairs are edge-list-sized (sparse), so
         # the persist is bounded and connected_components' localCheckpoint
@@ -1223,7 +1099,7 @@ def semantic_dedup(
     from pq_vector_spark.parallel import local_plan_df
 
     cent = local_plan_df(
-        spark,
+        df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "_sd_c: int, _sd_cv: array<double>",
     )
@@ -1686,17 +1562,6 @@ def build_dedup_index(
     """
     if num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    spark = df.sparkSession
-    rows_per_band = num_hashes // bands
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        minhash_signature(text_col, n, num_hashes, seed).alias("_sig"),
-    )
-    banded = sig.select(
-        "id",
-        F.explode(_band_structs("_sig", bands, rows_per_band)).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
-    banded.write.mode("overwrite").parquet(index_path)
     meta = {
         "n": int(n),
         "num_hashes": int(num_hashes),
@@ -1704,7 +1569,8 @@ def build_dedup_index(
         "seed": int(seed),
         "id_col": id_col,
     }
-    _write_dedup_index_meta(spark, index_path, meta)
+    _write_band_rows(df, text_col, id_col, index_path, meta, "overwrite")
+    _write_dedup_index_meta(df.sparkSession, index_path, meta)
     return meta
 
 
@@ -1714,23 +1580,27 @@ def append_dedup_index(df: DataFrame, text_col: str, id_col: str, index_path: st
     appended as new part-files — existing index files are never touched,
     concurrent probes keep working. Hash parameters come from the index's
     own meta (caller-supplied ones could silently split the key space)."""
-    spark = df.sparkSession
-    meta = load_dedup_index_meta(spark, index_path)
-    rows_per_band = meta["num_hashes"] // meta["bands"]
+    meta = load_dedup_index_meta(df.sparkSession, index_path)
+    _write_band_rows(df, text_col, id_col, index_path, meta, "append")
+    return meta
+
+
+def _write_band_rows(
+    df: DataFrame, text_col: str, id_col: str, index_path: str, meta: dict, mode: str
+) -> None:
+    """The near-dup index's ``(id, band, key)`` rows of ``df`` under the
+    hash parameters in ``meta``, written to ``index_path`` in ``mode``."""
     sig = df.select(
         F.col(id_col).alias("id"),
         minhash_signature(
             text_col, meta["n"], meta["num_hashes"], meta["seed"]
         ).alias("_sig"),
     )
-    banded = sig.select(
+    rows_per_band = meta["num_hashes"] // meta["bands"]
+    sig.select(
         "id",
-        F.explode(
-            _band_structs("_sig", meta["bands"], rows_per_band)
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
-    banded.write.mode("append").parquet(index_path)
-    return meta
+        F.explode(_band_structs("_sig", meta["bands"], rows_per_band)).alias("bk"),
+    ).select("id", "bk.band", "bk.key").write.mode(mode).parquet(index_path)
 
 
 def incremental_dedup_near(
@@ -1745,7 +1615,6 @@ def incremental_dedup_near(
     corpus_id_col: Optional[str] = None,
     threshold: float = 0.5,
     max_bucket: Optional[int] = 10_000,
-    broadcast_delta: bool = True,
     _stats: Optional[dict] = None,
     _caches: Optional[list] = None,
 ) -> DataFrame:

@@ -233,3 +233,37 @@ def test_binary_topk_shortlist_skips_unscored_rows(spark):
     words = df.select("id", binary_quantize("v", 2).alias("bq_words"))
     fetched = binary_topk_with_fetch(words, df, "v", "id", q, 2, oversample=4)
     assert [r["id"] for r in fetched.collect()] == [101, 100]
+
+
+def test_binary_rerank_of_wide_query_stays_in_the_jvm(spark):
+    """A wide query's ``k·oversample`` shortlist is re-ranked by the JVM
+    fold (``rows_hint`` = the shortlist size), not the Arrow pandas
+    kernel, in both binary operators; with a shortlist that covers every
+    row, ids and distances equal brute force."""
+    from pq_vector_spark.functions.quantize import (
+        binary_quantize,
+        binary_topk,
+        binary_topk_with_fetch,
+    )
+    from pq_vector_spark.operators.topk import DISTANCE_COL, brute_force_topk
+
+    rng = np.random.default_rng(17)
+    rows = [(i, [float(x) for x in rng.normal(size=160)]) for i in range(20)]
+    emb = spark.createDataFrame(rows, "vid: bigint, emb: array<float>")
+    words = emb.select("vid", binary_quantize("emb", 160).alias("bq_words"))
+    q = [float(x) for x in rng.normal(size=160)]
+    want = [
+        (r["vid"], r[DISTANCE_COL])
+        for r in brute_force_topk(
+            emb, "emb", q, 5, tie_break="vid", keep_distance=True
+        ).collect()
+    ]
+    for out in (
+        binary_topk(emb, "emb", q, 5, oversample=4, tie_break="vid", keep_distance=True),
+        binary_topk_with_fetch(
+            words, emb, "emb", "vid", q, 5, oversample=4, keep_distance=True
+        ),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, plan
+        assert [(r["vid"], r[DISTANCE_COL]) for r in out.collect()] == want
